@@ -1,16 +1,12 @@
 # -*- coding: utf-8 -*-
-"""Explicit skew handling: salted two-phase aggregation and salted
-joins for hub keys.
+"""Explicit skew handling: salted two-phase aggregation for hub keys.
 
-AQE's skew-join split covers sort-merge joins it can observe, but two
-shapes still need manual salting at 10^12-row scale:
-
-1. groupBy on a power-law key (hub entities, power users): ALL rows of
-   the hot key land in one reduce task. Salting splits each key into
-   ``n_salts`` subkeys, partially aggregates, then combines — the
-   classic two-phase aggregate, kept here as a reusable helper.
-2. broadcast-impossible joins against a skewed fact side: replicate
-   the dimension row per salt.
+AQE's skew-join split covers sort-merge joins it can observe, but a
+groupBy on a power-law key (hub entities, power users) still lands ALL
+rows of the hot key in one reduce task at 10^12-row scale. Salting
+splits each key into ``n_salts`` subkeys, partially aggregates, then
+combines — the classic two-phase aggregate, kept here as a reusable
+helper.
 
 The KG pipeline itself avoids these (its heavy path is row-local by
 design), but the query surface over nodes/edges hits them the moment a
@@ -19,9 +15,7 @@ graph has celebrity entities — e.g. degree counts, neighbor listings.
 
 from __future__ import annotations
 
-from typing import Callable
-
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def with_salt(df: DataFrame, n_salts: int = 16,
@@ -58,26 +52,3 @@ def salted_agg(df: DataFrame, keys: list[str], aggs: list[tuple],
     return partial.groupBy(*keys).agg(*[
         ff(f"_p_{name}").alias(name) for _, _, ff, name in aggs
     ])
-
-
-def salted_count(df: DataFrame, keys: list[str], n_salts: int = 16,
-                 out: str = "n") -> DataFrame:
-    """Skew-safe ``groupBy(keys).count()``."""
-    return salted_agg(df, keys, [("*", lambda c: F.count(F.lit(1)),
-                                  F.sum, out)], n_salts)
-
-
-def salted_join(facts: DataFrame, dim: DataFrame, key: str,
-                n_salts: int = 16) -> DataFrame:
-    """Equi join where ``facts`` is skewed on ``key`` and ``dim`` is
-    too large to broadcast: facts get a random-ish deterministic salt,
-    dim rows are replicated once per salt, and the join key becomes
-    (key, salt) — the hot key's rows spread across ``n_salts`` tasks."""
-    f = facts.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in facts.columns]),
-                        F.lit(n_salts))
-    )
-    d = dim.withColumn("_salt", F.explode(
-        F.sequence(F.lit(0), F.lit(n_salts - 1))
-    ))
-    return f.join(d, on=[key, "_salt"]).drop("_salt")

@@ -476,11 +476,3 @@ def tokenize(text: str) -> Doc:
     if start < len(tokens):
         sents.append(Sentence(start, len(tokens)))
     return doc
-
-
-def sent_index(doc: Doc, token_i: int) -> int:
-    """Sentence id containing token_i (-1 if out of range)."""
-    for si, s in enumerate(doc.sents):
-        if s.start <= token_i < s.end:
-            return si
-    return -1

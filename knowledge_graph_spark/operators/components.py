@@ -36,6 +36,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+#: edge count up to which a same-as graph is "small enough for the
+#: driver": connected_components solves it with local union-find and
+#: canonical_mapping broadcasts its component tables
+_DRIVER_EDGES = 2_000_000
+
 
 def _star_round(edges: DataFrame) -> DataFrame:
     """One large-star + small-star round. edges(u, v) undirected."""
@@ -96,7 +101,7 @@ def _union_find_local(pairs: list[tuple[int, int]]) -> list[tuple[int, int]]:
 
 def connected_components(
     edges: DataFrame, max_iter: int = 20,
-    driver_threshold: int = 2_000_000,
+    driver_threshold: int = _DRIVER_EDGES,
 ) -> DataFrame:
     """edges(u, v) -> labels(node, component), any orderable id type
     (both endpoints must share it; the output follows it).
@@ -170,8 +175,7 @@ def connected_components(
     )
 
 
-def canonical_mapping(same_as: DataFrame,
-                      small_threshold: int = 2_000_000) -> DataFrame:
+def canonical_mapping(same_as: DataFrame) -> DataFrame:
     """same_as(name_a, name_b) -> (name, canonical_name).
 
     Hashes names to longs for the component search, then resolves the
@@ -186,9 +190,9 @@ def canonical_mapping(same_as: DataFrame,
     broadcast them explicitly."""
     h = lambda c: F.xxhash64(F.col(c))
     edges = same_as.select(h("name_a").alias("u"), h("name_b").alias("v"))
-    comp = connected_components(edges, driver_threshold=small_threshold)
+    comp = connected_components(edges)
     small = same_as.isStreaming is False and (
-        same_as.limit(small_threshold + 1).count() <= small_threshold
+        same_as.limit(_DRIVER_EDGES + 1).count() <= _DRIVER_EDGES
     )
     if small:
         comp = F.broadcast(comp)

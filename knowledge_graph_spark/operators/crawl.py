@@ -36,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 _HOST_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/:?#]*)"
-_PATH_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)"
 # RFC 9309 match target: the path AND the optional query (fragment
 # excluded) — rules like 'Disallow: /*?' target the query, and an
 # end anchor must see it ('/doc.pdf?dl=1' does NOT end at .pdf)
@@ -47,13 +46,6 @@ def url_host(url) -> "F.Column":
     """Lowercased host of an absolute url ('' when unparseable)."""
     u = F.col(url) if isinstance(url, str) else url
     return F.lower(F.regexp_extract(u, _HOST_RE, 1))
-
-
-def url_path(url) -> "F.Column":
-    """Path component of an absolute url, '/' when empty."""
-    u = F.col(url) if isinstance(url, str) else url
-    p = F.regexp_extract(u, _PATH_RE, 1)
-    return F.when(p == "", F.lit("/")).otherwise(p)
 
 
 def url_match_target(url) -> "F.Column":

@@ -395,7 +395,7 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     # P(candidate | s) curve
     if bands < 1 or num_hashes % bands != 0:
         raise ValueError(
-            f"num_hashes={num_hashes} must divide into bands={bands}")
+            f"bands={bands} must divide num_hashes={num_hashes}")
     rows = num_hashes // bands
     sig = minhash_signatures(docs, id_col, text_col, n, num_hashes)
     band_cols = [
@@ -554,9 +554,9 @@ def dedup_incremental(existing: DataFrame, incoming: DataFrame,
     delta against the index)."""
     from .sketches import h52
 
-    if num_hashes % bands != 0:
+    if bands < 1 or num_hashes % bands != 0:
         raise ValueError(
-            f"num_hashes={num_hashes} must divide into bands={bands}")
+            f"bands={bands} must divide num_hashes={num_hashes}")
     rows_per_band = num_hashes // bands
 
     def content_keys(df, alias):
@@ -767,25 +767,6 @@ def simhash_near_duplicates(docs: DataFrame, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 # embedding cosine near-dup
 # ---------------------------------------------------------------------------
-
-
-def dedup_embeddings(embeddings: DataFrame, id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     threshold: float = 0.99) -> DataFrame:
-    """Embedding near-dup survivor set: banded-LSH candidates -> exact
-    cosine >= threshold -> connected components -> keep min id per
-    component (the vector twin of :func:`dedup_minhash`)."""
-    from .components import connected_components
-
-    pairs = embedding_near_duplicates(embeddings, id_col, vec_col, threshold)
-    comp = connected_components(
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    )
-    losers = (
-        comp.filter(F.col("node") != F.col("component"))
-        .select(F.col("node").alias(id_col))
-    )
-    return embeddings.join(losers, on=id_col, how="left_anti")
 
 
 def lsh_rows_per_band(n_vectors: int, target_bucket: int = 4,

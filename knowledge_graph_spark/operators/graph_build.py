@@ -4,7 +4,7 @@
 Set-based reimplementation of the reference's per-row Neo4j writers
 (/root/reference/backend/kgapi/kg_writer.py):
 
-- ``sanitize_relation_type`` (kg_writer.py:11-16): ``-`` -> ``_``,
+- relation-type sanitization (kg_writer.py:11-16): ``-`` -> ``_``,
   must fullmatch ``[A-Za-z0-9_]+``, uppercased. Invalid types (all
   unmapped Chinese predicates) are NOT silently printed-and-dropped as
   in the reference (kg_writer.py:48-52) — they are counted and
@@ -30,22 +30,10 @@ which hash-partition on the merge key.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, functions as F
 
 # sanitized pattern per kg_writer.py:13
 _VALID_REL = r"^[A-Za-z0-9_]+$"
-
-
-def sanitize_relation_type(rel_type: str) -> str:
-    """Scalar reference-parity helper (kg_writer.py:11-16). Raises on
-    invalid types exactly like the reference; the Spark path uses the
-    columnar split below instead."""
-    rel_type = rel_type.replace("-", "_")
-    if re.fullmatch(r"[A-Za-z0-9_]+", rel_type):
-        return rel_type.upper()
-    raise ValueError(f"illegal relation type: {rel_type}")
 
 
 def _sanitized_type_col(type_col) -> "F.Column":

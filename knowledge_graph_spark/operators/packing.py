@@ -252,23 +252,3 @@ def span_corruption(docs: DataFrame, id_col: str = "doc_id",
             spans.alias("target_text"),
         )
     )
-
-
-def packing_report(packed: DataFrame, capacity: int) -> DataFrame:
-    """Aggregate audit of a packing: per shard, sequences produced,
-    docs packed, and the mean fill ratio (tokens per sequence over
-    capacity). One shuffle on (shard, seq_id) then a tiny rollup."""
-    per_seq = (
-        packed.groupBy("shard", "seq_id")
-        .agg(F.sum("n_tokens").alias("seq_tokens"),
-             F.count("*").alias("n_docs"))
-    )
-    return (
-        per_seq.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_seqs"),
-            F.sum("n_docs").alias("n_docs"),
-            F.round(F.avg(F.least(F.col("seq_tokens"), F.lit(capacity))
-                          / F.lit(float(capacity))), 6).alias("avg_fill"),
-        )
-    )

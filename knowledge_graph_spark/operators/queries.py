@@ -119,20 +119,20 @@ def list_user_graphs(nodes: DataFrame, user_id: str) -> DataFrame:
 def query_graphs_by_user(nodes: DataFrame, edges: DataFrame, user_id: str) -> DataFrame:
     """Q4 (kg_writer.py:135-172) in ONE pass: all of a user's graphs
     with node+link structs collected per graph_id — no per-graph loop."""
-    n = nodes.filter(F.col("user_id") == user_id)
-    graph_nodes = n.groupBy("graph_id").agg(
-        F.collect_list(F.struct("id", "name", "type")).alias("nodes")
+    # nodes AND links come from GRAPH membership, not the rows'
+    # user_id: nodes take the last writer's user_id and edges their
+    # FIRST writer's (ON CREATE), so after an update batch under a
+    # different user a user_id filter on either side drops part of
+    # the user's graphs, leaving links that dangle off missing nodes.
+    # The reference collects ALL nodes and links of each of the
+    # user's graphs (kg_writer.py:152-154).
+    graphs = (nodes.filter(F.col("user_id") == user_id)
+              .select("graph_id").distinct())
+    graph_nodes = (
+        nodes.join(graphs, "graph_id", "left_semi").groupBy("graph_id")
+        .agg(F.collect_list(F.struct("id", "name", "type")).alias("nodes"))
     )
-    # links come from GRAPH membership, not the edge rows' user_id:
-    # edges keep their FIRST writer's user_id (ON CREATE semantics)
-    # while nodes take the last writer's, so after an update batch
-    # under a different user the edge-side user filter would hide
-    # every pre-existing link of the user's graphs. The reference
-    # loops over the user's graphs and collects ALL their links
-    # (kg_writer.py:152-154) — membership is the graph's, applied
-    # here as a semi join against the user's graph set.
-    e = edges.join(n.select("graph_id").distinct(), "graph_id",
-                   "left_semi")
+    e = edges.join(graphs, "graph_id", "left_semi")
     graph_links_agg = e.groupBy("graph_id").agg(
         F.collect_list(
             F.struct(

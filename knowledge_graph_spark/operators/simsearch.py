@@ -207,26 +207,6 @@ def ivf_index(vectors: DataFrame, n_cells: int = 16, n_iter: int = 5,
     return _assign_cells(v, cent), cent
 
 
-def write_ivf_index(vectors: DataFrame, path: str, n_cells: int = 16,
-                    n_iter: int = 5, vec_col: str = "embedding",
-                    id_col: str = "vec_id") -> None:
-    """Persist the IVF index in the production layout: assignments
-    partitioned by cell_id (so a probed search reads only n_probe of
-    n_cells partitions — verified by plan audit), centroids alongside."""
-    assign, cent = ivf_index(vectors, n_cells, n_iter, vec_col, id_col)
-    assign.write.mode("overwrite").partitionBy("cell_id").parquet(
-        f"{path}/assignments"
-    )
-    cent.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def read_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    return (
-        spark.read.parquet(f"{path}/assignments"),
-        spark.read.parquet(f"{path}/centroids"),
-    )
-
-
 def ivf_topk(assignments: DataFrame, centroids: DataFrame,
              queries: DataFrame, k: int = 10, n_probe: int = 4,
              qid_col: str = "query_id", qvec_col: str = "query_vec",

@@ -286,16 +286,6 @@ def kmv_overlap(sketch_a: DataFrame, sketch_b: DataFrame,
     )
 
 
-def kmv_distinct_tokens(docs: DataFrame, text_col: str = "text",
-                        group_cols: list | None = None,
-                        k: int = 256) -> DataFrame:
-    """KMV over the lower-cased word stream of a document table —
-    the 'distinct vocabulary per source' census at sketch cost."""
-    group_cols = list(group_cols or [])
-    return kmv_distinct(_word_stream(docs, text_col, group_cols),
-                        "token", group_cols, k)
-
-
 def build_count_min(items: DataFrame, item_col: str, depth: int = 4,
                     width: int = 1024) -> DataFrame:
     """Count-Min sketch of an item stream -> (row, col, cnt), at most
@@ -324,17 +314,6 @@ def build_count_min(items: DataFrame, item_col: str, depth: int = 4,
                  F.col("cell.col").alias("col"))
         .agg(F.count("*").alias("cnt"))
     )
-
-
-def cms_merge(sketches: list) -> DataFrame:
-    """Merge Count-Min sketches built with the SAME depth/width into
-    the sketch of the concatenated streams: cell-wise counter sums.
-    Exact by linearity of counting — the distributed contract that
-    lets each shard/day keep its own depth x width grid."""
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    return merged.groupBy("row", "col").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(sketch: DataFrame, probes: DataFrame, item_col: str,
@@ -615,17 +594,6 @@ def build_dd_sketch(values: DataFrame, value_col: str,
         .select(*g, _dd_bucket(value_col, gamma).alias("bucket"))
         .groupBy(*g, "bucket").agg(F.count("*").alias("n"))
     )
-
-
-def dd_merge(sketches: list, group_cols: list | None = None) -> DataFrame:
-    """Merge DDSketches built with the SAME alpha: bucket-wise count
-    sum — the mergeability that lets per-shard/per-day sketches roll
-    up without touching raw data."""
-    g = list(group_cols or [])
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy(*g, "bucket").agg(F.sum("n").alias("n"))
 
 
 def dd_quantile(sketch: DataFrame, qs: list,

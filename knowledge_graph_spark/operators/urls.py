@@ -243,18 +243,6 @@ def cocitation_counts(links: DataFrame, doc_col: str = "doc_id",
             .agg(F.count("*").cast("long").alias("n_docs")))
 
 
-def host_citation_counts(links: DataFrame) -> DataFrame:
-    """(host, n_links, n_citing_docs) from an :func:`extract_links`
-    edge list — the inbound-authority census (which hosts the corpus
-    cites, and from how many distinct documents). One map-side-combined
-    aggregate; count_distinct(doc_id) is per-host bounded."""
-    return (
-        links.groupBy("host")
-        .agg(F.count("*").alias("n_links"),
-             F.countDistinct("doc_id").alias("n_citing_docs"))
-    )
-
-
 def reciprocal_links(edges: DataFrame, src_col: str = "src",
                      dst_col: str = "dst") -> DataFrame:
     """Host-graph reciprocity census: for every unordered host pair

@@ -101,7 +101,6 @@ def run_pipeline(
     partitions: int | None = None,
     link_entities: bool = True,
     batch_suffix: str | None = None,
-    dedupe_pages: bool = False,
     canonicalize: bool = False,
 ) -> dict:
     """One batch of the KG construction pipeline.
@@ -117,13 +116,10 @@ def run_pipeline(
     INPUT CONTRACT: ``pages`` must be url-unique — the extraction merge
     runs ``dedupe=False`` (its shuffle skipped because crawl snapshots
     are url-keyed by construction), so duplicate urls in one batch
-    would land duplicate rows in every downstream table. A batch that
-    may carry re-delivered urls (two file drops of the same crawl)
-    passes ``dedupe_pages=True``: one deterministic keep-newest window
-    (max ``warc_ts``, content-hash tiebreak — the same rule the
-    streaming path always applies, where triggers genuinely coalesce
-    drops). Off by default because it is a full shuffle of the RAW
-    page bytes, which a url-unique 100 TB crawl should not pay.
+    would land duplicate rows in every downstream table. A source
+    that may re-deliver urls (two file drops of the same crawl) goes
+    through the streaming path, whose keep-newest window (max
+    ``warc_ts`` per url) owns that rule.
 
     ``canonicalize=True`` rewrites ``url`` to its canonical spelling
     (``operators.urls.canonical_url``: case, www., default ports,
@@ -131,24 +127,15 @@ def run_pipeline(
     merge/bucket key, so a re-crawl that respells a url UPDATES the
     page instead of duplicating it. Row-local (zero shuffle). Off by
     default: it changes the key domain, so it must be on for a graph's
-    whole life, never toggled mid-graph; combine with
-    ``dedupe_pages=True`` when distinct raw spellings of one url can
-    co-occur in a single batch.
+    whole life, never toggled mid-graph. It does not dedupe: distinct
+    raw spellings of one url in a single batch break the INPUT
+    CONTRACT above.
     """
     graph_id = graph_id or default_graph_id()
     if canonicalize:
         from .operators.urls import canonical_url
 
         pages = pages.withColumn("url", canonical_url("url"))
-    if dedupe_pages:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("url").orderBy(
-            F.desc("warc_ts"), F.xxhash64("html"))
-        pages = (
-            pages.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn")
-        )
     sfx = f"@{batch_suffix}" if batch_suffix else ""
     counters: dict = {"graph_id": graph_id}
     stage_s: dict = {}

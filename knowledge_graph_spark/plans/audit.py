@@ -18,19 +18,6 @@ def explain_string(df: DataFrame, mode: str = "formatted") -> str:
     return df._jdf.queryExecution().explainString(jmode)
 
 
-def assert_plan(df: DataFrame, contains: list[str] | None = None,
-                absent: list[str] | None = None) -> str:
-    """Raise AssertionError unless the formatted plan contains every
-    ``contains`` fragment and none of the ``absent`` ones. Returns the
-    plan string for further inspection."""
-    p = explain_string(df)
-    for frag in contains or []:
-        assert frag in p, f"plan missing {frag!r}:\n{p}"
-    for frag in absent or []:
-        assert frag not in p, f"plan must not contain {frag!r}:\n{p}"
-    return p
-
-
 def audit(df: DataFrame, execute: bool = False) -> dict:
     """Summarize scale-relevant plan features.
 

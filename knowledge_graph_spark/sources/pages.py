@@ -205,47 +205,7 @@ def page_row(page: int, seed: int = 42) -> dict:
     }
 
 
-def generate_pandas(n: int, seed: int = 42):
-    """Small-scale generation for tests / golden fixtures."""
-    import pandas as pd
-
-    return pd.DataFrame([page_row(i, seed) for i in range(n)])
-
-
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-N_HOST_BUCKETS = 16
-
-
-def write_partitioned_pages(pages_df, path: str, buckets: int = N_HOST_BUCKETS,
-                            with_date: bool = True) -> None:
-    """Land a pages table in the production layout: hash-bucketed by
-    url host (+ crawl date) — the parquet stand-in for the Iceberg spec
-    ``PARTITIONED BY (bucket(N, url_host), days(warc_ts))``.
-
-    Bucketing by HOST (not url) keeps each host's pages co-located for
-    host-scoped operations while the hash spreads the hub host across
-    one bucket only — skew across buckets is bounded by the biggest
-    single host, and extraction re-balances on url anyway. Queries
-    filtering on host_bucket/crawl_date prune partitions at planning
-    time (verified in tests/test_plans.py)."""
-    from pyspark.sql import functions as F
-
-    host = F.parse_url("url", F.lit("HOST"))
-    out = pages_df.withColumn(
-        "host_bucket", F.pmod(F.xxhash64(host), F.lit(buckets))
-    )
-    cols = ["host_bucket"]
-    if with_date:
-        out = out.withColumn("crawl_date", F.to_date("warc_ts"))
-        cols.append("crawl_date")
-    out.write.mode("overwrite").partitionBy(*cols).parquet(path)
-
-
-def read_partitioned_pages(spark, path: str):
-    """Scan the partitioned layout; partition columns become regular
-    columns usable in pruning predicates."""
-    return spark.read.parquet(path)
 
 
 def generate_spark(spark, n: int, seed: int = 42, partitions: int | None = None,

@@ -163,8 +163,11 @@ def test_ivf_persisted_index_prunes_partitions(spark, emb, tmp_path):
     cells (plan-level partition filter), and return the same results
     as the in-memory index."""
     path = str(tmp_path / "ivf")
-    S.write_ivf_index(emb, path, n_cells=8, n_iter=2)
-    assign, cent = S.read_ivf_index(spark, path)
+    a0, c0 = S.ivf_index(emb, n_cells=8, n_iter=2)
+    a0.write.partitionBy("cell_id").parquet(f"{path}/assignments")
+    c0.write.parquet(f"{path}/centroids")
+    assign = spark.read.parquet(f"{path}/assignments")
+    cent = spark.read.parquet(f"{path}/centroids")
     queries = emb.limit(2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -500,20 +503,6 @@ def test_ivf_training_input_is_bounded(spark, emb):
     cent = S.train_ivf_centroids(emb, n_cells=8, n_iter=2, sample_cap=cap)
     rows = cent.collect()
     assert len(rows) == 8 and all(len(r["centroid"]) > 0 for r in rows)
-
-
-def test_dedup_embeddings_survivors(spark, emb):
-    """Vector survivor set: planted clones die, their originals and all
-    other vectors survive."""
-    clones = emb.limit(4).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
-    )
-    allv = emb.unionByName(clones)
-    n = emb.count()
-    survivors = D.dedup_embeddings(allv, threshold=0.999)
-    ids = {r["vec_id"] for r in survivors.select("vec_id").collect()}
-    assert len(ids) == n            # every clone removed
-    assert all(i < 1_000_000 for i in ids)  # min-id keeps the original
 
 
 def test_repetition_stats_detects_boilerplate(spark):
@@ -1120,10 +1109,8 @@ def test_extract_links_and_host_counts(spark):
     """Links found case-insensitively, trailing sentence punctuation
     stripped, canonicalized (scheme/host case, www., default port,
     tracking params), occurrence-deduped per doc; linkless docs emit
-    nothing; host census counts links and distinct citing docs."""
-    from knowledge_graph_spark.operators.urls import (
-        extract_links, host_citation_counts,
-    )
+    nothing; every link carries its canonical host."""
+    from knowledge_graph_spark.operators.urls import extract_links
 
     docs = spark.createDataFrame([
         (1, "see HTTP://WWW.Ref.org:80/a?utm_source=x&b=1, and "
@@ -1141,8 +1128,6 @@ def test_extract_links_and_host_counts(spark):
         (3, "https://b.com/x", "b.com"),
         (3, "https://c.net/y", "c.net"),
     ]
-    hosts = sorted(tuple(r) for r in host_citation_counts(links).collect())
-    assert hosts == [("b.com", 2, 2), ("c.net", 1, 1), ("ref.org", 1, 1)]
     raw = extract_links(docs, canonicalize=False).collect()
     assert any(r["url"].startswith("HTTP://WWW.") for r in raw)
 
@@ -1753,8 +1738,10 @@ def test_dedup_incremental_verdicts(spark):
     assert out[104]["verdict"] == "new"          # NULL text -> new
     assert len(out) == 4                         # every incoming row out
     import pytest as _pt
-    with _pt.raises(ValueError, match="bands"):
-        D.dedup_incremental(existing, incoming, num_hashes=8, bands=3)
+    for bands in (3, 0):
+        with _pt.raises(ValueError, match="bands"):
+            D.dedup_incremental(existing, incoming, num_hashes=8,
+                                bands=bands)
 
 
 def test_c4_line_filter_rules_and_verdicts(spark):

@@ -8,9 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from knowledge_graph_spark.functions.skew import (
-    salted_agg, salted_count, salted_join,
-)
+from knowledge_graph_spark.functions.skew import salted_agg
 from knowledge_graph_spark.operators.events import (
     session_stats, sessionize, windowed_counts,
 )
@@ -52,14 +50,6 @@ def test_sessionize_covers_all_events(spark, events):
     assert stats.count() == events.select("user_id").distinct().count()
 
 
-def test_salted_count_matches_plain(spark, events):
-    plain = {r["event_type"]: r["n"] for r in
-             events.groupBy("event_type").agg(F.count("*").alias("n")).collect()}
-    salted = {r["event_type"]: r["n"] for r in
-              salted_count(events, ["event_type"], n_salts=8).collect()}
-    assert salted == plain
-
-
 def test_salted_agg_sum_max(spark, events):
     plain = events.groupBy("event_type").agg(
         F.sum("value").alias("s"), F.max("value").alias("m"))
@@ -69,15 +59,6 @@ def test_salted_agg_sum_max(spark, events):
     p = {r["event_type"]: (round(r["s"], 6), r["m"]) for r in plain.collect()}
     s = {r["event_type"]: (round(r["s"], 6), r["m"]) for r in salted.collect()}
     assert p == s
-
-
-def test_salted_join_matches_plain(spark, events):
-    dim = events.select("event_type").distinct().withColumn(
-        "weight", F.length("event_type").cast("double"))
-    plain = events.join(dim, "event_type").agg(F.sum("weight")).first()[0]
-    salted = salted_join(events, dim, "event_type", n_salts=8).agg(
-        F.sum("weight")).first()[0]
-    assert salted == plain
 
 
 def test_funnel_strict_order_and_stall(spark):

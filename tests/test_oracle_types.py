@@ -43,14 +43,19 @@ def _safe(t: str) -> bool:
 
 
 @pytest.fixture(scope="module")
-def oracles():
+def entry():
     spec = importlib.util.spec_from_file_location(
         "spark_entry_for_types",
         os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod.oracle_sql()
+    return mod
+
+
+@pytest.fixture(scope="module")
+def oracles(entry):
+    return entry.oracle_sql()
 
 
 @pytest.fixture(scope="module")
@@ -121,3 +126,26 @@ def test_value_hash_probe_raises_on_list_cells():
     co = _load_check_oracles()
     with pytest.raises(TypeError):
         co.value_hash([(1, ["x", "y"]), (2, ["z"])], ["id", "terms"])
+
+
+#: the paper core the driver must check first (ROADMAP item 3)
+_PAPER_CORE = [
+    "kg_triples", "kg_entities", "kg_graph_links", "kg_user_graphs",
+    "kg_all_graphs", "kg_keyword_search", "kg_detach_delete",
+    "kg_clear_user", "kg_canonical_entities", "kg_dropped_relations",
+]
+
+
+def test_registry_rows_paper_core_first(entry):
+    """The driver checks a prefix of the registry, so the paper core
+    leads it; every row names one query with one builder and one
+    oracle, and both dict views follow the table's order."""
+    rows = entry._registry()
+    names = [name for name, _, _ in rows]
+    assert names[:len(_PAPER_CORE)] == _PAPER_CORE
+    assert len(set(names)) == len(names)
+    for name, builder, sql in rows:
+        assert callable(builder), name
+        assert isinstance(sql, str) and sql.strip(), name
+    assert list(entry.queries()) == names
+    assert list(entry.oracle_sql()) == names

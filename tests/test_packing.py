@@ -1,13 +1,12 @@
 # -*- coding: utf-8 -*-
 """Sequence-packing operator: greedy semantics, determinism under
-repartitioning, oversized docs, and the fill-ratio report."""
+repartitioning, and oversized docs."""
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from knowledge_graph_spark.operators.packing import (pack_sequences,
-                                                     packing_report)
+from knowledge_graph_spark.operators.packing import pack_sequences
 
 
 @pytest.fixture(scope="module")
@@ -54,17 +53,6 @@ def test_packing_deterministic_under_repartition(spark):
     assert a == b
     # shard is a pure function of id
     assert all(t[1] == t[0] % 4 for t in a)
-
-
-def test_packing_report_fill(spark):
-    rows = [(0, "a b c"), (1, "d e f"), (2, "g h")]  # packs to [3+3] [2]
-    packed = pack_sequences(_docs(spark, rows), capacity=6, n_shards=1)
-    rep = packing_report(packed, capacity=6).collect()
-    assert len(rep) == 1
-    r = rep[0]
-    assert r["n_seqs"] == 2 and r["n_docs"] == 3
-    # fills: 6/6 and 2/6 -> mean 0.666667
-    assert abs(r["avg_fill"] - (1.0 + 2 / 6) / 2) < 1e-6
 
 
 def test_packing_projects_before_shuffle(spark):

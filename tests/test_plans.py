@@ -126,26 +126,6 @@ def test_extraction_is_arrow_vectorized(spark):
     assert "BatchEvalPython" not in p
 
 
-def test_partition_pruning_on_host_bucket(spark, tmp_path):
-    """The production pages layout (bucket(url_host) + crawl date) must
-    prune partitions for host-scoped queries."""
-    from knowledge_graph_spark.sources.pages import (
-        generate_spark, read_partitioned_pages, write_partitioned_pages,
-    )
-
-    path = str(tmp_path / "pages_part")
-    write_partitioned_pages(generate_spark(spark, 80, partitions=4), path)
-    df = read_partitioned_pages(spark, path).filter(
-        (F.col("host_bucket") == 3) & (F.col("crawl_date") == "2024-01-01")
-    )
-    p = plan(df)
-    pf = p.split("PartitionFilters", 1)
-    assert len(pf) == 2 and "host_bucket" in pf[1][:300] and "crawl_date" in pf[1][:300]
-    # partition predicates are pruning filters, not data filters
-    if "PushedFilters" in p:
-        assert "host_bucket" not in p.split("PushedFilters", 1)[1][:120]
-
-
 def test_lake_per_partition_lineage(spark, tmp_path):
     from knowledge_graph_spark.sources.lake import LakeTable
 

@@ -15,9 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from knowledge_graph_spark.operators.sketches import (
-    HASH_SPACE, build_count_min, cms_estimate, cms_merge,
-    cms_token_frequencies, h52, kmv_distinct, kmv_distinct_tokens,
-    kmv_estimate, kmv_merge, kmv_sketch)
+    HASH_SPACE, build_count_min, cms_estimate, cms_token_frequencies, h52,
+    kmv_distinct, kmv_estimate, kmv_merge, kmv_sketch)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -32,6 +31,12 @@ def spark():
 
 def _py_h52(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:13], 16)
+
+
+def _source_tokens(docs):
+    """(source, token): the lower-cased alphabetic word stream."""
+    tok = F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("token")
+    return docs.select("source", tok).filter(F.col("token") != "")
 
 
 def test_h52_matches_python_twin(spark):
@@ -50,8 +55,8 @@ def test_h52_matches_python_twin(spark):
 def test_kmv_small_range_is_exact(spark):
     # fewer distinct items than k -> the sketch is the exact answer
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    got = {r["source"]: r for r in
-           kmv_distinct_tokens(docs, group_cols=["source"], k=64).collect()}
+    got = {r["source"]: r for r in kmv_distinct(
+        _source_tokens(docs), "token", ["source"], k=64).collect()}
     exact = {r["source"]: r["d"] for r in docs.select(
         "source",
         F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("t"))
@@ -99,18 +104,6 @@ def test_kmv_merge_equals_union_sketch(spark):
         [kmv_sketch(a, "v", k=128), kmv_sketch(b, "v", k=128)],
         k=128), k=128)
     direct = kmv_distinct(a.unionByName(b), "v", k=128)
-    assert sorted(map(tuple, merged.collect())) == \
-        sorted(map(tuple, direct.collect()))
-
-
-def test_cms_merge_equals_union_sketch(spark):
-    a = spark.createDataFrame(
-        [(t,) for t in ["x"] * 5 + ["y"] * 2], ["token"])
-    b = spark.createDataFrame(
-        [(t,) for t in ["x"] * 3 + ["z"] * 4], ["token"])
-    merged = cms_merge([build_count_min(a, "token", 4, 32),
-                        build_count_min(b, "token", 4, 32)])
-    direct = build_count_min(a.unionByName(b), "token", 4, 32)
     assert sorted(map(tuple, merged.collect())) == \
         sorted(map(tuple, direct.collect()))
 
@@ -163,7 +156,7 @@ def test_sketch_plans_stay_jvm_side(spark):
     # no Python evaluation anywhere in either sketch's plan
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     for df in (
-        kmv_distinct_tokens(docs, group_cols=["source"], k=64),
+        kmv_distinct(_source_tokens(docs), "token", ["source"], k=64),
         cms_token_frequencies(docs, docs.filter(F.col("doc_id") < 2)),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -365,23 +358,6 @@ def test_dd_sketch_quantile_relative_error_guarantee(spark):
             truth = svals[rank - 1]
             assert abs(r["estimate"] - truth) <= alpha * truth * 1.0001, \
                 (alpha, r["q"], r["estimate"], truth)
-
-
-def test_dd_sketch_merge_equals_direct(spark):
-    """Merging per-shard sketches must give bucket-for-bucket the same
-    sketch (and therefore the same quantiles) as sketching the union —
-    the mergeability contract that makes per-day rollups exact."""
-    from knowledge_graph_spark.operators.sketches import (
-        build_dd_sketch, dd_merge,
-    )
-
-    a = spark.createDataFrame([(i % 500 + 1,) for i in range(2000)], "x long")
-    b = spark.createDataFrame([(i % 77 + 3,) for i in range(900)], "x long")
-    merged = dd_merge([build_dd_sketch(a, "x"), build_dd_sketch(b, "x")])
-    direct = build_dd_sketch(a.unionByName(b), "x")
-    got = {(r["bucket"], r["n"]) for r in merged.collect()}
-    want = {(r["bucket"], r["n"]) for r in direct.collect()}
-    assert got == want
 
 
 def test_dd_sketch_rejects_bad_alpha_and_nonpositive(spark):

@@ -205,118 +205,6 @@ def test_stream_compaction_preserves_state(spark, tmp_path):
     assert any(e["op"] == "compact" for e in wh_c.triples.history())
 
 
-def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): streaming
-    session windows must equal the batch sessionization — sessions
-    close on intra-stream gaps AND on event-time timeout when the
-    watermark passes last_ts + gap."""
-    import datetime as dt
-
-    from knowledge_graph_spark.streaming.stateful import sessionize_stream
-
-    drop_dir = str(tmp_path / "sev")
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-
-    def ev(i, user, hour, minute):
-        return (i, dt.datetime(2024, 1, 1, hour, minute), user, "click", 1.0)
-
-    # b0: user 7 has two sessions (gap 80 min between them closes the
-    # first INSIDE the batch); user 8 one single-event session
-    spark.createDataFrame(
-        [ev(1, 7, 10, 0), ev(2, 7, 10, 10), ev(3, 7, 11, 30),
-         ev(4, 7, 11, 35), ev(5, 8, 10, 5)], schema,
-    ).coalesce(1).write.parquet(f"{drop_dir}/b0.parquet")
-    # b1/b2: sentinel events push the watermark (1 h delay) past every
-    # open session's timeout so the timers fire deterministically
-    spark.createDataFrame([ev(100, 9, 20, 0)], schema) \
-        .coalesce(1).write.parquet(f"{drop_dir}/b1.parquet")
-    spark.createDataFrame([ev(101, 9, 23, 0)], schema) \
-        .coalesce(1).write.parquet(f"{drop_dir}/b2.parquet")
-
-    emitted: list = []
-
-    def sink(batch_df, _bid):
-        emitted.extend(batch_df.collect())
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(drop_dir + "/*")
-    )
-    q = (
-        sessionize_stream(stream, gap_minutes=30, watermark="1 hour")
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "sck"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r["user_id"], r["session_start"].strftime("%H:%M"),
-         r["session_end"].strftime("%H:%M"), r["n_events"], r["total_value"])
-        for r in emitted if r["user_id"] in (7, 8)
-    }
-    assert got == {
-        (7, "10:00", "10:10", 2, 2.0),   # closed by intra-stream gap
-        (7, "11:30", "11:35", 2, 2.0),   # closed by event-time timeout
-        (8, "10:05", "10:05", 1, 1.0),   # closed by event-time timeout
-    }
-
-
-def test_stateful_sessionize_out_of_order_across_batches(spark, tmp_path):
-    """A late-but-within-watermark event delivered in a LATER micro-batch
-    must merge into the open session exactly as batch order would — the
-    state walk may not regress session_end and split the session."""
-    import datetime as dt
-
-    from knowledge_graph_spark.streaming.stateful import sessionize_stream
-
-    drop_dir = str(tmp_path / "sev")
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-
-    def ev(i, user, hour, minute):
-        return (i, dt.datetime(2024, 1, 1, hour, minute), user, "click", 1.0)
-
-    # b0: open session [10:00, 10:20]; sentinel keeps watermark at 09:30
-    spark.createDataFrame(
-        [ev(1, 7, 10, 0), ev(2, 7, 10, 20), ev(3, 9, 10, 30)], schema,
-    ).coalesce(1).write.parquet(f"{drop_dir}/b0.parquet")
-    # b1: LATE 10:05 (inside the open span, within watermark) + 10:40.
-    # Global sort gives gaps 5/15/20 min -> ONE session 10:00-10:40; a
-    # last-regressing walk would close (10:00,10:05) and split at 10:40.
-    spark.createDataFrame(
-        [ev(4, 7, 10, 5), ev(5, 7, 10, 40)], schema,
-    ).coalesce(1).write.parquet(f"{drop_dir}/b1.parquet")
-    # b2: sentinel pushes the watermark past every open timeout
-    spark.createDataFrame([ev(100, 9, 23, 0)], schema) \
-        .coalesce(1).write.parquet(f"{drop_dir}/b2.parquet")
-
-    emitted: list = []
-
-    def sink(batch_df, _bid):
-        emitted.extend(batch_df.collect())
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(drop_dir + "/*")
-    )
-    q = (
-        sessionize_stream(stream, gap_minutes=30, watermark="1 hour")
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "sck"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r["user_id"], r["session_start"].strftime("%H:%M"),
-         r["session_end"].strftime("%H:%M"), r["n_events"], r["total_value"])
-        for r in emitted if r["user_id"] == 7
-    }
-    assert got == {(7, "10:00", "10:40", 4, 4.0)}
-
-
 def test_streaming_dedup_within_watermark(spark, tmp_path):
     """A duplicate content hash arriving in a later micro-batch within
     the watermark horizon is dropped; distinct content passes. State is

@@ -246,7 +246,11 @@ def test_rowlocal_null_entities_quarantined_not_lost(spark):
 def test_user_graph_links_survive_cross_user_update(spark, tmp_path):
     """Edges keep the FIRST writer's user_id (ON CREATE); Q4 must
     list a graph's links by graph membership, not the edge rows'
-    user_id (r5 review finding: links vanished for every user)."""
+    user_id (r5 review finding: links vanished for every user). The
+    update re-crawls a slice of the pages with shorter text, so the
+    nodes it no longer produces keep the first writer's user_id: Q4
+    must still return them, or its links point at nodes missing from
+    the payload."""
     from knowledge_graph_spark.operators.queries import (
         query_graphs_by_user)
 
@@ -254,11 +258,19 @@ def test_user_graph_links_survive_cross_user_update(spark, tmp_path):
     pages = generate_spark(spark, 40, partitions=2)
     run_pipeline(spark, pages, wh, graph_id="g1", user_id="userB",
                  link_entities=False)
-    run_pipeline(spark, pages, wh, graph_id="g1", user_id="userA",
+    # the first 10 of the same 40 pages (generation is per-index),
+    # each now one two-entity sentence
+    recrawl = generate_spark(spark, 10, partitions=1).withColumn(
+        "text", F.lit("九州网络公司支持华星科技公司。"))
+    run_pipeline(spark, recrawl, wh, graph_id="g1", user_id="userA",
                  link_entities=False, batch_suffix="r2")
     nodes, edges = wh.nodes.read(spark), wh.edges.read(spark)
     row = query_graphs_by_user(nodes, edges, "userA").collect()[0]
     assert len(row["links"]) > 0
+    ids = {n["id"] for n in row["nodes"]}
+    dangling = [(l["source"], l["target"]) for l in row["links"]
+                if l["source"] not in ids or l["target"] not in ids]
+    assert not dangling
 
 
 def test_detach_keeps_null_graph_edges_of_surviving_nodes(spark):

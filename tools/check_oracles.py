@@ -123,15 +123,6 @@ def main():
                   f"{nonscalar} (driver comparator cannot sort these "
                   f"— flatten via array_join/to_json)")
             continue
-        if name not in oracles:
-            report[name] = {"status": "rows_only",
-                            "spark_rows": len(srows),
-                            "sec": round(time.time() - t0, 2)}
-            print(f"ok    {name}: rows-only, {len(srows)} rows "
-                  f"({time.time() - t0:.1f}s)")
-            if len(srows) == 0:
-                print(f"      WARNING: zero rows")
-            continue
         try:
             rel = con.sql(oracles[name])
             ocols = [d[0] for d in rel.description]
@@ -201,8 +192,7 @@ def main():
     if json_out:
         import json
 
-        n_ok = sum(1 for v in report.values()
-                   if v["status"] in ("match", "rows_only"))
+        n_ok = sum(1 for v in report.values() if v["status"] == "match")
         payload = {"sf_dir": sf_dir,
                    "n_queries": len(report), "n_ok": n_ok,
                    "n_failures": len(failures),

@@ -232,8 +232,8 @@ def main():
         "pushed filters reach the scan / broadcast vs sort-merge join",
         "counts / shuffle (Exchange) count / whole-stage codegen present /",
         "row-Python present (must be never) / Arrow-Python present (only",
-        "the extraction kernel and the applyInPandas operators —",
-        "pack_sequences, stateful sessions — may say yes;",
+        "the extraction kernel and the applyInPandas operator",
+        "pack_sequences — may say yes;",
         "host_profile's yes is its driver query SYNTHESIZING the pages",
         "input via mapInPandas — bench scaffolding, not the census",
         "operator, which is pure codegen).",
