@@ -9,9 +9,10 @@ the scale-correct replacement: the two-phase star algorithm of
 Kiveris et al., "Connected Components in MapReduce and Beyond"
 (SOCC'14), expressed as DataFrame aggregations.
 
-Execution is size-adaptive (see :func:`connected_components`): small
-edge sets solve with driver-side union-find, large ones run the
-distributed star rounds below. Algorithm (node labels are 64-bit longs):
+Execution is size-adaptive: an edge set of at most ``_DRIVER_EDGES``
+edges solves with driver-side union-find (:func:`canonical_mapping`
+collects its same-as pairs in one action and resolves names on the
+driver); larger ones run the distributed star rounds below. Algorithm (node labels are 64-bit longs):
 - large-star: for each edge (u,v) with v > u, point v at the minimum
   neighbour of u (including u). Implemented as groupBy(u).min + join.
 - small-star: symmetric for v <= u.
@@ -27,18 +28,19 @@ session.py) — salting by hand is unnecessary here because the build
 side (one min row per key) broadcasts under AQE once partial
 aggregation shrinks it.
 
-Input/output contract uses long ids; callers map strings to longs with
+:func:`connected_components` takes any orderable id type. The
+distributed path of :func:`canonical_mapping` maps names to longs with
 ``xxhash64`` (collision probability negligible below ~2^32 entities and
-acceptable for canonicalization).
+acceptable for canonicalization); its driver path works on the names.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-#: edge count up to which a same-as graph is "small enough for the
-#: driver": connected_components solves it with local union-find and
-#: canonical_mapping broadcasts its component tables
+#: edge count up to which a graph is "small enough for the driver":
+#: connected_components and canonical_mapping solve it with local
+#: union-find
 _DRIVER_EDGES = 2_000_000
 
 
@@ -178,25 +180,44 @@ def connected_components(
 def canonical_mapping(same_as: DataFrame) -> DataFrame:
     """same_as(name_a, name_b) -> (name, canonical_name).
 
-    Hashes names to longs for the component search, then resolves the
-    component's canonical representative back to a name: the member
-    with the minimum (length, name) — i.e. the shortest, then
-    lexicographically first, surface form.
+    Every name in a component maps to the component's canonical
+    representative: the member with the minimum (length, name) — i.e.
+    the shortest, then lexicographically first, surface form.
 
-    The component/representative tables are RDD-backed (no Catalyst
-    stats), so without hints Spark plans sort-merge joins with a full
-    shuffle-partition fan-out — hundreds of micro-tasks for kilobyte
-    tables. When the same_as set is small we know comp/rep are too:
-    broadcast them explicitly."""
+    Up to ``_DRIVER_EDGES`` pairs this is one action: the pairs are
+    collected, union-find runs on the names themselves, and the
+    representative is picked on the driver. Python's ``len`` and
+    ``str`` ordering agree with Spark's ``length`` (code points) and
+    string ordering (UTF-8 bytes, which sort as code points), so it is
+    the same rule as the distributed path. The mapping comes back as a
+    single-slice frame: a default-parallelism ``createDataFrame`` would
+    spread a few thousand rows over every core and start a Python
+    worker per slice.
+
+    Above ``_DRIVER_EDGES`` names are hashed to longs for the
+    distributed component search, and each component's representative
+    is resolved back to a name by aggregation. Both paths return a
+    materialized frame."""
+    spark = same_as.sparkSession
+    # a NULL name names nothing: it would only weld every name paired
+    # with it into one component
+    same_as = same_as.select("name_a", "name_b").dropna()
+    rows = same_as.limit(_DRIVER_EDGES + 1).collect()
+    if len(rows) <= _DRIVER_EDGES:
+        labels = _union_find_local([(a, b) for a, b in rows])
+        rep: dict = {}
+        for name, root in labels:
+            rep[root] = min(rep.get(root, name), name, key=lambda n: (len(n), n))
+        return spark.createDataFrame(
+            spark.sparkContext.parallelize(
+                [(name, rep[root]) for name, root in labels], 1),
+            "name string, canonical_name string")
+
     h = lambda c: F.xxhash64(F.col(c))
     edges = same_as.select(h("name_a").alias("u"), h("name_b").alias("v"))
-    comp = connected_components(edges)
-    small = same_as.isStreaming is False and (
-        same_as.limit(_DRIVER_EDGES + 1).count() <= _DRIVER_EDGES
-    )
-    if small:
-        comp = F.broadcast(comp)
-
+    # the threshold is read here, not bound at def time, so the size
+    # switch stays one module constant for both functions
+    comp = connected_components(edges, driver_threshold=_DRIVER_EDGES)
     members = (
         same_as.select(F.col("name_a").alias("name"))
         .unionByName(same_as.select(F.col("name_b").alias("name")))
@@ -208,6 +229,7 @@ def canonical_mapping(same_as: DataFrame) -> DataFrame:
     rep = members.groupBy("component").agg(
         F.min(F.struct(F.length("name").alias("l"), F.col("name"))).alias("r")
     ).select("component", F.col("r.name").alias("canonical_name"))
-    if small:
-        rep = F.broadcast(rep)
-    return members.join(rep, "component").select("name", "canonical_name")
+    # materialized, like the driver path's frame: a caller that counts
+    # the mapping and then joins it must not rerun the component search
+    return members.join(rep, "component").select(
+        "name", "canonical_name").localCheckpoint()

@@ -155,7 +155,10 @@ def run_pipeline(
         # snapshot write.
         upd = with_url_bucket(extracted)
         is_update = warehouse.extracted.exists()
-        touched = None
+        # the first batch can write every bucket: declaring them sizes
+        # the write's fan-out by the key count (one writer per bucket,
+        # see LakeTable._persist) instead of WRITE_SALT per bucket
+        touched = [str(b) for b in range(N_URL_BUCKETS)]
         if is_update:
             upd = upd.persist()
             # url_bucket is a pure function of the merge key, so the
@@ -272,12 +275,10 @@ def run_pipeline(
         t0 = time.time()
         # read back THIS graph's partition (authoritative on resume);
         # a linkless graph writes no partition dir — fall back to the
-        # in-hand (empty) frame. persist: the mapping DAG (CC +
-        # representative joins) feeds the broadcast build, the merge,
-        # and the counter — one compute
+        # in-hand (empty) frame
         g_links = warehouse.same_as.read_partitions(spark, [graph_id])
         mapping = canonical_mapping(
-            g_links if g_links is not None else links).persist()
+            g_links if g_links is not None else links)
         counters["linked_names"] = mapping.count()
         canon = g_nodes.join(F.broadcast(mapping), on="name", how="left").withColumn(
             "canonical_id", F.coalesce("canonical_name", "name")
@@ -289,7 +290,6 @@ def run_pipeline(
             canon, partition_by=["graph_id"],
             batch_id=f"{graph_id}{sfx}/canonical", touched_keys=[graph_id],
         )
-        mapping.unpersist()
         stage_s["canonicalize"] = round(time.time() - t0, 2)
 
     # snapshot hygiene: expire superseded snapshots, keep one rollback

@@ -12,6 +12,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of host memory (``MemTotal`` in /proc/meminfo), capped at
+    16g: a fixed 16g asks a small host for more than it has. 16g where
+    /proc/meminfo is absent (non-Linux hosts)."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    return f"{min(16 * 1024, kib // 2048)}m"
+
+
 def get_spark(
     app: str = "knowledge_graph_spark",
     master: str | None = None,
@@ -42,7 +55,8 @@ def get_spark(
         # framing dominates below ~16k rows. ~50 MB of page html per
         # batch per worker — fits standard 8 GB executors
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

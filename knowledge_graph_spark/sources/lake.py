@@ -388,10 +388,8 @@ class LakeTable:
                     total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
         return total
 
-    # parallel writers per partition key: pure key-partitioning would
-    # serialize each partition's write through ONE task (a whole-graph
-    # refresh then writes single-threaded); the salt keeps files-per-key
-    # bounded while letting big partitions write in parallel
+    # files per partition key when the write does not know how many
+    # keys it touches (see _persist)
     WRITE_SALT = 4
 
     # replay-dedupe horizon for vacuum-folded batch ids (see vacuum())
@@ -404,35 +402,30 @@ class LakeTable:
         rows) — the first two None when unpartitioned.
 
         ``n_keys``: number of partition keys this write touches, when the
-        caller knows it. The write salt scales so key-count × salt covers
-        the cluster: a whole-graph refresh (ONE key) would otherwise
-        funnel the write through WRITE_SALT tasks while the rest of the
-        cluster idles; with many keys the salt stays at the minimum so
-        files-per-key remain bounded."""
+        caller knows it.
+
+        One fan-out rule: the write runs through ``par`` tasks (the
+        larger of shuffle partitions and default parallelism), and each
+        key spreads over ``ceil(par / n_keys)`` writers — WRITE_SALT
+        when n_keys is unknown. Rows are repartitioned on (key, salt),
+        so each (key, salt) pair lands wholly in one task and a key
+        writes at most salt files. Keys × salt covers every core, so a
+        one-key whole-graph refresh still writes through ``par`` tasks.
+        The count is explicit (REPARTITION_BY_NUM): AQE re-coalesces a
+        column-only repartition toward its advisory size, which funnels
+        a small write through 1-2 tasks."""
         path = os.path.join(self.dir, snap_name)
         F = _f()
         if not partition_by:
             df.write.mode("overwrite").parquet(path)
             return None, None, self._footer_rows(path)
         spark = df.sparkSession
-        par = spark.sparkContext.defaultParallelism
-        salt_n = self.WRITE_SALT
-        if n_keys:
-            salt_n = min(max(par, self.WRITE_SALT),
-                         max(self.WRITE_SALT, -(-par // n_keys)))
-        # co-locate each partition key in few tasks before the
-        # partitionBy write: otherwise every task fans out one file per
-        # key it sees (k tasks x p keys files) — a small-file storm.
-        # The partition COUNT is explicit (REPARTITION_BY_NUM): a
-        # column-only repartition is re-coalesced by AQE toward its
-        # advisory size, which funnels a small-table write through 1-2
-        # tasks while the cluster idles. Each (key, salt) combo still
-        # lands wholly in one task, so files-per-key stays <= salt_n.
-        n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                      (n_keys or 1) * salt_n)
+        par = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
+                  spark.sparkContext.defaultParallelism)
+        salt_n = -(-par // n_keys) if n_keys else self.WRITE_SALT
         salt = (F.rand(0) * salt_n).cast("int")
         df.withColumn(_PK, self._pk_col(partition_by)).repartition(
-            n_parts, F_col(_PK), salt
+            par, F_col(_PK), salt
         ).write.mode("overwrite").partitionBy(_PK).parquet(path)
         # per-partition lineage counters (north-star requirement) from
         # the written footers — zero Spark jobs

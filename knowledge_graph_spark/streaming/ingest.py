@@ -192,6 +192,29 @@ def windowed_event_counts(
     )
 
 
+def _dedup_key(pages: DataFrame, content_col: str,
+               fallback_col: str | None):
+    """streaming_dedup's state key: a pure function of the row, so a
+    replayed micro-batch derives the same keys."""
+    content = F.col(content_col).cast("binary")
+    if fallback_col and fallback_col in pages.columns:
+        content = F.coalesce(content, F.col(fallback_col).cast("binary"))
+    ch = F.sha2(content, 256)
+    # content-LESS rows (both text and html NULL — failed fetches,
+    # redirect records) hash to NULL, and dropDuplicates groups NULL
+    # keys together: every such row in a horizon would collapse to
+    # one. Key them by url instead (distinct urls survive; a same-url
+    # resend still dedupes), or, when no url column exists, by a hash
+    # of the whole row (distinct rows survive; a replayed micro-batch
+    # re-derives the same key, which a per-row uuid() would not).
+    if "url" in pages.columns:
+        fallback_key = F.concat(F.lit("nullcontent:"), F.col("url"))
+    else:
+        row = F.to_json(F.struct(*[pages[c] for c in pages.columns]))
+        fallback_key = F.concat(F.lit("nullrow:"), F.sha2(row, 256))
+    return F.coalesce(ch, fallback_key)
+
+
 def streaming_dedup(
     pages_stream: DataFrame, watermark: str = "1 hour",
     ts_col: str = "warc_ts", content_col: str = "text",
@@ -218,22 +241,8 @@ def streaming_dedup(
         raise ValueError(
             "input already has a _content_hash column; streaming_dedup "
             "would silently overwrite and drop it")
-    content = F.col(content_col).cast("binary")
-    if fallback_col and fallback_col in pages_stream.columns:
-        content = F.coalesce(content, F.col(fallback_col).cast("binary"))
-    ch = F.sha2(content, 256)
-    # content-LESS rows (both text and html NULL — failed fetches,
-    # redirect records) hash to NULL, and dropDuplicates groups NULL
-    # keys together: every such row in a horizon would collapse to
-    # one. Key them by url instead (distinct urls survive; a same-url
-    # resend still dedupes), or by a per-row uuid when no url column
-    # exists (no dedup is safer than collapsing distinct pages).
-    if "url" in pages_stream.columns:
-        fallback_key = F.concat(F.lit("nullcontent:"), F.col("url"))
-    else:
-        fallback_key = F.expr("uuid()")
     hashed = pages_stream.withColumn(
-        "_content_hash", F.coalesce(ch, fallback_key))
+        "_content_hash", _dedup_key(pages_stream, content_col, fallback_col))
     return (
         hashed.withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["_content_hash"])

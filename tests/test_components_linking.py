@@ -93,6 +93,37 @@ def test_canonical_mapping_shortest_representative(spark):
     assert len(m) == 3
 
 
+def test_canonical_mapping_driver_path_matches_distributed(spark, monkeypatch):
+    """The one-collect driver path and the hashed distributed path pick
+    the same representative — min (code-point length, name) — on a
+    chain, a 50-leaf hub, and equal-length ties (one across the BMP
+    boundary, where UTF-16 order would disagree with Spark's UTF-8
+    order). The driver mapping is a single slice: a default-parallelism
+    frame starts a Python worker per core for a few rows."""
+    from knowledge_graph_spark.operators import components
+
+    chain = [("蓝海集团有限公司", "蓝海集团公司"), ("蓝海集团公司", "蓝海集团"),
+             ("蓝海集团", "蓝海")]
+    hub = [("星河科技", f"星河科技分部{i:02d}") for i in range(50)]
+    tie = [("华东银行", "华西银行"), ("华西银行", "华东银行股份"),
+           ("a\ufffd", "a\U00020000"), ("solo", "solo")]
+    same = spark.createDataFrame(chain + hub + tie,
+                                 "name_a string, name_b string")
+
+    drv_df = canonical_mapping(same)
+    assert drv_df.rdd.getNumPartitions() == 1
+    drv = {r["name"]: r["canonical_name"] for r in drv_df.collect()}
+    monkeypatch.setattr(components, "_DRIVER_EDGES", 0)
+    dist = {r["name"]: r["canonical_name"]
+            for r in canonical_mapping(same).collect()}
+    assert drv == dist
+    assert drv["蓝海集团有限公司"] == "蓝海"
+    assert {drv[f"星河科技分部{i:02d}"] for i in range(50)} == {"星河科技"}
+    assert drv["华东银行股份"] == min("华东银行", "华西银行")
+    assert drv["a\U00020000"] == "a\ufffd"
+    assert drv["solo"] == "solo" and len(drv) == 4 + 51 + 6
+
+
 def test_pagerank_star_and_dangling(spark):
     """Star graph: center receives all mass; ranks sum to 1 even with
     dangling nodes (the center has no out-edges)."""

@@ -745,6 +745,32 @@ def test_get_spark_parses_cluster_masters():
         assert got == ok, master
 
 
+def test_default_driver_mem_fits_host(monkeypatch):
+    """Unset SPARK_GRAFT_DRIVER_MEM sizes the driver heap at half of
+    MemTotal, capped at 16g — a fixed 16g asked a 15 GiB host for more
+    than it has."""
+    import io
+
+    from knowledge_graph_spark import session
+
+    def meminfo(kib):
+        return lambda *a, **k: io.StringIO(
+            f"MemFree:  1000 kB\nMemTotal:  {kib} kB\n")
+
+    monkeypatch.setattr(session, "open", meminfo(15 * 1024 * 1024),
+                        raising=False)
+    assert session._default_driver_mem() == "7680m"
+    monkeypatch.setattr(session, "open", meminfo(128 * 1024 * 1024),
+                        raising=False)
+    assert session._default_driver_mem() == "16384m"
+
+    def missing(*a, **k):
+        raise FileNotFoundError("/proc/meminfo")
+
+    monkeypatch.setattr(session, "open", missing, raising=False)
+    assert session._default_driver_mem() == "16g"
+
+
 def test_html2text_attribute_and_entity_edge_cases():
     from knowledge_graph_spark.kernel.html2text import html_to_text
 

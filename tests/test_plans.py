@@ -138,6 +138,36 @@ def test_lake_per_partition_lineage(spark, tmp_path):
     assert entry["partition_rows"] == {"0": 10, "1": 10, "2": 10}
 
 
+def test_lake_write_fan_out_follows_parallelism(spark, tmp_path):
+    """One fan-out rule for partitioned writes: keys x salt covers the
+    cluster's parallelism (4 here), no more. Sixteen declared keys get
+    one writer each, so one file per key; one declared key still
+    spreads over every core, at most 4 files."""
+    from knowledge_graph_spark.sources.lake import LakeTable
+
+    def files_per_key(t):
+        snap = os.path.join(t.dir, t.current_entry()["snapshot"])
+        return [sum(f.endswith(".parquet") for f in os.listdir(
+                    os.path.join(snap, d)))
+                for d in os.listdir(snap) if d.startswith("_pk=")]
+
+    many = LakeTable(str(tmp_path), "many")
+    df = spark.range(0, 3200, numPartitions=4).select(
+        (F.col("id") % 16).cast("string").alias("bucket"), "id")
+    many.overwrite_partitions(df, partition_by=["bucket"],
+                              touched_keys=[str(b) for b in range(16)])
+    n = files_per_key(many)
+    assert len(n) == 16 and max(n) == 1, n
+
+    one = LakeTable(str(tmp_path), "one")
+    df = spark.range(0, 3200, numPartitions=4).select(
+        F.lit("g").alias("graph_id"), "id")
+    one.overwrite_partitions(df, partition_by=["graph_id"],
+                             touched_keys=["g"])
+    n = files_per_key(one)
+    assert len(n) == 1 and 1 <= n[0] <= 4, n
+
+
 def test_triples_resolution_is_join_free(spark):
     """id->name resolution must be the row-local map lookup, not a join
     (two full-table shuffles saved at corpus scale)."""
