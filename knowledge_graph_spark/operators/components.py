@@ -36,6 +36,7 @@ acceptable for canonicalization); its driver path works on the names.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 #: edge count up to which a graph is "small enough for the driver":
@@ -189,10 +190,14 @@ def canonical_mapping(same_as: DataFrame) -> DataFrame:
     representative is picked on the driver. Python's ``len`` and
     ``str`` ordering agree with Spark's ``length`` (code points) and
     string ordering (UTF-8 bytes, which sort as code points), so it is
-    the same rule as the distributed path. The mapping comes back as a
-    single-slice frame: a default-parallelism ``createDataFrame`` would
-    spread a few thousand rows over every core and start a Python
-    worker per slice.
+    the same rule as the distributed path. The mapping is handed to
+    Spark as an Arrow table, whose batches the JVM decodes itself:
+    evaluating it (the caller's count, the broadcast in a join) starts
+    no Python worker, unlike a ``parallelize`` of pickled rows. (A
+    pandas frame would take that pickled path when it is empty or
+    when Arrow conversion is switched off.) ``coalesce(1)`` keeps it a
+    single slice, so a few thousand rows are not spread over every
+    core.
 
     Above ``_DRIVER_EDGES`` names are hashed to longs for the
     distributed component search, and each component's representative
@@ -208,10 +213,13 @@ def canonical_mapping(same_as: DataFrame) -> DataFrame:
         rep: dict = {}
         for name, root in labels:
             rep[root] = min(rep.get(root, name), name, key=lambda n: (len(n), n))
+        table = pa.table({
+            "name": pa.array([name for name, _ in labels], pa.string()),
+            "canonical_name": pa.array(
+                [rep[root] for _, root in labels], pa.string()),
+        })
         return spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [(name, rep[root]) for name, root in labels], 1),
-            "name string, canonical_name string")
+            table, "name string, canonical_name string").coalesce(1)
 
     h = lambda c: F.xxhash64(F.col(c))
     edges = same_as.select(h("name_a").alias("u"), h("name_b").alias("v"))

@@ -30,6 +30,9 @@ which hash-partition on the merge key.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
+
 from pyspark.sql import DataFrame, functions as F
 
 # sanitized pattern per kg_writer.py:13
@@ -208,6 +211,7 @@ def materialize_graph(
     user_id: str = "user_001",
     batch_id: str | None = None,
     mor_seq: int | None = None,
+    after_nodes: Callable[[], None] | None = None,
 ) -> dict:
     """End-to-end: nested extraction result -> MERGE INTO node/edge
     LakeTables, with counters recorded in the snapshot lineage.
@@ -221,6 +225,11 @@ def materialize_graph(
     touches every bucket). Policies mirror the COW semantics exactly:
     nodes resolve last-writer-wins (MERGE..SET), edges first-writer-wins
     (ON CREATE SET).
+
+    ``after_nodes`` runs on the nodes-commit thread as soon as that
+    commit lands, beside the edge and dropped commits and the counter
+    aggregate (``run_pipeline`` links there: linking reads only the
+    node partition). Its exception surfaces from this call.
 
     One Spark job per table, ZERO joins: nodes/edges/dropped all derive
     from the nested extraction result with row-local operations
@@ -252,11 +261,14 @@ def materialize_graph(
     # definition writes exactly one graph partition).
     # The three commits touch three DISTINCT LakeTables (separate
     # directories, separate manifests, no shared mutable state) and
-    # each derives from the same cached extraction result, so they
-    # run on concurrent driver threads — Spark schedules the jobs
-    # side by side and the write stages fill the cores one commit
-    # alone can't (measured: materialize stage ~5.3 s -> ~3.5 s on
-    # the 100k-page bench)
+    # only read ``extracted``, so they and the counter aggregate run
+    # on concurrent driver threads — Spark schedules the jobs side by
+    # side and the write stages fill the cores one commit alone can't
+    # (measured: materialize stage ~5.3 s -> ~3.5 s on the 100k-page
+    # bench). Each task re-reads ``extracted`` unless the caller
+    # persisted it: streaming does (its input is a fresh micro-batch
+    # extraction); run_pipeline passes the committed lake table
+    # uncached, so each task scans its parquet files
     def _commit_nodes():
         if mor_seq is not None:
             return nodes_table.merge_on_read(
@@ -300,21 +312,24 @@ def materialize_graph(
             dropped, partition_by=["graph_id"],
             touched_keys=[graph_id], batch_id=f"{bid}/dropped")
 
-    from concurrent.futures import ThreadPoolExecutor
+    def _nodes_then():
+        r = _commit_nodes()
+        if after_nodes is not None:
+            after_nodes()
+        return r
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f1 = pool.submit(_commit_nodes)
-        f2 = pool.submit(_commit_edges)
-        f3 = pool.submit(_commit_dropped)
-        r1, r2, r3 = f1.result(), f2.result(), f3.result()
     # per-batch deltas under the original keys (what THIS batch
     # produced: entity mentions, valid relations pre-dedupe, quarantined
     # relations; an idempotent resume reports 0) — ONE aggregate job
     # over the nested extraction result, not three table counts. The
     # *_total keys carry the snapshot sizes from the manifest for free.
-    if r1.get("skipped", False):
-        n_nodes = n_valid = n_dropped = 0
-    else:
+    # It runs beside the commits, so "resume" is decided before any of
+    # them lands, by the test the nodes commit applies itself
+    resumed = f"{bid}/nodes" in nodes_table.applied_batches()
+
+    def _stats():
+        if resumed:
+            return 0, 0, 0
         # an edge needs BOTH a valid type and resolvable endpoints —
         # the same two tests build_edges_rowlocal applies — or the
         # counters diverge from the tables on foreign extraction
@@ -338,9 +353,17 @@ def materialize_graph(
             F.sum(F.greatest(F.size("relations"), F.lit(0)))
             .alias("n_rel"),
         ).first()
-        n_nodes = stats["n_nodes"] or 0
         n_valid = stats["n_valid"] or 0
-        n_dropped = (stats["n_rel"] or 0) - n_valid
+        return (stats["n_nodes"] or 0, n_valid,
+                (stats["n_rel"] or 0) - n_valid)
+
+    # the nodes commit starts first: the chain hangs off it, and
+    # Spark's FIFO scheduler serves the job it receives first
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futures = [pool.submit(f) for f in
+                   (_nodes_then, _commit_edges, _commit_dropped, _stats)]
+    r1, r2, r3, (n_nodes, n_valid, n_dropped) = [f.result() for f in futures]
+
     def _total(table, r):
         # an idempotent resume skips the commit; the snapshot size
         # then comes from the manifest's current entry instead of

@@ -24,6 +24,7 @@ lineage + counters" metrics surface.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -130,6 +131,18 @@ def run_pipeline(
     whole life, never toggled mid-graph. It does not dedupe: distinct
     raw spellings of one url in a single batch break the INPUT
     CONTRACT above.
+
+    SCHEDULE: after extraction commits, the rest runs as the dependency
+    graph it is. The critical chain is the nodes commit -> linking
+    (``same_as``) -> the canonical overwrite of the node partition; it
+    starts as soon as the nodes land. Side work reads only the
+    committed extraction and runs beside the chain on driver threads:
+    the triples overwrite, the edges and dropped commits, the counter
+    aggregate, and (multi-graph warehouses only) the scoped page
+    count. All of it is joined before ``vacuum``; an exception in any
+    task surfaces from this call. ``stage_seconds`` holds each stage's
+    own elapsed time (``materialize`` excludes the chain it carries),
+    so the entries overlap and may sum to more than the wall time.
     """
     graph_id = graph_id or default_graph_id()
     if canonicalize:
@@ -208,47 +221,17 @@ def run_pipeline(
             scope = scope.unionByName(prior.select("url")).distinct()
         extracted = extracted.join(scope, on="url", how="left_semi")
 
-    # Graph totals: on the single-graph bulk path the table IS the graph,
-    # so the count comes free from the manifest (stamped at commit). In a
-    # multi-graph warehouse the shared table over-counts — the graph's
-    # page count is the scoped frame's row count (urls are unique after
-    # the merge), worth one cheap scan on that rare path.
-    if foreign:
-        counters["pages"] = extracted.count()
-    else:
-        counters["pages"] = (warehouse.extracted.current_entry() or {}).get("rows", 0)
     stage_s["extract"] = round(time.time() - t0, 2)
 
-    # ---- stage 2: triples (per-graph refresh, partition-scoped) ------
-    t0 = time.time()
-    tbid = f"{graph_id}{sfx}/triples"
-    if tbid not in warehouse.triples.applied_batches():
-        trip = with_url_bucket(
-            triples_table(extracted).withColumn("graph_id", F.lit(graph_id))
-        )
-        # dynamic partition overwrite: the stage regenerates this
-        # graph's FULL triple set, so its partitions are replaced
-        # wholesale — no read of the old rows, no anti-join; other
-        # graphs' files are never touched. Touched keys are declared
-        # (this graph x every bucket) so no discovery job runs either.
-        warehouse.triples.overwrite_partitions(
-            trip, partition_by=["graph_id", "url_bucket"], batch_id=tbid,
-            touched_keys=[f"{graph_id}|{b}" for b in range(N_URL_BUCKETS)],
-        )
-    counters["triples"] = _graph_rows(warehouse.triples, graph_id)
-    stage_s["triples"] = round(time.time() - t0, 2)
+    # ---- stages 2-4: the linking chain, with side work beside it -----
+    # Only one chain depends on another: linking reads the graph's
+    # committed node partition and nothing else. It runs as the nodes
+    # commit's continuation, while this thread runs the triples stage
+    # and the edges/dropped commits run on materialize_graph's pool.
+    linked: dict = {}
+    chain_s: dict = {}
 
-    # ---- stage 3: graph materialization (MERGE) ----------------------
-    t0 = time.time()
-    mat = graph_build.materialize_graph(
-        extracted, warehouse.nodes, warehouse.edges, warehouse.dropped,
-        graph_id=graph_id, user_id=user_id, batch_id=f"{graph_id}{sfx}",
-    )
-    counters.update(mat)
-    stage_s["materialize"] = round(time.time() - t0, 2)
-
-    # ---- stage 4: entity linking + canonicalization ------------------
-    if link_entities:
+    def _link_and_canonicalize():
         t0 = time.time()
         # the manifest is the partition index: read ONLY this graph's
         # node partition, never the whole table. None = the graph has
@@ -256,10 +239,8 @@ def run_pipeline(
         # unpartitioned manifest): nothing to link — skip the stage
         g_nodes = warehouse.nodes.read_partitions(spark, [graph_id])
         if g_nodes is None:
-            counters["linked_names"] = 0
-            counters["stage_seconds"] = stage_s
-            warehouse.vacuum(keep_last=2)
-            return counters
+            linked["linked_names"] = 0
+            return
         names = g_nodes.select("name")
         # graph-scoped partition: the same_as table is shared by every
         # graph in the warehouse, so a plain overwrite() would let this
@@ -271,7 +252,7 @@ def run_pipeline(
             links, partition_by=["graph_id"],
             batch_id=f"{graph_id}{sfx}/same_as", touched_keys=[graph_id],
         )
-        stage_s["linking"] = round(time.time() - t0, 2)
+        chain_s["linking"] = time.time() - t0
         t0 = time.time()
         # read back THIS graph's partition (authoritative on resume);
         # a linkless graph writes no partition dir — fall back to the
@@ -279,7 +260,7 @@ def run_pipeline(
         g_links = warehouse.same_as.read_partitions(spark, [graph_id])
         mapping = canonical_mapping(
             g_links if g_links is not None else links)
-        counters["linked_names"] = mapping.count()
+        linked["linked_names"] = mapping.count()
         canon = g_nodes.join(F.broadcast(mapping), on="name", how="left").withColumn(
             "canonical_id", F.coalesce("canonical_name", "name")
         ).drop("canonical_name")
@@ -290,7 +271,66 @@ def run_pipeline(
             canon, partition_by=["graph_id"],
             batch_id=f"{graph_id}{sfx}/canonical", touched_keys=[graph_id],
         )
-        stage_s["canonicalize"] = round(time.time() - t0, 2)
+        chain_s["canonicalize"] = time.time() - t0
+
+    def _materialize():
+        t0 = time.time()
+        mat = graph_build.materialize_graph(
+            extracted, warehouse.nodes, warehouse.edges, warehouse.dropped,
+            graph_id=graph_id, user_id=user_id, batch_id=f"{graph_id}{sfx}",
+            after_nodes=_link_and_canonicalize if link_entities else None,
+        )
+        return mat, time.time() - t0
+
+    # materialize_graph (with the chain it carries) starts before the
+    # triples stage below; Spark's FIFO scheduler serves whichever job
+    # reaches it first. Holding the triples stage until the nodes had
+    # landed was measured and was not faster: it then competes with
+    # linking instead. The with-block joins the side work before
+    # vacuum reclaims anything it reads, and every task's exception
+    # surfaces here.
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        mat_future = pool.submit(_materialize)
+
+        # ---- triples (per-graph refresh, partition-scoped) ----------
+        t0 = time.time()
+        tbid = f"{graph_id}{sfx}/triples"
+        if tbid not in warehouse.triples.applied_batches():
+            trip = with_url_bucket(
+                triples_table(extracted).withColumn("graph_id", F.lit(graph_id))
+            )
+            # dynamic partition overwrite: the stage regenerates this
+            # graph's FULL triple set, so its partitions are replaced
+            # wholesale — no read of the old rows, no anti-join; other
+            # graphs' files are never touched. Touched keys are
+            # declared (this graph x every bucket) so no discovery job
+            # runs either.
+            warehouse.triples.overwrite_partitions(
+                trip, partition_by=["graph_id", "url_bucket"], batch_id=tbid,
+                touched_keys=[f"{graph_id}|{b}" for b in range(N_URL_BUCKETS)],
+            )
+        counters["triples"] = _graph_rows(warehouse.triples, graph_id)
+        stage_s["triples"] = round(time.time() - t0, 2)
+
+        # Graph totals: on the single-graph bulk path the table IS the
+        # graph, so the count comes free from the manifest (stamped at
+        # commit). In a multi-graph warehouse the shared table
+        # over-counts — the graph's page count is the scoped frame's
+        # row count (urls are unique after the merge), worth one cheap
+        # scan on that rare path.
+        if foreign:
+            counters["pages"] = extracted.count()
+        else:
+            counters["pages"] = (
+                warehouse.extracted.current_entry() or {}).get("rows", 0)
+
+        mat, mat_s = mat_future.result()
+    counters.update(mat)
+    counters.update(linked)
+    # each stage's own elapsed time: the chain runs inside
+    # materialize_graph, so materialize reports its time minus the chain's
+    stage_s["materialize"] = round(mat_s - sum(chain_s.values()), 2)
+    stage_s.update((st, round(v, 2)) for st, v in chain_s.items())
 
     # snapshot hygiene: expire superseded snapshots, keep one rollback
     # target per table (a month-long ingest would otherwise retain one

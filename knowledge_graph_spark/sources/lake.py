@@ -38,9 +38,10 @@ shaped so that swap is mechanical. The reference's per-row Neo4j MERGE
 round-trips (/root/reference/backend/kgapi/kg_writer.py:20-32,36-68)
 are replaced by set-based joins — intentional divergence, SURVEY.md §7.4.
 
-Concurrency note: single-writer (the driver loop). Readers always see
-a complete snapshot because the manifest pointer flips atomically after
-the snapshot directory is fully written.
+Concurrency note: single writer per table (the pipeline commits
+different tables from concurrent driver threads, never one table from
+two). Readers always see a complete snapshot because the manifest
+pointer flips atomically after the snapshot directory is fully written.
 """
 
 from __future__ import annotations
@@ -397,12 +398,14 @@ class LakeTable:
 
     def _persist(self, df: DataFrame, snap_name: str,
                  partition_by: Optional[list[str]],
-                 n_keys: Optional[int] = None):
+                 n_keys: Optional[int] = None,
+                 batch_id: Optional[str] = None):
         """Write df under snap_name. Returns (partition_dirs, partition_rows,
         rows) — the first two None when unpartitioned.
 
         ``n_keys``: number of partition keys this write touches, when the
-        caller knows it.
+        caller knows it. ``batch_id`` becomes the write's Spark job
+        description, so the event log says which commit a job served.
 
         One fan-out rule: the write runs through ``par`` tasks (the
         larger of shuffle partitions and default parallelism), and each
@@ -416,17 +419,28 @@ class LakeTable:
         a small write through 1-2 tasks."""
         path = os.path.join(self.dir, snap_name)
         F = _f()
-        if not partition_by:
-            df.write.mode("overwrite").parquet(path)
-            return None, None, self._footer_rows(path)
         spark = df.sparkSession
-        par = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                  spark.sparkContext.defaultParallelism)
-        salt_n = -(-par // n_keys) if n_keys else self.WRITE_SALT
-        salt = (F.rand(0) * salt_n).cast("int")
-        df.withColumn(_PK, self._pk_col(partition_by)).repartition(
-            par, F_col(_PK), salt
-        ).write.mode("overwrite").partitionBy(_PK).parquet(path)
+        writer = df.write
+        if partition_by:
+            par = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
+                      spark.sparkContext.defaultParallelism)
+            salt_n = -(-par // n_keys) if n_keys else self.WRITE_SALT
+            salt = (F.rand(0) * salt_n).cast("int")
+            writer = df.withColumn(_PK, self._pk_col(partition_by)).repartition(
+                par, F_col(_PK), salt
+            ).write.partitionBy(_PK)
+        # the description is a thread-local property, so commits on
+        # concurrent threads tag their own jobs; the caller's comes back
+        sc = spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        if batch_id:
+            sc.setJobDescription(batch_id)
+        try:
+            writer.mode("overwrite").parquet(path)
+        finally:
+            sc.setJobDescription(prev)
+        if not partition_by:
+            return None, None, self._footer_rows(path)
         # per-partition lineage counters (north-star requirement) from
         # the written footers — zero Spark jobs
         dirs, counts = {}, {}
@@ -502,7 +516,8 @@ class LakeTable:
         mor: Optional[dict] = None, n_keys: Optional[int] = None,
     ) -> dict:
         snap_name = f"snap-{self._next_snap_id():06d}"
-        dirs, counts, rows = self._persist(df, snap_name, partition_by, n_keys)
+        dirs, counts, rows = self._persist(df, snap_name, partition_by, n_keys,
+                                           batch_id)
         return self._commit_entry(op, batch_id, counters, snap_name, rows,
                                   dirs, counts, partition_by=partition_by,
                                   mor=mor, schema=df.schema.json())
@@ -604,7 +619,8 @@ class LakeTable:
             # one tiny job against a batch-sized frame
             new_dirs, new_counts, new_rows = self._persist(
                 df, snap_name, partition_by,
-                n_keys=len(self._keys_of(df, partition_by)) or None)
+                n_keys=len(self._keys_of(df, partition_by)) or None,
+                batch_id=batch_id)
             dirs = {k: list(v) for k, v in (old_dirs or {}).items()}
             counts = dict((entry or {}).get("partition_rows") or {})
             for k, paths in new_dirs.items():
@@ -758,7 +774,8 @@ class LakeTable:
 
         snap_name = f"snap-{self._next_snap_id():06d}"
         new_dirs, new_counts, _ = self._persist(result, snap_name, partition_by,
-                                                n_keys=len(touched))
+                                                n_keys=len(touched),
+                                                batch_id=batch_id)
         dirs = {k: v for k, v in old_dirs.items() if k not in touched}
         rows_by = {k: old_rows.get(k, 0) for k in dirs}
         carried = len(dirs)
@@ -809,7 +826,8 @@ class LakeTable:
         old_rows: dict = entry.get("partition_rows") or {}
         snap_name = f"snap-{self._next_snap_id():06d}"
         new_dirs, new_counts, _ = self._persist(df, snap_name, partition_by,
-                                                n_keys=len(touched))
+                                                n_keys=len(touched),
+                                                batch_id=batch_id)
         dirs = {k: v for k, v in old_dirs.items() if k not in touched}
         rows_by = {k: old_rows.get(k, 0) for k in dirs}
         carried = len(dirs)

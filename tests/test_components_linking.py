@@ -98,8 +98,9 @@ def test_canonical_mapping_driver_path_matches_distributed(spark, monkeypatch):
     the same representative — min (code-point length, name) — on a
     chain, a 50-leaf hub, and equal-length ties (one across the BMP
     boundary, where UTF-16 order would disagree with Spark's UTF-8
-    order). The driver mapping is a single slice: a default-parallelism
-    frame starts a Python worker per core for a few rows."""
+    order). The driver mapping is a single slice built in the JVM from
+    Arrow batches, empty input included: no Python worker evaluates
+    it."""
     from knowledge_graph_spark.operators import components
 
     chain = [("蓝海集团有限公司", "蓝海集团公司"), ("蓝海集团公司", "蓝海集团"),
@@ -112,6 +113,13 @@ def test_canonical_mapping_driver_path_matches_distributed(spark, monkeypatch):
 
     drv_df = canonical_mapping(same)
     assert drv_df.rdd.getNumPartitions() == 1
+    assert "PythonRDD" not in drv_df._jdf.rdd().toDebugString()
+    empty = canonical_mapping(
+        spark.createDataFrame([], "name_a string, name_b string"))
+    assert empty.schema.simpleString() == \
+        "struct<name:string,canonical_name:string>"
+    assert empty.count() == 0 and empty.rdd.getNumPartitions() == 1
+    assert "PythonRDD" not in empty._jdf.rdd().toDebugString()
     drv = {r["name"]: r["canonical_name"] for r in drv_df.collect()}
     monkeypatch.setattr(components, "_DRIVER_EDGES", 0)
     dist = {r["name"]: r["canonical_name"]

@@ -726,3 +726,31 @@ def test_merge_into_validates_policy_before_first_commit(spark, tbl):
     with pytest.raises(ValueError):
         tbl.merge_into(df, on=["k"], when_matched="replace")
     assert not tbl.exists()      # nothing committed under the typo
+
+
+def test_commit_writes_carry_batch_id_as_job_description(spark, tbl,
+                                                          monkeypatch):
+    """Each commit's write job is described by its batch id (so the
+    event log says which commit a job served, even when commits run
+    side by side), and the caller's own description comes back after."""
+    from pyspark.sql import DataFrameWriter
+
+    sc = spark.sparkContext
+    seen = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, *a, **kw):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    sc.setJobDescription("caller")
+    try:
+        tbl.overwrite(df, batch_id="b/first")
+        tbl.merge_into(df, on=["k"], batch_id="b/merge", partition_by=None)
+        tbl.overwrite(df)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert seen == ["b/first", "b/merge", "caller"]

@@ -215,6 +215,40 @@ def test_run_pipeline_job_budget(spark, tmp_path):
     assert jobs <= 36, jobs
 
 
+def test_run_pipeline_overlaps_linking_with_side_commits(spark, tmp_path,
+                                                         monkeypatch):
+    """Linking needs only the committed nodes, so the same_as commit
+    runs while the triples and edges commits are still open: the three
+    meet at one barrier. A pipeline that linked only after every other
+    commit had landed would break the barrier (timeout) instead."""
+    import threading
+
+    from knowledge_graph_spark.sources.lake import LakeTable
+
+    barrier = threading.Barrier(3, timeout=60)
+    met = []
+
+    def meet_on(name, stages):
+        orig = getattr(LakeTable, name)
+
+        def wrapped(self, *args, **kwargs):
+            stage = (kwargs.get("batch_id") or "").rsplit("/", 1)[-1]
+            if stage in stages:
+                barrier.wait()
+                met.append(stage)
+            return orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(LakeTable, name, wrapped)
+
+    meet_on("overwrite_partitions", {"triples", "same_as"})
+    meet_on("merge_into", {"edges"})
+    pages = generate_spark(spark, 200, partitions=4)
+    wh = KGWarehouse(str(tmp_path))
+    c = run_pipeline(spark, pages, wh, graph_id="g1", link_entities=True)
+    assert sorted(met) == ["edges", "same_as", "triples"]
+    assert c["linked_names"] > 0 and c["triples"] > 0 and c["edges"] > 0
+
+
 def test_node_degrees(spark):
     """node_degrees: per-node out/in/total over one graph, names
     joined, other graphs excluded."""

@@ -125,6 +125,50 @@ def test_crash_after_extraction_resumes_without_reparse(spark, tmp_path, monkeyp
     assert snap(wh) == snap(wh_ref)
 
 
+def test_side_commit_failure_surfaces_and_resumes(spark, tmp_path, monkeypatch):
+    """The edges commit runs on a pool thread while the linking chain
+    proceeds. Its failure must surface from run_pipeline, and a re-run
+    must finish the graph without re-parsing: the same tables and
+    snapshot totals as an uninterrupted run."""
+    import knowledge_graph_spark.pipeline as P
+    from knowledge_graph_spark.sources.lake import LakeTable
+
+    pages = generate_spark(spark, 30, partitions=2)
+    wh_ref = KGWarehouse(str(tmp_path / "ref"))
+    ref = run_pipeline(spark, pages, wh_ref, graph_id="g1", link_entities=True)
+
+    real_merge = LakeTable.merge_into
+
+    def failing_edges(self, *a, **kw):
+        if (kw.get("batch_id") or "").endswith("/edges"):
+            raise RuntimeError("injected edges failure")
+        return real_merge(self, *a, **kw)
+
+    wh = KGWarehouse(str(tmp_path / "crash"))
+    monkeypatch.setattr(LakeTable, "merge_into", failing_edges)
+    with pytest.raises(RuntimeError, match="injected edges failure"):
+        run_pipeline(spark, pages, wh, graph_id="g1", link_entities=True)
+    monkeypatch.setattr(LakeTable, "merge_into", real_merge)
+    assert "g1/edges" not in wh.edges.applied_batches()
+
+    def no_extract(*a, **kw):
+        raise AssertionError("extraction re-ran on resume")
+
+    monkeypatch.setattr(P, "extract", no_extract)
+    got = run_pipeline(spark, pages, wh, graph_id="g1", link_entities=True)
+
+    def rows(table):
+        df = table.read(spark)
+        return sorted((repr(tuple(r)) for r in
+                       df.select(*sorted(df.columns)).collect()))
+
+    for name in ("triples", "nodes", "edges", "dropped", "same_as"):
+        assert rows(getattr(wh, name)) == rows(getattr(wh_ref, name)), name
+    for k in ("nodes_total", "edges_total", "dropped_total", "triples",
+              "pages", "linked_names"):
+        assert got[k] == ref[k], k
+
+
 def test_second_update_batch_with_linking_schema_stable(spark, tmp_path):
     """Round-1 regression: with link_entities=True the canonical stage
     used to ADD a canonical_id column, so the next batch's node merge
