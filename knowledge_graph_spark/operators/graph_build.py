@@ -43,12 +43,31 @@ def _sanitized_type_col(type_col) -> "F.Column":
     """THE sanitization rule as a Column (kg_writer.py:11-16): '-' ->
     '_', must fullmatch _VALID_REL, uppercased; NULL when invalid.
     Single source of truth — with_sanitized_type, the row-local edge
-    builder, and the counter SQL all derive from it/_VALID_REL, so
-    the rule cannot drift between the tables and the counters."""
+    builder and materialize_graph's counters all apply it, so the rule
+    cannot drift between the tables and the counters."""
     c = F.col(type_col) if isinstance(type_col, str) else type_col
     cleaned = F.regexp_replace(c, "-", "_")
     return (F.when(cleaned.rlike(_VALID_REL), F.upper(cleaned))
             .otherwise(F.lit(None)))
+
+
+def _edge_ok(r, ids) -> "F.Column":
+    """THE endpoint rule (kg_writer.py:44-46) for a relation struct
+    ``r`` against its own document's entity ids ``ids``: both source
+    and target must be among them. NULL-safe: a NULL ids array or a
+    NULL endpoint makes array_contains NULL, and an unresolvable
+    membership test IS a missing endpoint (a NULL verdict would fail
+    both the edge filter and the dropped filter, and the relation would
+    vanish from both tables)."""
+    return F.coalesce(
+        F.array_contains(ids, r["source"]) & F.array_contains(ids, r["target"]),
+        F.lit(False),
+    )
+
+
+def _node_id(col) -> "F.Column":
+    """THE node id: per-document entity id namespaced by url hash."""
+    return F.concat_ws(":", F.hex(F.xxhash64("url")), F.col(col))
 
 
 def with_sanitized_type(relations: DataFrame) -> DataFrame:
@@ -65,11 +84,10 @@ def build_nodes(entities: DataFrame, graph_id: str, user_id: str) -> DataFrame:
     overwrites it with the component representative, and any later
     merge (update batch, streaming micro-batch) unions against the
     same column set — schema drift across runs was a crash."""
-    nid = F.concat_ws(":", F.hex(F.xxhash64("url")), F.col("id"))
     return entities.select(
         F.lit(graph_id).alias("graph_id"),
         F.lit(user_id).alias("user_id"),
-        nid.alias("id"),
+        _node_id("id").alias("id"),
         "name",
         "type",
         F.col("url"),
@@ -87,11 +105,10 @@ def build_edges(
     - ``invalid_type``     (kg_writer.py:48-52)
     - ``missing_endpoint`` (kg_writer.py:44-46)
     """
-    nid = lambda c: F.concat_ws(":", F.hex(F.xxhash64("url")), F.col(c))
     rels = with_sanitized_type(relations).select(
         "url",
-        nid("source").alias("src"),
-        nid("target").alias("dst"),
+        _node_id("source").alias("src"),
+        _node_id("target").alias("dst"),
         "type",
         "rel_type",
         "verb",
@@ -147,29 +164,19 @@ def build_edges_rowlocal(
     relations against an arbitrary node table, but the pipeline path
     never needs to shuffle 10^12 relation rows against 10^12 node ids
     just to re-check a per-document invariant."""
-    ids = F.col("entities.id")
     rows = extracted.select(
-        "url", ids.alias("_ids"), F.explode("relations").alias("r")
+        "url", F.col("entities.id").alias("_ids"),
+        F.explode("relations").alias("r")
     )
-    nid = lambda c: F.concat_ws(":", F.hex(F.xxhash64("url")), F.col(c))
     flagged = rows.select(
         "url",
-        nid("r.source").alias("src"),
-        nid("r.target").alias("dst"),
+        _node_id("r.source").alias("src"),
+        _node_id("r.target").alias("dst"),
         F.col("r.type").alias("type"),
         _sanitized_type_col("r.type").alias("rel_type"),
         F.col("r.verb").alias("verb"),
         F.coalesce(F.col("r.similarity"), F.lit(0.0)).alias("similarity"),
-        # NULL-safe: array_contains over a NULL entities array (or a
-        # NULL source/target) is NULL, and a NULL _ok failed BOTH the
-        # good filter and the ~_ok dropped filter — the relation
-        # vanished from both tables with no quarantine record. An
-        # unresolvable membership test IS a missing endpoint.
-        F.coalesce(
-            F.array_contains("_ids", F.col("r.source"))
-            & F.array_contains("_ids", F.col("r.target")),
-            F.lit(False),
-        ).alias("_ok"),
+        _edge_ok(F.col("r"), F.col("_ids")).alias("_ok"),
     )
     good = flagged.filter(F.col("_ok") & F.col("rel_type").isNotNull())
     edges = good.select(
@@ -255,10 +262,11 @@ def materialize_graph(
                 F.lit(user_id).alias("user_id"))
     )
 
-    # node ids are (url-hash, per-doc entity id) — unique within any
-    # batch by construction, so the merge skips its dedupe shuffle;
-    # touched_keys=[graph_id] skips partition discovery (this batch by
-    # definition writes exactly one graph partition).
+    # node ids are (url-hash, per-doc entity id) and edges were just
+    # grouped on their key, so both batches are key-unique, as
+    # merge_into expects; touched_keys=[graph_id] skips partition
+    # discovery (this batch by definition writes exactly one graph
+    # partition).
     # The three commits touch three DISTINCT LakeTables (separate
     # directories, separate manifests, no shared mutable state) and
     # only read ``extracted``, so they and the counter aggregate run
@@ -278,7 +286,6 @@ def materialize_graph(
         return nodes_table.merge_into(nodes, on=["graph_id", "id"],
                                       when_matched="update",
                                       batch_id=f"{bid}/nodes",
-                                      dedupe=False,
                                       partition_by=["graph_id"],
                                       touched_keys=[graph_id])
 
@@ -291,7 +298,6 @@ def materialize_graph(
         return edges_table.merge_into(edges, on=edge_key,
                                       when_matched="ignore",
                                       batch_id=f"{bid}/edges",
-                                      dedupe=False,
                                       partition_by=["graph_id"],
                                       touched_keys=[graph_id])
 
@@ -331,27 +337,22 @@ def materialize_graph(
         if resumed:
             return 0, 0, 0
         # an edge needs BOTH a valid type and resolvable endpoints —
-        # the same two tests build_edges_rowlocal applies — or the
-        # counters diverge from the tables on foreign extraction
-        # inputs whose relations reference absent entity ids
-        valid = (
-            "greatest(size(filter(coalesce(relations, array()), r -> "
-            f"regexp_like(replace(r.type, '-', '_'), '{_VALID_REL}') "
-            "and coalesce(array_contains("
-            "transform(entities, e -> e.id), r.source) "
-            "and array_contains(transform(entities, e -> e.id), "
-            "r.target), false))), 0)"
-        )
+        # the two rules build_edges_rowlocal applies, so the counters
+        # cannot diverge from the tables on foreign extraction inputs
+        ids = F.col("entities.id")
+        valid = F.filter("relations", lambda r: (
+            _sanitized_type_col(r["type"]).isNotNull() & _edge_ok(r, ids)))
+
         # NULL-safe sizes: a NULL entities/relations column (foreign
         # or schema-evolved input) must count 0 — greatest(x, 0)
         # covers BOTH null semantics (ANSI size(NULL)=NULL is skipped
         # by greatest; legacy size(NULL)=-1 clamps to 0)
+        def n(c):
+            return F.sum(F.greatest(F.size(c), F.lit(0)))
+
         stats = extracted.select(
-            F.sum(F.greatest(F.size("entities"), F.lit(0)))
-            .alias("n_nodes"),
-            F.sum(F.expr(valid)).alias("n_valid"),
-            F.sum(F.greatest(F.size("relations"), F.lit(0)))
-            .alias("n_rel"),
+            n("entities").alias("n_nodes"), n(valid).alias("n_valid"),
+            n("relations").alias("n_rel"),
         ).first()
         n_valid = stats["n_valid"] or 0
         return (stats["n_nodes"] or 0, n_valid,

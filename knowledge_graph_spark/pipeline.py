@@ -16,9 +16,10 @@ at-least-once driver, exactly-once table state. Stage 1 persists the
 extraction result itself, so a crash after the (expensive) NLP pass
 never re-runs it.
 
-Counters land in each snapshot's lineage entry (pages, entities,
-relations, triples, dropped, linked names) — the "per-partition
-lineage + counters" metrics surface.
+Each lineage entry records its commit's row count and per-partition
+row counts; ``run_pipeline`` returns the run's counters (pages, nodes,
+edges, dropped relations, triples, linked names, stage seconds) to its
+caller — the "per-partition lineage + counters" metrics surface.
 """
 
 from __future__ import annotations
@@ -114,10 +115,10 @@ def run_pipeline(
     For high-frequency incremental ingestion use streaming/ingest.py,
     which processes only the new pages per micro-batch.
 
-    INPUT CONTRACT: ``pages`` must be url-unique — the extraction merge
-    runs ``dedupe=False`` (its shuffle skipped because crawl snapshots
-    are url-keyed by construction), so duplicate urls in one batch
-    would land duplicate rows in every downstream table. A source
+    INPUT CONTRACT: ``pages`` must be url-unique — ``merge_into`` does
+    not deduplicate its batch (crawl snapshots are url-keyed by
+    construction), so duplicate urls in one batch would land duplicate
+    rows in every downstream table. A source
     that may re-deliver urls (two file drops of the same crawl) goes
     through the streaming path, whose keep-newest window (max
     ``warc_ts`` per url) owns that rule.
@@ -185,7 +186,7 @@ def run_pipeline(
             ]
         warehouse.extracted.merge_into(
             upd, on=["url"], when_matched="update", batch_id=bid,
-            dedupe=False, partition_by=["url_bucket"], touched_keys=touched,
+            partition_by=["url_bucket"], touched_keys=touched,
         )
         if is_update:
             upd.unpersist()
@@ -235,8 +236,8 @@ def run_pipeline(
         t0 = time.time()
         # the manifest is the partition index: read ONLY this graph's
         # node partition, never the whole table. None = the graph has
-        # no node partition (zero-entity corpus, or a legacy
-        # unpartitioned manifest): nothing to link — skip the stage
+        # no node partition (a zero-entity corpus): nothing to link —
+        # skip the stage
         g_nodes = warehouse.nodes.read_partitions(spark, [graph_id])
         if g_nodes is None:
             linked["linked_names"] = 0

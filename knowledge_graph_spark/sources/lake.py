@@ -30,7 +30,8 @@ non-EMPTY, and must not contain ``"|"`` (graph ids, url-hash buckets
 — the engine's partition columns — satisfy this by construction; an
 empty string would be written as Hive's __HIVE_DEFAULT_PARTITION__
 and desynchronize the manifest index from the directory names —
-``_keys_of`` validates and raises).
+``_check_keys`` refuses such a key, both on a collected key set and
+on the directories a write produced).
 
 On a real cluster this class is swapped for
 ``spark.sql("MERGE INTO ...")`` against Iceberg; the call sites are
@@ -53,21 +54,12 @@ import time
 import urllib.parse
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import StructType
 
 _PK = "_pk"
 _SEQ = "_seq"   # merge-on-read write sequence
 _TOMB = "_tomb"  # merge-on-read tombstone marker
-
-
-def _f():
-    from pyspark.sql import functions as F
-
-    return F
-
-
-def F_col(name: str):
-    return _f().col(name)
 
 
 class LakeTable:
@@ -128,9 +120,8 @@ class LakeTable:
         bounds how far back reads can reach (older entries' files are
         reclaimed and their lineage folded away).
 
-        When the entry pins a table schema (every commit since schema
-        tracking), the scan applies it explicitly — files written
-        before a column was added project NULL for it (Iceberg
+        The scan applies the entry's pinned schema explicitly — files
+        written before a column was added project NULL for it (Iceberg
         schema-on-read add-column evolution), and the reader never
         footer-samples to infer a schema."""
         entry = (self.current_entry() if as_of is None
@@ -147,28 +138,19 @@ class LakeTable:
         return self._resolve_mor(df, entry)
 
     @staticmethod
-    def _reader(spark: SparkSession, entry: Optional[dict]):
-        """DataFrameReader with the entry's pinned schema applied (when
-        recorded) — schema-on-read: missing columns in old files read
-        as NULL, and no footer sampling happens at plan time."""
-        schema_json = (entry or {}).get("schema")
-        if not schema_json:
-            return spark.read
-        from pyspark.sql.types import StructType
+    def _reader(spark: SparkSession, entry: dict):
+        """DataFrameReader with the entry's pinned schema applied —
+        schema-on-read: missing columns in old files read as NULL, and
+        no footer sampling happens at plan time."""
+        return spark.read.schema(StructType.fromJson(json.loads(entry["schema"])))
 
-        return spark.read.schema(StructType.fromJson(json.loads(schema_json)))
-
-    def _merge_schema(self, old_json: Optional[str], df: DataFrame) -> str:
+    def _merge_schema(self, old_json: str, df: DataFrame) -> str:
         """Union of the recorded table schema and the batch's schema:
         existing columns keep their position, new columns append at the
         end (add-column evolution). A batch whose column TYPE
         contradicts the table's raises at write time — committing it
         would land files the pinned schema can't read (a committed-but-
         unreadable table is strictly worse than a failed write)."""
-        from pyspark.sql.types import StructType
-
-        if not old_json:
-            return df.schema.json()
         old = StructType.fromJson(json.loads(old_json))
         by_name = {f.name: f for f in old.fields}
         for f in df.schema.fields:
@@ -215,13 +197,7 @@ class LakeTable:
         NULL (nullable add-column is safe in that direction)."""
         if evolve or entry is None:
             return
-        if entry.get("schema"):
-            have = {f["name"]
-                    for f in json.loads(entry["schema"])["fields"]}
-        else:
-            have = set(self._table_columns(entry))
-            if not have:
-                return
+        have = {f["name"] for f in json.loads(entry["schema"])["fields"]}
         extra = [c for c in df.columns
                  if c not in have and c not in (_SEQ, _TOMB)]
         if extra:
@@ -293,7 +269,6 @@ class LakeTable:
             raise ValueError(
                 f"{self.dir}: to_snapshot {to_snapshot!r} precedes "
                 f"from_snapshot {from_snapshot!r}")
-        F = _f()
         added: list[str] = []
         for j in range(i0 + 1, i1 + 1):
             prev, e = lineage[j - 1], lineage[j]
@@ -338,9 +313,6 @@ class LakeTable:
         mor = entry.get("mor")
         if not mor:
             return df
-        from pyspark.sql import Window
-
-        F = _f()
         w = Window.partitionBy(*mor["key"])
         # a tombstone at seq T kills every STRICTLY OLDER row under
         # either policy, and never competes itself; live rows AT the
@@ -373,7 +345,6 @@ class LakeTable:
 
     @staticmethod
     def _pk_col(partition_by: list[str]):
-        F = _f()
         return F.concat_ws("|", *[F.col(c).cast("string") for c in partition_by])
 
     @staticmethod
@@ -393,7 +364,7 @@ class LakeTable:
     # keys it touches (see _persist)
     WRITE_SALT = 4
 
-    # replay-dedupe horizon for vacuum-folded batch ids (see vacuum())
+    # replay horizon for vacuum-folded batch ids (see vacuum())
     ARCHIVE_KEEP = 10_000
 
     def _persist(self, df: DataFrame, snap_name: str,
@@ -418,7 +389,6 @@ class LakeTable:
         column-only repartition toward its advisory size, which funnels
         a small write through 1-2 tasks."""
         path = os.path.join(self.dir, snap_name)
-        F = _f()
         spark = df.sparkSession
         writer = df.write
         if partition_by:
@@ -427,7 +397,7 @@ class LakeTable:
             salt_n = -(-par // n_keys) if n_keys else self.WRITE_SALT
             salt = (F.rand(0) * salt_n).cast("int")
             writer = df.withColumn(_PK, self._pk_col(partition_by)).repartition(
-                par, F_col(_PK), salt
+                par, F.col(_PK), salt
             ).write.partitionBy(_PK)
         # the description is a thread-local property, so commits on
         # concurrent threads tag their own jobs; the caller's comes back
@@ -441,30 +411,17 @@ class LakeTable:
             sc.setJobDescription(prev)
         if not partition_by:
             return None, None, self._footer_rows(path)
+        by_key = {urllib.parse.unquote(d[len(_PK) + 1:]): d
+                  for d in os.listdir(path) if d.startswith(_PK + "=")}
+        # zero-job write-side validation, for the writes that never
+        # collected their keys: refuse the commit while the snapshot
+        # dir is still orphaned (never referenced by a manifest)
+        self._check_keys(by_key, partition_by)
         # per-partition lineage counters (north-star requirement) from
         # the written footers — zero Spark jobs
-        dirs, counts = {}, {}
-        n_seg = len(partition_by)
-        for d in os.listdir(path):
-            if d.startswith(_PK + "="):
-                key = urllib.parse.unquote(d[len(_PK) + 1:])
-                # zero-job write-side validation (catches the paths
-                # that never ran _keys_of): a NULL/empty partition
-                # value writes as __HIVE_DEFAULT_PARTITION__ (or an
-                # empty/short-segment key) and would permanently
-                # desynchronize the manifest index from _keys_of's
-                # '' form — refuse the commit while the snapshot dir
-                # is still orphaned (never referenced by a manifest)
-                if (key == "__HIVE_DEFAULT_PARTITION__"
-                        or key.count("|") != n_seg - 1
-                        or "" in key.split("|")):
-                    raise ValueError(
-                        f"{self.dir}: invalid partition key {key!r} "
-                        f"for spec {partition_by}: partition columns "
-                        "must be non-null, non-empty strings "
-                        "without '|'")
-                dirs[key] = [f"{snap_name}/{d}"]
-                counts[key] = self._footer_rows(os.path.join(path, d))
+        dirs = {k: [f"{snap_name}/{d}"] for k, d in by_key.items()}
+        counts = {k: self._footer_rows(os.path.join(path, d))
+                  for k, d in by_key.items()}
         return dirs, counts, sum(counts.values())
 
     def _commit_entry(self, op: str, batch_id: Optional[str],
@@ -514,15 +471,53 @@ class LakeTable:
         self, df: DataFrame, op: str, batch_id: Optional[str],
         counters: Optional[dict] = None, partition_by: Optional[list[str]] = None,
         mor: Optional[dict] = None, n_keys: Optional[int] = None,
+        entry: Optional[dict] = None, replaced: Optional[set[str]] = None,
     ) -> dict:
+        """Write df as a new snapshot and commit it: every write ends
+        here. Without ``entry`` df is the whole table. With the current
+        ``entry`` of a partitioned table, df's partitions join the
+        table's others: the keys in ``replaced`` and every key df
+        writes are dropped, the rest carried forward by reference
+        (their files untouched). ``replaced=None`` appends instead:
+        df's directories extend each key's existing ones."""
         snap_name = f"snap-{self._next_snap_id():06d}"
         dirs, counts, rows = self._persist(df, snap_name, partition_by, n_keys,
                                            batch_id)
+        schema, carried = df.schema.json(), 0
+        if entry is not None:
+            schema = self._merge_schema(entry["schema"], df)
+            drop = set() if replaced is None else set(replaced) | set(dirs)
+            merged = {k: list(v) for k, v in entry["partition_dirs"].items()
+                      if k not in drop}
+            merged_rows = {k: entry["partition_rows"].get(k, 0) for k in merged}
+            carried = len(merged.keys() - dirs.keys())
+            for k, paths in dirs.items():
+                merged.setdefault(k, []).extend(paths)
+                merged_rows[k] = merged_rows.get(k, 0) + counts[k]
+            dirs, counts, rows = merged, merged_rows, sum(merged_rows.values())
         return self._commit_entry(op, batch_id, counters, snap_name, rows,
-                                  dirs, counts, partition_by=partition_by,
-                                  mor=mor, schema=df.schema.json())
+                                  dirs, counts, carried=carried,
+                                  partition_by=partition_by, mor=mor,
+                                  schema=schema)
 
     # ---- partition-key helpers ----------------------------------------
+
+    @staticmethod
+    def _check_keys(keys, partition_by: list[str]) -> None:
+        """THE partition-key rule. A NULL value (concat_ws drops its
+        segment; a write names it __HIVE_DEFAULT_PARTITION__) or an
+        empty string (written as Hive's default partition, never
+        matching the manifest's '' key) would silently desynchronize
+        the manifest's key index from the written directories."""
+        bad = [k for k in keys
+               if k == "__HIVE_DEFAULT_PARTITION__"
+               or k.count("|") != len(partition_by) - 1
+               or "" in k.split("|")]
+        if bad:
+            raise ValueError(
+                f"invalid partition key values {sorted(bad)[:5]} for "
+                f"spec {partition_by}: partition columns must be "
+                "non-null, non-empty strings without '|'")
 
     @staticmethod
     def _keys_of(df: DataFrame, partition_by: list[str]) -> set[str]:
@@ -533,19 +528,7 @@ class LakeTable:
         pk = LakeTable._pk_col(partition_by)
         keys = {r["k"] for r in
                 df.select(pk.alias("k")).distinct().collect()}
-        bad = [k for k in keys
-               if k.count("|") != len(partition_by) - 1
-               or "" in k.split("|")]
-        if bad:
-            # a NULL segment (concat_ws drops it -> wrong segment
-            # count) or an empty-string value (written as Hive's
-            # __HIVE_DEFAULT_PARTITION__, never matching the
-            # manifest's '' key) would silently desynchronize the
-            # key index from the written directories
-            raise ValueError(
-                f"invalid partition key values {sorted(bad)[:5]} for "
-                f"spec {partition_by}: partition columns must be "
-                "non-null, non-empty strings without '|'")
+        LakeTable._check_keys(keys, partition_by)
         return keys
 
     @staticmethod
@@ -588,7 +571,7 @@ class LakeTable:
         the new rows are written as fresh directories and the manifest
         carries every existing directory forward by reference — the
         current snapshot is NEVER read (Iceberg append semantics).
-        Unpartitioned tables keep the legacy read+union rewrite.
+        Unpartitioned tables are rewritten as a read+union.
 
         ``mor``: resolution spec to stamp on the new lineage entry IN
         THE SAME atomic commit (merge_on_read passes it; a MOR table's
@@ -598,7 +581,6 @@ class LakeTable:
         entry = self.current_entry()
         self._check_evolution(entry, df, evolve_schema)
         self._check_partition_spec(entry, partition_by)
-        old_dirs = (entry or {}).get("partition_dirs")
         if entry is not None and entry.get("mor") and _SEQ not in df.columns:
             raise ValueError(
                 f"{self.dir}: plain append to a merge-on-read table "
@@ -609,40 +591,22 @@ class LakeTable:
         # between two commits would strand an applied batch without mor)
         if mor is None and entry is not None and entry.get("mor"):
             mor = entry["mor"]
-        if partition_by and (entry is None or old_dirs is not None):
-            snap_name = f"snap-{self._next_snap_id():06d}"
+        if partition_by and (entry is None
+                             or entry.get("partition_dirs") is not None):
             # n_keys scales the write salt: a single-key batch (one
             # graph's streaming micro-batch) would otherwise funnel
-            # through WRITE_SALT tasks while the cluster idles — the
-            # same degeneration the COW paths already pass
-            # n_keys=len(touched) to avoid; the distinct-keys probe is
-            # one tiny job against a batch-sized frame
-            new_dirs, new_counts, new_rows = self._persist(
-                df, snap_name, partition_by,
+            # through WRITE_SALT tasks while the cluster idles; the
+            # distinct-keys probe is one tiny job against a batch-sized
+            # frame
+            return self._write_snapshot(
+                df, "append", batch_id, counters, partition_by, mor=mor,
                 n_keys=len(self._keys_of(df, partition_by)) or None,
-                batch_id=batch_id)
-            dirs = {k: list(v) for k, v in (old_dirs or {}).items()}
-            counts = dict((entry or {}).get("partition_rows") or {})
-            for k, paths in new_dirs.items():
-                dirs.setdefault(k, []).extend(paths)
-                counts[k] = counts.get(k, 0) + new_counts[k]
-            out = self._commit_entry(
-                "append", batch_id, counters, snap_name,
-                sum(counts.values()), dirs, counts,
-                carried=len(dirs) - len(new_dirs), partition_by=partition_by,
-                mor=mor,
-                # legacy entries (no pinned schema) stay unpinned: pinning
-                # the batch's schema would drop old files' other columns
-                schema=(self._merge_schema((entry or {}).get("schema"), df)
-                        if entry is None or entry.get("schema") else None),
-            )
-        else:
-            if self.exists():
-                df = self.read(df.sparkSession).unionByName(
-                    df, allowMissingColumns=True)
-            out = self._write_snapshot(df, "append", batch_id, counters,
-                                       partition_by, mor=mor)
-        return out
+                entry=entry)
+        if entry is not None:
+            df = self.read(df.sparkSession).unionByName(
+                df, allowMissingColumns=True)
+        return self._write_snapshot(df, "append", batch_id, counters,
+                                    partition_by, mor=mor)
 
     def merge_into(
         self,
@@ -651,34 +615,33 @@ class LakeTable:
         when_matched: str = "update",
         batch_id: Optional[str] = None,
         counters: Optional[dict] = None,
-        dedupe: bool = True,
         partition_by: Optional[list[str]] = None,
-        delete_keys: Optional[DataFrame] = None,
         touched_keys: Optional[list[str]] = None,
         evolve_schema: bool = False,
     ) -> dict:
         """Iceberg-style MERGE:
 
-        - ``when_matched="update"``  — MATCHED THEN UPDATE (row replaced
-          by the update row), NOT MATCHED THEN INSERT. Node-table
-          semantics (reference MERGE..SET, kg_writer.py:24-25). With
-          multi-row keys (``dedupe=False``) this is a key-scoped
-          replace: ALL current rows sharing a key present in the batch
-          are replaced by the batch's rows for that key.
+        - ``when_matched="update"``  — MATCHED THEN UPDATE, NOT MATCHED
+          THEN INSERT. Node-table semantics (reference MERGE..SET,
+          kg_writer.py:24-25). It is a key-scoped replace: ALL current
+          rows sharing a key present in the batch are replaced by the
+          batch's rows for that key.
         - ``when_matched="ignore"``  — ON CREATE only: matched rows keep
           their existing values, unmatched are inserted. Edge-table
           semantics (reference ON CREATE SET, kg_writer.py:56-57).
 
-        ``delete_keys`` (update mode): the key set to clear, when wider
-        than the keys present in ``updates`` — e.g. a re-crawled page
-        that now extracts zero triples must still delete its old rows.
+        ``updates`` is not deduplicated on the merge key: the engine's
+        batches are key-unique by construction (crawl snapshots are
+        url-keyed, node ids are url-hash-namespaced, edges are grouped
+        on their key), so a deduplicating shuffle would buy nothing. A
+        batch that repeats a key lands every one of its rows for it.
 
         ``partition_by``: partition-scoped commit. Only partitions whose
-        key appears in ``updates``/``delete_keys`` are read and
-        rewritten; every other partition directory is carried forward by
-        manifest reference (its files untouched on disk). The merge key
-        may be a strict subset of the partition spec (the reach is then
-        computed by prefix match over the manifest's partition index).
+        key appears in ``updates`` are read and rewritten; every other
+        partition directory is carried forward by manifest reference
+        (its files untouched on disk). The merge key may be a strict
+        subset of the partition spec (the reach is then computed by
+        prefix match over the manifest's partition index).
 
         ``touched_keys``: caller-declared SUPERSET of the partition keys
         this batch can touch (format ``"v1|v2"``). Skips the
@@ -686,12 +649,6 @@ class LakeTable:
         ``updates`` once just to enumerate its partitions. Must cover
         every partition the merge writes to or deletes from; declaring
         extra keys only costs re-writing those partitions verbatim.
-
-        Update rows are deduplicated on the merge key first (last-writer
-        -wins is meaningless inside one batch; dropDuplicates keeps an
-        arbitrary-but-single row, matching repeated MERGE idempotence).
-        Callers whose batches are key-unique by construction pass
-        ``dedupe=False`` and skip that shuffle.
         """
         if when_matched not in ("update", "ignore"):
             # validate BEFORE the first write: _merged only runs once
@@ -701,12 +658,10 @@ class LakeTable:
             raise ValueError(f"unknown when_matched: {when_matched}")
         if batch_id and batch_id in self.applied_batches():
             return {"skipped": True, "batch_id": batch_id}
-        if dedupe:
-            updates = updates.dropDuplicates(on)
+        op = f"merge:{when_matched}"
         if not self.exists():
             return self._write_snapshot(
-                updates, f"merge:{when_matched}", batch_id, counters,
-                partition_by,
+                updates, op, batch_id, counters, partition_by,
                 n_keys=len(touched_keys) if touched_keys else None,
             )
         entry = self.current_entry()
@@ -717,77 +672,38 @@ class LakeTable:
                 f"{self.dir}: copy-on-write merge on a merge-on-read "
                 "table — compact() it first or use merge_on_read()"
             )
-        old_dirs = entry.get("partition_dirs")
-        if partition_by and old_dirs is not None:
-            return self._merge_partitioned(
-                updates, on, when_matched, batch_id, counters,
-                partition_by, delete_keys, entry, touched_keys,
-            )
-        current = self.read(updates.sparkSession)
-        result = self._merged(current, updates, on, when_matched, delete_keys)
-        return self._write_snapshot(result, f"merge:{when_matched}", batch_id,
-                                    counters, partition_by)
-
-    @staticmethod
-    def _merged(current: Optional[DataFrame], updates: DataFrame, on: list[str],
-                when_matched: str, delete_keys: Optional[DataFrame]) -> DataFrame:
-        if current is None:
-            return updates
-        if when_matched == "update":
-            keys = (delete_keys if delete_keys is not None else updates).select(*on)
-            kept = current.join(keys, on=on, how="left_anti")
-            return kept.unionByName(updates, allowMissingColumns=True)
-        if when_matched == "ignore":
-            fresh = updates.join(current.select(*on), on=on, how="left_anti")
-            return current.unionByName(fresh, allowMissingColumns=True)
-        raise ValueError(f"unknown when_matched: {when_matched}")
-
-    def _merge_partitioned(
-        self, updates, on, when_matched, batch_id, counters,
-        partition_by, delete_keys, entry, touched_keys=None,
-    ) -> dict:
-        old_dirs: dict = entry["partition_dirs"]
-        old_rows: dict = entry.get("partition_rows") or {}
         spark = updates.sparkSession
-
+        old_dirs = entry.get("partition_dirs")
+        if not (partition_by and old_dirs is not None):
+            result = self._merged(self.read(spark), updates, on, when_matched)
+            return self._write_snapshot(result, op, batch_id, counters,
+                                        partition_by)
         # the partitions this commit must rewrite
         if touched_keys is not None:
             touched = set(touched_keys)
         else:
             touched = self._keys_of(updates, partition_by)
-            if delete_keys is not None:
-                if all(c in delete_keys.columns for c in partition_by):
-                    touched |= self._keys_of(delete_keys, partition_by)
-                else:
-                    touched |= self._match_subset(old_dirs, partition_by,
-                                                  delete_keys)
             if not all(c in on for c in partition_by):
                 # merge key narrower than the partition spec: the anti-
                 # join can reach any partition matching a key prefix
                 touched |= self._match_subset(old_dirs, partition_by,
                                               updates.select(*on))
+        current = self.read_partitions(spark, [k for k in touched if k in old_dirs])
+        return self._write_snapshot(
+            self._merged(current, updates, on, when_matched), op, batch_id,
+            counters, partition_by, n_keys=len(touched), entry=entry,
+            replaced=touched)
 
-        cur_touched = self.read_partitions(
-            spark, [k for k in touched if k in old_dirs]
-        )
-        result = self._merged(cur_touched, updates, on, when_matched, delete_keys)
-
-        snap_name = f"snap-{self._next_snap_id():06d}"
-        new_dirs, new_counts, _ = self._persist(result, snap_name, partition_by,
-                                                n_keys=len(touched),
-                                                batch_id=batch_id)
-        dirs = {k: v for k, v in old_dirs.items() if k not in touched}
-        rows_by = {k: old_rows.get(k, 0) for k in dirs}
-        carried = len(dirs)
-        dirs.update(new_dirs)
-        rows_by.update(new_counts)
-        return self._commit_entry(
-            f"merge:{when_matched}", batch_id, counters, snap_name,
-            sum(rows_by.values()), dirs, rows_by, carried=carried,
-            partition_by=partition_by,
-            schema=(self._merge_schema(entry["schema"], result)
-                    if entry.get("schema") else None),
-        )
+    @staticmethod
+    def _merged(current: Optional[DataFrame], updates: DataFrame, on: list[str],
+                when_matched: str) -> DataFrame:
+        if current is None:
+            return updates
+        if when_matched == "update":
+            kept = current.join(updates.select(*on), on=on, how="left_anti")
+            return kept.unionByName(updates, allowMissingColumns=True)
+        fresh = updates.join(current.select(*on), on=on, how="left_anti")
+        return current.unionByName(fresh, allowMissingColumns=True)
 
     def overwrite_partitions(
         self,
@@ -822,24 +738,9 @@ class LakeTable:
             )
         touched = set(touched_keys) if touched_keys is not None else \
             self._keys_of(df, partition_by)
-        old_dirs: dict = entry["partition_dirs"]
-        old_rows: dict = entry.get("partition_rows") or {}
-        snap_name = f"snap-{self._next_snap_id():06d}"
-        new_dirs, new_counts, _ = self._persist(df, snap_name, partition_by,
-                                                n_keys=len(touched),
-                                                batch_id=batch_id)
-        dirs = {k: v for k, v in old_dirs.items() if k not in touched}
-        rows_by = {k: old_rows.get(k, 0) for k in dirs}
-        carried = len(dirs)
-        dirs.update(new_dirs)
-        rows_by.update(new_counts)
-        return self._commit_entry(
-            "overwrite_partitions", batch_id, counters, snap_name,
-            sum(rows_by.values()), dirs, rows_by, carried=carried,
-            partition_by=partition_by,
-            schema=(self._merge_schema(entry["schema"], df)
-                    if entry.get("schema") else None),
-        )
+        return self._write_snapshot(
+            df, "overwrite_partitions", batch_id, counters, partition_by,
+            n_keys=len(touched), entry=entry, replaced=touched)
 
     def merge_on_read(
         self,
@@ -879,7 +780,6 @@ class LakeTable:
             raise ValueError(
                 f"{self.dir}: merge_on_read requires partition_by"
             )
-        F = _f()
         upd = updates.withColumn(_SEQ, F.lit(int(seq))).withColumn(
             _TOMB, F.lit(False)
         )
@@ -948,7 +848,6 @@ class LakeTable:
         entry = self.current_entry()
         if entry is None:
             raise FileNotFoundError(f"LakeTable {self.dir} has no snapshot")
-        F = _f()
         mor = entry.get("mor")
         resolved = self.read(spark)
         if mor:
@@ -969,52 +868,13 @@ class LakeTable:
         """Iceberg ``rollback_to_snapshot``: re-commit an older lineage
         entry as current. Pure metadata — no data files move; vacuum's
         reference counting keeps the restored snapshot's files alive."""
-        m = self._manifest()
-        target = next(
-            (e for e in reversed(m["lineage"])
-             if e["snapshot"] == snapshot and not e.get("skipped")), None
-        )
-        if target is None:
-            raise ValueError(f"{self.dir}: no lineage entry for {snapshot}")
-        entry = {
-            k: target[k]
-            for k in ("snapshot", "rows", "partition_dirs", "partition_rows",
-                      "partition_spec", "mor", "schema")
-            if k in target
-        }
-        entry.update({
-            "parent": m["current"],
-            "op": f"rollback:{snapshot}",
-            "batch_id": None,
-            "counters": {},
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        })
-        # snap_id keeps monotonically increasing: the next write must not
-        # collide with directories that still exist on disk
-        m["current"] = target["snapshot"]
-        m["lineage"].append(entry)
-        self._commit(m)
-        return entry
-
-    def _table_columns(self, entry: dict) -> list[str]:
-        """Column names of the stored files (one footer read, no job).
-        Falls back to the entry's snapshot directory for unpartitioned
-        tables, so schema checks never silently no-op there."""
-        import pyarrow.parquet as pq
-
-        dirs = [os.path.join(self.dir, rel)
-                for paths in (entry.get("partition_dirs") or {}).values()
-                for rel in paths]
-        if not dirs and entry.get("snapshot"):
-            dirs = [os.path.join(self.dir, entry["snapshot"])]
-        for d in dirs:
-            for root, _dirs, files in os.walk(d):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        return pq.ParquetFile(
-                            os.path.join(root, f)
-                        ).schema_arrow.names
-        return []
+        target = self._entry_for(snapshot)
+        dirs = target.get("partition_dirs")
+        return self._commit_entry(
+            f"rollback:{snapshot}", None, None, snapshot, target["rows"],
+            dirs, target.get("partition_rows"), carried=len(dirs or {}),
+            partition_by=target.get("partition_spec"), mor=target.get("mor"),
+            schema=target["schema"])
 
     def _prune_delete_keys(self, spark: SparkSession, condition: str,
                            entry: dict) -> Optional[set[str]]:
@@ -1047,14 +907,13 @@ class LakeTable:
                 condition, _re.IGNORECASE):
             return None
         try:
-            F = _f()
             keys_df = spark.createDataFrame(
                 [tuple(k.split("|")) for k in dirs],
                 ", ".join(f"`{c}` string" for c in spec),
             )
-            for c in self._table_columns(entry):
-                if c not in spec and c != _PK:
-                    keys_df = keys_df.withColumn(c, F.lit(None))
+            for f in json.loads(entry["schema"])["fields"]:
+                if f["name"] not in spec:
+                    keys_df = keys_df.withColumn(f["name"], F.lit(None))
             matched = (
                 keys_df.withColumn("_m", F.expr(condition))
                 .filter(F.col("_m").isNull() | F.col("_m"))
@@ -1068,9 +927,10 @@ class LakeTable:
         self, spark: SparkSession, condition: str,
         batch_id: Optional[str] = None,
     ) -> dict:
-        """DELETE FROM t WHERE condition — rewrite keeping the negation.
-        (Iceberg DELETE equivalent; reference DETACH DELETE is composed
-        from this plus an anti-join at the call site, operators/queries.)
+        """DELETE FROM t WHERE condition — rewrite keeping the negation
+        (Iceberg DELETE equivalent). The reference's DETACH DELETE
+        queries (operators/queries, Q7-Q9) are frame transforms and do
+        not go through here.
 
         Partition-pruned: when the predicate resolves against the
         partition columns alone, only partitions that can contain
@@ -1080,7 +940,6 @@ class LakeTable:
         unpartitioned tables take the full-rewrite path."""
         if batch_id and batch_id in self.applied_batches():
             return {"skipped": True, "batch_id": batch_id}
-        F = _f()
         entry = self.current_entry()
         touched = None
         if entry is not None and not entry.get("mor"):
@@ -1095,9 +954,9 @@ class LakeTable:
                 return self._commit_entry(
                     f"delete:{condition}", batch_id, None,
                     entry["snapshot"], entry["rows"],
-                    dict(old_dirs), dict(entry.get("partition_rows") or {}),
+                    dict(old_dirs), dict(entry["partition_rows"]),
                     carried=len(old_dirs), partition_by=spec,
-                    schema=entry.get("schema"),
+                    schema=entry["schema"],
                 )
             cur = self.read_partitions(spark, sorted(touched))
             # SQL DELETE removes rows where the predicate is TRUE; rows
@@ -1177,7 +1036,7 @@ class LakeTable:
                     seen.add(b)
             # the archive is insertion-ordered and CAPPED — otherwise it
             # just relocates the unbounded growth it exists to prevent.
-            # Contract: replay dedupe covers the most recent
+            # Contract: replay detection covers the most recent
             # ARCHIVE_KEEP folded batches; that horizon is orders of
             # magnitude beyond any real replay depth (Structured
             # Streaming re-delivers only the last uncommitted batch

@@ -162,26 +162,13 @@ def test_partitioned_merge_subset_key_reaches_whole_group(spark, tbl):
     )
     tbl.overwrite(df, partition_by=["g", "b"])
     upd = spark.createDataFrame([("g1", 1, "new")], "g string, b int, v string")
-    tbl.merge_into(upd, on=["g"], when_matched="update", dedupe=False,
+    tbl.merge_into(upd, on=["g"], when_matched="update",
                    partition_by=["g", "b"])
     got = sorted(tuple(r) for r in tbl.read(spark).collect())
     # g1's bucket-0 rows died with the graph refresh even though the
     # update only contained bucket-1 rows
     assert got == [("g1", 1, "new"), ("g2", 0, "keep")]
     assert tbl.history()[-1]["carried_partitions"] == 1
-
-
-def test_partitioned_merge_delete_keys_clear_stale_rows(spark, tbl):
-    """A re-crawled key that now produces ZERO rows still clears its old
-    rows via delete_keys."""
-    df = spark.createDataFrame([("u1", "g0", 1), ("u2", "g0", 2)],
-                               "url string, g string, v int")
-    tbl.overwrite(df, partition_by=["g"])
-    empty = spark.createDataFrame([], "url string, g string, v int")
-    keys = spark.createDataFrame([("u1", "g0")], "url string, g string")
-    tbl.merge_into(empty, on=["url"], when_matched="update", dedupe=False,
-                   partition_by=["g"], delete_keys=keys)
-    assert [tuple(r) for r in tbl.read(spark).collect()] == [("u2", "g0", 2)]
 
 
 def test_vacuum_preserves_carried_partition_donors(spark, tbl):
@@ -321,6 +308,65 @@ def test_overwrite_partitions_replaces_wholesale(spark, tbl):
     e = tbl.current_entry()
     assert e["partition_dirs"]["g2"] == before_g2
     assert e["op"] == "overwrite_partitions"
+
+
+def test_overwrite_partitions_replaces_undeclared_written_key(spark, tbl):
+    """A key df writes but touched_keys leaves out is replaced, not
+    appended to: the commit drops the declared keys and every key df
+    writes, and carries only the rest."""
+    df = spark.createDataFrame(
+        [("g1", 1, "old"), ("g2", 2, "old"), ("g3", 3, "keep")],
+        "g string, k int, v string",
+    )
+    tbl.overwrite(df, partition_by=["g"])
+    before_g3 = list(tbl.current_entry()["partition_dirs"]["g3"])
+    new = spark.createDataFrame([("g1", 9, "new"), ("g2", 8, "new")],
+                                "g string, k int, v string")
+    tbl.overwrite_partitions(new, partition_by=["g"], touched_keys=["g1"])
+    assert rows(tbl.read(spark)) == [("g1", 9, "new"), ("g2", 8, "new"),
+                                     ("g3", 3, "keep")]
+    e = tbl.current_entry()
+    assert e["partition_rows"] == {"g1": 1, "g2": 1, "g3": 1}
+    assert len(e["partition_dirs"]["g2"]) == 1
+    assert e["partition_dirs"]["g3"] == before_g3
+    assert e["carried_partitions"] == 1
+
+
+def test_every_lineage_entry_pins_schema(spark, tmp_path):
+    """Every commit pins the table schema — the reader applies it and
+    later commits merge it — whatever the op and whichever path the op
+    takes."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    df = spark.createDataFrame([(1, "g1", "a"), (2, "g2", "b")],
+                               "k int, g string, v string")
+    p = LakeTable(str(tmp_path), "p")
+    p.merge_into(df, on=["k"], partition_by=["g"])       # first write
+    p.merge_into(df, on=["k"], partition_by=["g"])       # partitioned
+    p.append(df.selectExpr("k + 10 AS k", "g", "v"), partition_by=["g"])
+    p.overwrite_partitions(df, partition_by=["g"], touched_keys=["g1"])
+    p.delete_where(spark, "g = 'g1'")    # pruned: overwrite_partitions
+    p.delete_where(spark, "g = 'nope'")                  # metadata only
+    p.delete_where(spark, "v = 'b'")                     # full rewrite
+    p.rollback(p.history()[0]["snapshot"])
+    u = LakeTable(str(tmp_path), "u")
+    u.overwrite(df)
+    u.merge_into(df, on=["k"])                           # unpartitioned
+    u.append(df)
+    m = LakeTable(str(tmp_path), "m")
+    m.merge_on_read(df, on=["k"], seq=0, partition_by=["g"])
+    m.compact(spark)
+    entries = p.history() + u.history() + m.history()
+    assert {e["op"].split(":")[0] for e in entries} == {
+        "merge", "append", "overwrite_partitions", "delete", "rollback",
+        "overwrite", "compact"}
+    assert len(entries) == 13
+    for e in entries:
+        names = StructType.fromJson(json.loads(e["schema"])).fieldNames()
+        assert names[:3] == ["k", "g", "v"], (e["op"], names)
+    assert p.current_entry()["carried_partitions"] == 2   # rollback
 
 
 def test_merge_on_read_commit_is_atomic(spark, tbl):

@@ -287,6 +287,36 @@ def test_rowlocal_null_entities_quarantined_not_lost(spark):
     assert len(d) == 1 and d[0]["reason"] == "missing_endpoint"
 
 
+def test_materialize_counters_match_tables_on_foreign_input(spark, tmp_path):
+    """The nodes/edges/dropped_relations counters apply the rules the
+    tables are built with: on a foreign extraction frame (a NULL
+    entities row, a NULL relations row, an invalid type, a NULL source,
+    an absent target) each counter equals its table's rows."""
+    from knowledge_graph_spark.operators.extraction import EXTRACT_SCHEMA
+    from knowledge_graph_spark.operators.graph_build import materialize_graph
+    from knowledge_graph_spark.sources.lake import LakeTable
+
+    def ent(i):
+        return {"id": i, "name": f"n{i}", "type": "ORG", "start": 0, "end": 1}
+
+    def rel(src, dst, typ):
+        return {"source": src, "target": dst, "type": typ, "verb": "v",
+                "similarity": 0.5}
+
+    extracted = spark.createDataFrame([
+        ("u1", "t", "zh", [ent("e1"), ent("e2")],
+         [rel("e1", "e2", "ACQUIRE"), rel("e2", "e1", "PART-OF"),
+          rel("e1", "e2", "收购"), rel(None, "e2", "ACQUIRE"),
+          rel("e1", "e9", "ACQUIRE")]),
+        ("u2", "t", "zh", None, [rel("e1", "e2", "ACQUIRE")]),
+        ("u3", "t", "zh", [ent("e1")], None),
+    ], EXTRACT_SCHEMA)
+    tables = [LakeTable(str(tmp_path), n) for n in ("nodes", "edges", "dropped")]
+    c = materialize_graph(extracted, *tables, graph_id="g1")
+    got = [t.read(spark).count() for t in tables]
+    assert [c["nodes"], c["edges"], c["dropped_relations"]] == got == [3, 2, 4]
+
+
 def test_user_graph_links_survive_cross_user_update(spark, tmp_path):
     """Edges keep the FIRST writer's user_id (ON CREATE); Q4 must
     list a graph's links by graph membership, not the edge rows'
