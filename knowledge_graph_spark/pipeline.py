@@ -16,6 +16,11 @@ at-least-once driver, exactly-once table state. Stage 1 persists the
 extraction result itself, so a crash after the (expensive) NLP pass
 never re-runs it.
 
+Every warehouse table is keyed by graph: its partition spec starts
+with ``graph_id``, so a graph's stages read, rewrite and count only
+its own partitions, and one graph's commit carries every other
+graph's files forward by reference.
+
 Each lineage entry records its commit's row count and per-partition
 row counts; ``run_pipeline`` returns the run's counters (pages, nodes,
 edges, dropped relations, triples, linked names, stage seconds) to its
@@ -50,19 +55,19 @@ def default_graph_id() -> str:
 N_URL_BUCKETS = 16
 
 
-def with_url_bucket(df: DataFrame, buckets: int = N_URL_BUCKETS) -> DataFrame:
-    return df.withColumn(
-        "url_bucket", F.pmod(F.xxhash64("url"), F.lit(buckets)).cast("int")
+def with_graph_bucket(df: DataFrame, graph_id: str) -> DataFrame:
+    """Add the partition key of the url-keyed tables (extracted,
+    triples): ``graph_id``, then ``url_bucket``, in that column order."""
+    return df.withColumn("graph_id", F.lit(graph_id)).withColumn(
+        "url_bucket",
+        F.pmod(F.xxhash64("url"), F.lit(N_URL_BUCKETS)).cast("int"),
     )
 
 
 def _graph_rows(table: LakeTable, graph_id: str) -> int:
     """Rows belonging to one graph, answered from the manifest's
     per-partition counters — zero Spark jobs."""
-    entry = table.current_entry() or {}
-    rows = entry.get("partition_rows")
-    if rows is None:
-        return entry.get("rows", 0)
+    rows = (table.current_entry() or {}).get("partition_rows") or {}
     return sum(
         n for k, n in rows.items() if k.split("|", 1)[0] == graph_id
     )
@@ -109,9 +114,13 @@ def run_pipeline(
 
     ``batch_suffix`` marks an UPDATE batch over an existing graph
     (e.g. a re-crawl): same graph_id, fresh batch ids, and the
-    extraction table replaces rows per url (MERGE update) so changed
-    pages re-extract while the graph MERGE keeps reference semantics —
-    node rows update, existing edge properties persist (ON CREATE).
+    extraction table replaces the graph's rows per url (MERGE update)
+    so changed pages re-extract while the graph MERGE keeps reference
+    semantics — node rows update, existing edge properties persist
+    (ON CREATE). A graph is its own extraction run (reference: one run
+    = one graph): every stage reads only this graph's extraction
+    partitions, so another graph's crawl of the same url never reaches
+    it, and ``pages`` counts the graph's extracted rows.
     For high-frequency incremental ingestion use streaming/ingest.py,
     which processes only the new pages per micro-batch.
 
@@ -138,12 +147,12 @@ def run_pipeline(
     (``same_as``) -> the canonical overwrite of the node partition; it
     starts as soon as the nodes land. Side work reads only the
     committed extraction and runs beside the chain on driver threads:
-    the triples overwrite, the edges and dropped commits, the counter
-    aggregate, and (multi-graph warehouses only) the scoped page
-    count. All of it is joined before ``vacuum``; an exception in any
-    task surfaces from this call. ``stage_seconds`` holds each stage's
-    own elapsed time (``materialize`` excludes the chain it carries),
-    so the entries overlap and may sum to more than the wall time.
+    the triples overwrite, the edges and dropped commits and the
+    counter aggregate. All of it is joined before ``vacuum``; an
+    exception in any task surfaces from this call. ``stage_seconds``
+    holds each stage's own elapsed time (``materialize`` excludes the
+    chain it carries), so the entries overlap and may sum to more than
+    the wall time.
     """
     graph_id = graph_id or default_graph_id()
     if canonicalize:
@@ -155,72 +164,45 @@ def run_pipeline(
     stage_s: dict = {}
 
     # ---- stage 1: extraction (persisted so resume never re-parses) ----
+    # Keyed by graph like every other table: partitioned by (graph_id,
+    # url_bucket), merged on (graph_id, url). A re-crawl batch rewrites
+    # only the buckets its urls land in; the rest of the table is
+    # carried forward by manifest reference. The lake layer re-buckets
+    # by partition key for the write, so no extra repartition here.
     t0 = time.time()
+    g_keys = [f"{graph_id}|{b}" for b in range(N_URL_BUCKETS)]
     bid = f"{graph_id}{sfx}/extracted"
     if bid not in warehouse.extracted.applied_batches():
-        extracted = extract(pages, partitions=partitions)
-        # url-keyed MERGE, partitioned by url-hash bucket: a re-crawl
-        # batch rewrites only the buckets its urls land in; the rest of
-        # the table is carried forward by manifest reference. The lake
-        # layer re-buckets by partition key for the write, so no extra
-        # repartition here. On update batches the merge consumes its
-        # input twice (touched-key discovery + write) — persist so the
-        # NLP pass runs exactly once; the first batch is a single-pass
-        # snapshot write.
-        upd = with_url_bucket(extracted)
-        is_update = warehouse.extracted.exists()
-        # the first batch can write every bucket: declaring them sizes
-        # the write's fan-out by the key count (one writer per bucket,
-        # see LakeTable._persist) instead of WRITE_SALT per bucket
-        touched = [str(b) for b in range(N_URL_BUCKETS)]
+        upd = with_graph_bucket(extract(pages, partitions=partitions), graph_id)
+        # a graph's first batch declares all its buckets: the merge then
+        # reads no old rows, and the write's fan-out is sized by the key
+        # count (one writer per bucket, see LakeTable._persist)
+        touched = g_keys
+        is_update = _graph_rows(warehouse.extracted, graph_id) > 0
         if is_update:
-            upd = upd.persist()
+            # the merge consumes its input twice (touched-key discovery
+            # + write): persist so the NLP pass runs exactly once.
             # url_bucket is a pure function of the merge key, so the
             # batch's distinct buckets are EXACTLY the partitions this
-            # merge can write or delete — declare them, or the lake
-            # layer (whose _match_subset sees no common column between
-            # ['url'] and ['url_bucket']) conservatively rewrites every
-            # bucket, turning each update batch into a full-table rewrite
+            # merge can write or delete
+            upd = upd.persist()
             touched = [
-                str(r[0]) for r in upd.select("url_bucket").distinct().collect()
+                f"{graph_id}|{r[0]}"
+                for r in upd.select("url_bucket").distinct().collect()
             ]
         warehouse.extracted.merge_into(
-            upd, on=["url"], when_matched="update", batch_id=bid,
-            partition_by=["url_bucket"], touched_keys=touched,
+            upd, on=["graph_id", "url"], when_matched="update", batch_id=bid,
+            partition_by=["graph_id", "url_bucket"], touched_keys=touched,
         )
         if is_update:
             upd.unpersist()
-    extracted = warehouse.extracted.read(spark)
-
-    # ---- graph scope -------------------------------------------------
-    # The extracted table is SHARED url-keyed storage (a url's extraction
-    # is computed once, reused by every graph) — but a graph is defined
-    # by the pages handed to ITS runs (reference: one extraction run =
-    # one graph). When ANOTHER graph has ever written extraction into
-    # this warehouse, scope stages 2-4 to this graph's accumulated url
-    # set: this batch's urls ∪ urls already materialized for the graph.
-    # The check is pure metadata, from TWO durable signals:
-    # - the nodes table's partition keys (every graph ever materialized
-    #   — survives manifest vacuuming for as long as the graph lives),
-    # - extraction batch ids ({graph_id}[@suffix]/extracted), which
-    #   cover the crash window where a foreign FIRST run committed
-    #   extraction but died before materializing any node partition.
-    # A single-graph warehouse (the bulk path) never pays the scope join.
-    nodes_entry = warehouse.nodes.current_entry() if warehouse.nodes.exists() else None
-    foreign = set((nodes_entry or {}).get("partition_dirs") or {})
-    foreign |= {
-        bid.split("/", 1)[0].split("@", 1)[0]
-        for bid in warehouse.extracted.applied_batches()
-        if bid.endswith("/extracted") and not bid.startswith("stream/")
-    }
-    foreign -= {graph_id}
-    if foreign:
-        scope = pages.select("url").distinct()
-        prior = (warehouse.nodes.read_partitions(spark, [graph_id])
-                 if warehouse.nodes.exists() else None)
-        if prior is not None:
-            scope = scope.unionByName(prior.select("url")).distinct()
-        extracted = extracted.join(scope, on="url", how="left_semi")
+    # the manifest is the partition index: read ONLY this graph's
+    # partitions. None = the graph has no extracted rows (an empty
+    # batch): the stages below then run on an empty frame
+    extracted = warehouse.extracted.read_partitions(spark, g_keys)
+    if extracted is None:
+        extracted = warehouse.extracted.read(spark).limit(0)
+    counters["pages"] = _graph_rows(warehouse.extracted, graph_id)
 
     stage_s["extract"] = round(time.time() - t0, 2)
 
@@ -297,9 +279,7 @@ def run_pipeline(
         t0 = time.time()
         tbid = f"{graph_id}{sfx}/triples"
         if tbid not in warehouse.triples.applied_batches():
-            trip = with_url_bucket(
-                triples_table(extracted).withColumn("graph_id", F.lit(graph_id))
-            )
+            trip = with_graph_bucket(triples_table(extracted), graph_id)
             # dynamic partition overwrite: the stage regenerates this
             # graph's FULL triple set, so its partitions are replaced
             # wholesale — no read of the old rows, no anti-join; other
@@ -308,22 +288,10 @@ def run_pipeline(
             # runs either.
             warehouse.triples.overwrite_partitions(
                 trip, partition_by=["graph_id", "url_bucket"], batch_id=tbid,
-                touched_keys=[f"{graph_id}|{b}" for b in range(N_URL_BUCKETS)],
+                touched_keys=g_keys,
             )
         counters["triples"] = _graph_rows(warehouse.triples, graph_id)
         stage_s["triples"] = round(time.time() - t0, 2)
-
-        # Graph totals: on the single-graph bulk path the table IS the
-        # graph, so the count comes free from the manifest (stamped at
-        # commit). In a multi-graph warehouse the shared table
-        # over-counts — the graph's page count is the scoped frame's
-        # row count (urls are unique after the merge), worth one cheap
-        # scan on that rare path.
-        if foreign:
-            counters["pages"] = extracted.count()
-        else:
-            counters["pages"] = (
-                warehouse.extracted.current_entry() or {}).get("rows", 0)
 
         mat, mat_s = mat_future.result()
     counters.update(mat)

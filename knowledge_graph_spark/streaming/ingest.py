@@ -18,10 +18,11 @@ Also provides the classic streaming-analytics surface over the
 Scale notes:
 - ``maxFilesPerTrigger`` bounds micro-batch size so extraction cost per
   trigger is predictable;
-- the MERGE key set matches the batch path, so a page re-crawled in a
-  later batch updates its nodes (when_matched="update") but preserves
-  first-seen edge properties (when_matched="ignore") — identical
-  semantics to the reference's ON CREATE SET;
+- the MERGE keys and partition specs match the batch path (every
+  table keyed by graph), so a page re-crawled in a later batch updates
+  its nodes (when_matched="update") but preserves first-seen edge
+  properties (when_matched="ignore") — identical semantics to the
+  reference's ON CREATE SET;
 - checkpointLocation + LakeTable batch ids make crash/replay safe from
   both ends (source offsets AND sink idempotence).
 """
@@ -62,9 +63,12 @@ def start_kg_ingest(
     a pure O(batch) file APPEND — the accumulated tables are never read
     or rewritten per trigger (url keys hash across every partition
     bucket, so copy-on-write merges degenerate to O(table) as soon as a
-    batch exceeds ~bucket-count urls). Readers resolve each key to its
-    winning write: extracted/triples last-writer-wins (a re-crawl
-    replaces its rows; a re-crawl with ZERO triples tombstones them),
+    batch exceeds ~bucket-count urls). extracted and triples have the
+    batch path's layout: partitioned by (graph_id, url_bucket), keyed
+    by (graph_id, url), so a streamed graph's rows never mix with
+    another graph's. Readers resolve each key to its winning write:
+    extracted/triples last-writer-wins (a re-crawl replaces its rows;
+    a re-crawl with ZERO triples tombstones them),
     NODE rows last-writer-wins per (graph_id, id) — an entity absent
     from a re-crawl persists, exactly the reference's MERGE semantics
     (kg_writer.py:24 — MERGE updates, never deletes) — and edges
@@ -90,7 +94,7 @@ def start_kg_ingest(
     """
     from ..operators.extraction import extract, triples_table
     from ..operators.graph_build import materialize_graph
-    from ..pipeline import with_url_bucket
+    from ..pipeline import with_graph_bucket
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -117,19 +121,16 @@ def start_kg_ingest(
         # re-read the accumulated extracted table per trigger (that scan
         # is O(table), the opposite of incremental). persist() because
         # three tables consume it.
-        extracted = with_url_bucket(extract(batch_df)).persist()
+        extracted = with_graph_bucket(extract(batch_df), graph_id).persist()
         warehouse.extracted.merge_on_read(
-            extracted, on=["url"], seq=batch_id, policy="last",
-            batch_id=f"{bid}/extracted", partition_by=["url_bucket"],
+            extracted, on=["graph_id", "url"], seq=batch_id, policy="last",
+            batch_id=f"{bid}/extracted",
+            partition_by=["graph_id", "url_bucket"],
         )
-        trip = with_url_bucket(
-            triples_table(extracted).withColumn("graph_id", F.lit(graph_id))
-        )
+        trip = with_graph_bucket(triples_table(extracted), graph_id)
         # tombstone keys = the batch's full url set: a page whose
         # re-crawl now yields ZERO triples still clears its stale rows
-        batch_keys = with_url_bucket(extracted.select("url")).withColumn(
-            "graph_id", F.lit(graph_id)
-        )
+        batch_keys = with_graph_bucket(extracted.select("url"), graph_id)
         warehouse.triples.merge_on_read(
             trip, on=["graph_id", "url"], seq=batch_id, policy="last",
             batch_id=f"{bid}/triples", tombstone_keys=batch_keys,

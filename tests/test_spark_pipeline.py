@@ -200,7 +200,9 @@ def test_run_pipeline_job_budget(spark, tmp_path):
     collect plus a driver-side union-find (the component search used to
     checkpoint, count and collect, the mapping re-counted same_as and
     was persisted and counted again); 36 since. Counted as the delta of
-    the highest job id, the way the benchmark harness counts them."""
+    the highest job id, the way the benchmark harness counts them.
+    A second graph's first build into the same warehouse costs what the
+    first graph's does, and a 20-page re-crawl update stays within 42."""
     pages = generate_spark(spark, 200, partitions=4)
     wh = KGWarehouse(str(tmp_path))
     tracker = spark.sparkContext.statusTracker()
@@ -213,6 +215,23 @@ def test_run_pipeline_job_budget(spark, tmp_path):
     jobs = last_job() - j0
     assert c["linked_names"] > 0
     assert jobs <= 36, jobs
+
+    j0 = last_job()
+    c = run_pipeline(spark, generate_spark(spark, 200, partitions=4, start=200),
+                     wh, graph_id="g2", link_entities=True)
+    jobs = last_job() - j0
+    assert c["linked_names"] > 0
+    assert jobs <= 36, jobs
+
+    recrawl = generate_spark(spark, 20, partitions=2).withColumn(
+        "text", F.concat(F.coalesce("text", F.lit("")),
+                         F.lit("华星科技公司收购九州网络公司。")))
+    j0 = last_job()
+    c = run_pipeline(spark, recrawl, wh, graph_id="g1", link_entities=True,
+                     batch_suffix="r1")
+    jobs = last_job() - j0
+    assert c["pages"] == 200
+    assert jobs <= 42, jobs
 
 
 def test_run_pipeline_overlaps_linking_with_side_commits(spark, tmp_path,

@@ -202,12 +202,22 @@ def test_update_batch_rewrites_only_touched_partitions(spark, tmp_path):
         for k, v in wh.triples.current_entry()["partition_dirs"].items()
         if k.startswith("g1|")
     }
+    # the extraction table is keyed by graph too
+    g1_ext_dirs = {
+        k: list(v)
+        for k, v in wh.extracted.current_entry()["partition_dirs"].items()
+        if k.startswith("g1|")
+    }
+    assert g1_ext_dirs
     # update batch over g2 only
     run_pipeline(spark, generate_spark(spark, 20, 43, partitions=2), wh,
                  graph_id="g2", link_entities=False, batch_suffix="r2")
     e = wh.triples.current_entry()
     for k, paths in g1_dirs.items():
         assert e["partition_dirs"][k] == paths  # carried by reference
+    e = wh.extracted.current_entry()
+    for k, paths in g1_ext_dirs.items():
+        assert e["partition_dirs"][k] == paths
 
 
 def test_second_graph_scopes_to_its_own_pages(spark, tmp_path):
@@ -235,6 +245,44 @@ def test_second_graph_scopes_to_its_own_pages(spark, tmp_path):
                     .filter("graph_id = 'gB'").select("url")
                     .distinct().collect()}
     assert nodes_b_urls <= urls_b
+
+
+def test_other_graph_recrawl_does_not_leak_into_update(spark, tmp_path):
+    """Graph B re-crawls url U with new content; graph A's later update
+    batch over another url V must keep A's own extraction of U, and
+    A's pages counter must still count all of A's pages."""
+    wh = KGWarehouse(str(tmp_path))
+    pages = generate_spark(spark, 20, seed=7, partitions=2)
+    u, v = [r[0] for r in pages.select("url").orderBy("url").limit(2).collect()]
+    run_pipeline(spark, pages, wh, graph_id="A", link_entities=False)
+    recrawl = pages.filter(F.col("url") == u).withColumn(
+        "text", F.concat(F.coalesce("text", F.lit("")),
+                         F.lit("华星科技公司收购九州网络公司。")))
+    run_pipeline(spark, recrawl, wh, graph_id="B", link_entities=False)
+    c = run_pipeline(spark, pages.filter(F.col("url") == v), wh,
+                     graph_id="A", link_entities=False, batch_suffix="r2")
+    leaked = wh.triples.read(spark).filter(
+        (F.col("graph_id") == "A") & (F.col("url") == u)
+        & (F.col("subj") == "华星科技公司") & (F.col("pred") == "acquire")
+        & (F.col("obj") == "九州网络公司"))
+    assert leaked.count() == 0
+    assert c["pages"] == 20
+
+
+def test_empty_batch_reports_zero_counters(spark, tmp_path):
+    """An empty page batch builds an empty graph, in a fresh warehouse
+    and beside another graph alike."""
+    from knowledge_graph_spark.sources.pages import PAGES_SCHEMA
+
+    empty = spark.createDataFrame([], PAGES_SCHEMA)
+    wh = KGWarehouse(str(tmp_path / "fresh"))
+    c = run_pipeline(spark, empty, wh, graph_id="g1")
+    assert [c[k] for k in ("pages", "triples", "nodes", "edges")] == [0] * 4
+    wh = KGWarehouse(str(tmp_path / "beside"))
+    run_pipeline(spark, generate_spark(spark, 20, partitions=2), wh,
+                 graph_id="g1", link_entities=False)
+    c = run_pipeline(spark, empty, wh, graph_id="g2")
+    assert [c[k] for k in ("pages", "triples", "nodes", "edges")] == [0] * 4
 
 
 # ---------------------------------------------------------------------------

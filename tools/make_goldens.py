@@ -808,7 +808,7 @@ def main() -> None:
     print("KG pipeline twin (300 + 60 pages, two graphs / two users)...")
     corpus_a = extract_corpus(KG_PAGES, 0)
     corpus_b = extract_corpus(KG_PAGES_B, KG_PAGES)
-    # kg_triples / kg_entities read the SHARED url-keyed tables — both
+    # kg_triples / kg_entities read every graph's partitions — both
     # graphs' pages appear (urls are disjoint by construction)
     corpus = corpus_a + corpus_b
 
