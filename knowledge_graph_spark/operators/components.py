@@ -11,8 +11,10 @@ Kiveris et al., "Connected Components in MapReduce and Beyond"
 
 Execution is size-adaptive: an edge set of at most ``_DRIVER_EDGES``
 edges solves with driver-side union-find (:func:`canonical_mapping`
-collects its same-as pairs in one action and resolves names on the
-driver); larger ones run the distributed star rounds below. Algorithm (node labels are 64-bit longs):
+collects its same-as pairs in one action, and
+:func:`local_canonical_mapping` resolves the names on the driver);
+larger ones run the distributed star rounds below. Algorithm (node
+labels are 64-bit longs):
 - large-star: for each edge (u,v) with v > u, point v at the minimum
   neighbour of u (including u). Implemented as groupBy(u).min + join.
 - small-star: symmetric for v <= u.
@@ -37,7 +39,7 @@ acceptable for canonicalization); its driver path works on the names.
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 #: edge count up to which a graph is "small enough for the driver":
 #: connected_components and canonical_mapping solve it with local
@@ -178,6 +180,38 @@ def connected_components(
     )
 
 
+def local_canonical_mapping(
+    spark: SparkSession, pairs: list[tuple[str, str]]
+) -> tuple[DataFrame, int]:
+    """Same-as pairs in hand -> ((name, canonical_name) frame, its row
+    count): union-find on the names themselves, and each component's
+    representative is its member with the minimum (length, name).
+    Python's ``len`` and ``str`` ordering agree with Spark's ``length``
+    (code points) and string ordering (UTF-8 bytes, which sort as code
+    points), so it is the distributed path's rule.
+
+    The mapping is handed to Spark as an Arrow table, whose batches the
+    JVM decodes itself: evaluating it (a count, the broadcast in a
+    join) starts no Python worker, unlike a ``parallelize`` of pickled
+    rows. (A pandas frame would take that pickled path when it is empty
+    or when Arrow conversion is switched off.) ``coalesce(1)`` keeps it
+    a single slice, so a few thousand rows are not spread over every
+    core. The row count comes from the driver, so a caller needs no
+    count job."""
+    labels = _union_find_local(pairs)
+    rep: dict = {}
+    for name, root in labels:
+        rep[root] = min(rep.get(root, name), name, key=lambda n: (len(n), n))
+    table = pa.table({
+        "name": pa.array([name for name, _ in labels], pa.string()),
+        "canonical_name": pa.array(
+            [rep[root] for _, root in labels], pa.string()),
+    })
+    frame = spark.createDataFrame(
+        table, "name string, canonical_name string").coalesce(1)
+    return frame, len(labels)
+
+
 def canonical_mapping(same_as: DataFrame) -> DataFrame:
     """same_as(name_a, name_b) -> (name, canonical_name).
 
@@ -186,18 +220,9 @@ def canonical_mapping(same_as: DataFrame) -> DataFrame:
     the shortest, then lexicographically first, surface form.
 
     Up to ``_DRIVER_EDGES`` pairs this is one action: the pairs are
-    collected, union-find runs on the names themselves, and the
-    representative is picked on the driver. Python's ``len`` and
-    ``str`` ordering agree with Spark's ``length`` (code points) and
-    string ordering (UTF-8 bytes, which sort as code points), so it is
-    the same rule as the distributed path. The mapping is handed to
-    Spark as an Arrow table, whose batches the JVM decodes itself:
-    evaluating it (the caller's count, the broadcast in a join) starts
-    no Python worker, unlike a ``parallelize`` of pickled rows. (A
-    pandas frame would take that pickled path when it is empty or
-    when Arrow conversion is switched off.) ``coalesce(1)`` keeps it a
-    single slice, so a few thousand rows are not spread over every
-    core.
+    collected and :func:`local_canonical_mapping` resolves them on the
+    driver. (``run_pipeline``'s driver linking path calls that helper
+    directly with the pairs it already holds.)
 
     Above ``_DRIVER_EDGES`` names are hashed to longs for the
     distributed component search, and each component's representative
@@ -209,17 +234,7 @@ def canonical_mapping(same_as: DataFrame) -> DataFrame:
     same_as = same_as.select("name_a", "name_b").dropna()
     rows = same_as.limit(_DRIVER_EDGES + 1).collect()
     if len(rows) <= _DRIVER_EDGES:
-        labels = _union_find_local([(a, b) for a, b in rows])
-        rep: dict = {}
-        for name, root in labels:
-            rep[root] = min(rep.get(root, name), name, key=lambda n: (len(n), n))
-        table = pa.table({
-            "name": pa.array([name for name, _ in labels], pa.string()),
-            "canonical_name": pa.array(
-                [rep[root] for _, root in labels], pa.string()),
-        })
-        return spark.createDataFrame(
-            table, "name string, canonical_name string").coalesce(1)
+        return local_canonical_mapping(spark, rows)[0]
 
     h = lambda c: F.xxhash64(F.col(c))
     edges = same_as.select(h("name_a").alias("u"), h("name_b").alias("v"))

@@ -35,11 +35,11 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators import graph_build
-from .operators.components import canonical_mapping
+from .operators.components import canonical_mapping, local_canonical_mapping
 from .operators.extraction import (
     entities_table, extract, relations_table, triples_table,
 )
-from .operators.linking import same_as_edges
+from .operators.linking import same_as_edges, same_as_frame, same_as_local
 from .sources.lake import LakeTable
 
 
@@ -143,16 +143,24 @@ def run_pipeline(
     CONTRACT above.
 
     SCHEDULE: after extraction commits, the rest runs as the dependency
-    graph it is. The critical chain is the nodes commit -> linking
-    (``same_as``) -> the canonical overwrite of the node partition; it
-    starts as soon as the nodes land. Side work reads only the
-    committed extraction and runs beside the chain on driver threads:
-    the triples overwrite, the edges and dropped commits and the
-    counter aggregate. All of it is joined before ``vacuum``; an
-    exception in any task surfaces from this call. ``stage_seconds``
-    holds each stage's own elapsed time (``materialize`` excludes the
-    chain it carries), so the entries overlap and may sum to more than
-    the wall time.
+    graph it is. The critical chain is the nodes commit -> linking ->
+    the canonical overwrite of the node partition; it starts as soon as
+    the nodes land. Linking takes one of two paths, chosen by the
+    graph's distinct-name count alone (``operators/linking.py``): up to
+    ``_DRIVER_NAMES`` names, one collect puts the same_as pairs in hand
+    on the driver, and the ``same_as`` commit runs on a side thread
+    beside the canonical overwrite, whose mapping comes from the same
+    pairs (no read-back, no second collect); above it, the Spark path
+    commits ``same_as`` first and the canonical mapping reads it back.
+    Side work reads only the committed extraction and runs beside the
+    chain on driver threads: the triples overwrite, the edges and
+    dropped commits and the counter aggregate. All of it is joined
+    before ``vacuum``; an exception in any task surfaces from this
+    call. ``stage_seconds`` holds each stage's own elapsed time
+    (``materialize`` excludes the chain it carries; ``linking`` ends
+    when the pairs are in hand, or on the Spark path when ``same_as``
+    has committed, and ``canonicalize`` holds the rest of the chain),
+    so the entries overlap and may sum to more than the wall time.
     """
     graph_id = graph_id or default_graph_id()
     if canonicalize:
@@ -225,35 +233,61 @@ def run_pipeline(
             linked["linked_names"] = 0
             return
         names = g_nodes.select("name")
-        # graph-scoped partition: the same_as table is shared by every
-        # graph in the warehouse, so a plain overwrite() would let this
-        # run clobber another graph's links — and a crash-resume (the
-        # same_as batch already applied, canonical not) would then
-        # canonicalize THIS graph with whatever graph wrote last
-        links = same_as_edges(names).withColumn("graph_id", F.lit(graph_id))
-        warehouse.same_as.overwrite_partitions(
-            links, partition_by=["graph_id"],
-            batch_id=f"{graph_id}{sfx}/same_as", touched_keys=[graph_id],
-        )
-        chain_s["linking"] = time.time() - t0
-        t0 = time.time()
-        # read back THIS graph's partition (authoritative on resume);
-        # a linkless graph writes no partition dir — fall back to the
-        # in-hand (empty) frame
-        g_links = warehouse.same_as.read_partitions(spark, [graph_id])
-        mapping = canonical_mapping(
-            g_links if g_links is not None else links)
-        linked["linked_names"] = mapping.count()
-        canon = g_nodes.join(F.broadcast(mapping), on="name", how="left").withColumn(
-            "canonical_id", F.coalesce("canonical_name", "name")
-        ).drop("canonical_name")
-        # dynamic partition overwrite: canon IS the full refreshed
-        # content of this graph's partition — replace it wholesale
-        # (no read-back anti-join); other graphs' partitions carried
-        warehouse.nodes.overwrite_partitions(
-            canon, partition_by=["graph_id"],
-            batch_id=f"{graph_id}{sfx}/canonical", touched_keys=[graph_id],
-        )
+
+        def commit_links(links):
+            # graph-scoped partition: the same_as table is shared by
+            # every graph in the warehouse, so a plain overwrite() would
+            # let this run clobber another graph's links
+            warehouse.same_as.overwrite_partitions(
+                links.withColumn("graph_id", F.lit(graph_id)),
+                partition_by=["graph_id"],
+                batch_id=f"{graph_id}{sfx}/same_as", touched_keys=[graph_id],
+            )
+
+        def commit_canonical(mapping):
+            canon = g_nodes.join(
+                F.broadcast(mapping), on="name", how="left"
+            ).withColumn(
+                "canonical_id", F.coalesce("canonical_name", "name")
+            ).drop("canonical_name")
+            # dynamic partition overwrite: canon IS the full refreshed
+            # content of this graph's partition — replace it wholesale
+            # (no read-back anti-join); other graphs' partitions carried
+            warehouse.nodes.overwrite_partitions(
+                canon, partition_by=["graph_id"],
+                batch_id=f"{graph_id}{sfx}/canonical", touched_keys=[graph_id],
+            )
+
+        # a small vocabulary links on the driver from one collect
+        pairs = same_as_local(names)
+        if pairs is None:
+            links = same_as_edges(names)
+            commit_links(links)
+            chain_s["linking"] = time.time() - t0
+            t0 = time.time()
+            # read back THIS graph's partition: a crash-resume (the
+            # same_as batch applied, canonical not) must canonicalize
+            # with the committed links; a linkless graph writes no
+            # partition dir — fall back to the in-hand (empty) frame
+            g_links = warehouse.same_as.read_partitions(spark, [graph_id])
+            mapping = canonical_mapping(
+                g_links if g_links is not None else links)
+            linked["linked_names"] = mapping.count()
+            commit_canonical(mapping)
+        else:
+            chain_s["linking"] = time.time() - t0
+            t0 = time.time()
+            # both commits read the pairs in hand, not each other, so
+            # they run side by side; recomputing the pairs on a resume
+            # gives the committed ones, as they come from the same
+            # committed node partition
+            mapping, linked["linked_names"] = local_canonical_mapping(
+                spark, [(a, b) for a, b, _ in pairs])
+            with ThreadPoolExecutor(max_workers=1) as side:
+                links_done = side.submit(
+                    commit_links, same_as_frame(spark, pairs))
+                commit_canonical(mapping)
+                links_done.result()
         chain_s["canonicalize"] = time.time() - t0
 
     def _materialize():

@@ -9,7 +9,8 @@ from knowledge_graph_spark.operators.components import (
     canonical_mapping, connected_components,
 )
 from knowledge_graph_spark.operators.linking import (
-    candidate_pairs, same_as_edges, scored_pairs,
+    candidate_pairs, same_as_edges, same_as_frame, same_as_local,
+    scored_pairs,
 )
 
 
@@ -81,6 +82,85 @@ def test_same_as_prefix_abbreviation_rule(spark):
     assert any({l["name_a"], l["name_b"]} == {"华星科技公司", "华星科技"} for l in links)
     # unrelated names never link
     assert not any("青云数据中心" in (l["name_a"], l["name_b"]) for l in links)
+
+
+def _linking_names(spark):
+    """generate_spark node names plus the edge cases of the linking
+    contract: a NULL name, "", 1-char names, a 2-char name that
+    prefixes a 3-char one (a candidate pair below the prefix rule's
+    3-char floor and the cosine threshold), and 70 alternating
+    abab…/baba… names (lengths 3-37) that share the bigram set
+    {ab, ba}, so all eight band keys collide in one 70-name bucket."""
+    from knowledge_graph_spark.operators.extraction import (
+        entities_table, extract,
+    )
+    from knowledge_graph_spark.sources.pages import generate_spark
+
+    gen = [r["name"] for r in entities_table(extract(
+        generate_spark(spark, 400, seed=101, partitions=4)))
+        .select("name").distinct().collect()]
+    alternating = ["".join("ab"[(i + s) % 2] for i in range(n))
+                   for n in range(3, 38) for s in (0, 1)]
+    rows = gen + [None, "", "华", "星", "a", "b", "xy", "xyz"] + alternating
+    return spark.createDataFrame([(n,) for n in rows], "name string"), \
+        set(alternating)
+
+
+def test_same_as_local_matches_spark_path(spark, monkeypatch):
+    """The driver path (one collect, scored in Python) and the Spark
+    path give identical pair sets with scores within 1e-12. Both drop
+    the oversized alternating bucket at max_bucket=64 and both keep it
+    at 128; above _DRIVER_NAMES the driver path declines (None). The
+    driver path's frame has the Spark path's schema."""
+    from knowledge_graph_spark.operators import linking
+
+    names, alternating = _linking_names(spark)
+    for max_bucket in (64, 128):
+        spark_pairs = {(r["name_a"], r["name_b"]): r["score"] for r in
+                       same_as_edges(names, max_bucket=max_bucket).collect()}
+        local = same_as_local(names, max_bucket=max_bucket)
+        assert local == sorted(local)
+        local_pairs = {(a, b): s for a, b, s in local}
+        assert local_pairs.keys() == spark_pairs.keys(), max_bucket
+        assert max(abs(local_pairs[k] - spark_pairs[k])
+                   for k in spark_pairs) <= 1e-12
+        in_alternating = {k for k in local_pairs
+                          if k[0] in alternating and k[1] in alternating}
+        assert bool(in_alternating) == (max_bucket == 128)
+    assert len(local_pairs) > 100
+    assert not any(None in k or "" in k for k in local_pairs)
+    assert ("xy", "xyz") not in local_pairs
+    assert same_as_frame(spark, local).schema == same_as_edges(names).schema
+    assert same_as_frame(spark, []).schema == same_as_edges(names).schema
+
+    monkeypatch.setattr(linking, "_DRIVER_NAMES", 10)
+    assert same_as_local(names) is None
+
+
+def test_candidate_pairs_row_local_band_keys_match_minhash_aggregate(spark):
+    """candidate_pairs computes each name's minhashes row-locally
+    (_band_keys); that gives the same pairs as the min-hash aggregate
+    over exploded shingles that it replaced."""
+    from knowledge_graph_spark.operators.dedup import _bucket_pairs
+    from knowledge_graph_spark.operators.linking import (
+        BANDS, N_HASHES, _shingles,
+    )
+
+    names, _ = _linking_names(spark)
+    distinct = names.select("name").distinct()
+    sig = distinct.select(
+        "name", F.explode(_shingles("name")).alias("shingle")
+    ).groupBy("name").agg(*[
+        F.min(F.xxhash64("shingle", F.lit(k))).alias(f"mh{k}")
+        for k in range(N_HASHES)])
+    banded = sig.select("name", F.explode(F.array(*[
+        F.xxhash64(F.lit(b), F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
+        for b in range(BANDS)])).alias("band_key"))
+    want = {tuple(r) for r in _bucket_pairs(
+        banded, ["band_key"], 64, F.col("name")).collect()}
+    got = {tuple(r) for r in candidate_pairs(names).collect()}
+    assert got == want and len(got) > 100
+    assert ("xy", "xyz") in got
 
 
 def test_canonical_mapping_shortest_representative(spark):

@@ -126,8 +126,10 @@ def test_crash_after_extraction_resumes_without_reparse(spark, tmp_path, monkeyp
 
 
 def test_side_commit_failure_surfaces_and_resumes(spark, tmp_path, monkeypatch):
-    """The edges commit runs on a pool thread while the linking chain
-    proceeds. Its failure must surface from run_pipeline, and a re-run
+    """Two commits run on side threads: the edges commit on a pool
+    thread while the linking chain proceeds, and, when the graph links
+    on the driver, the same_as commit beside the canonical overwrite.
+    Each one's failure must surface from run_pipeline, and a re-run
     must finish the graph without re-parsing: the same tables and
     snapshot totals as an uninterrupted run."""
     import knowledge_graph_spark.pipeline as P
@@ -137,36 +139,42 @@ def test_side_commit_failure_surfaces_and_resumes(spark, tmp_path, monkeypatch):
     wh_ref = KGWarehouse(str(tmp_path / "ref"))
     ref = run_pipeline(spark, pages, wh_ref, graph_id="g1", link_entities=True)
 
-    real_merge = LakeTable.merge_into
-
-    def failing_edges(self, *a, **kw):
-        if (kw.get("batch_id") or "").endswith("/edges"):
-            raise RuntimeError("injected edges failure")
-        return real_merge(self, *a, **kw)
-
-    wh = KGWarehouse(str(tmp_path / "crash"))
-    monkeypatch.setattr(LakeTable, "merge_into", failing_edges)
-    with pytest.raises(RuntimeError, match="injected edges failure"):
-        run_pipeline(spark, pages, wh, graph_id="g1", link_entities=True)
-    monkeypatch.setattr(LakeTable, "merge_into", real_merge)
-    assert "g1/edges" not in wh.edges.applied_batches()
-
     def no_extract(*a, **kw):
         raise AssertionError("extraction re-ran on resume")
-
-    monkeypatch.setattr(P, "extract", no_extract)
-    got = run_pipeline(spark, pages, wh, graph_id="g1", link_entities=True)
 
     def rows(table):
         df = table.read(spark)
         return sorted((repr(tuple(r)) for r in
                        df.select(*sorted(df.columns)).collect()))
 
-    for name in ("triples", "nodes", "edges", "dropped", "same_as"):
-        assert rows(getattr(wh, name)) == rows(getattr(wh_ref, name)), name
-    for k in ("nodes_total", "edges_total", "dropped_total", "triples",
-              "pages", "linked_names"):
-        assert got[k] == ref[k], k
+    for method, stage in (("merge_into", "edges"),
+                          ("overwrite_partitions", "same_as")):
+        real = getattr(LakeTable, method)
+
+        def failing(self, *a, _real=real, _stage=stage, **kw):
+            if (kw.get("batch_id") or "").endswith(f"/{_stage}"):
+                raise RuntimeError(f"injected {_stage} failure")
+            return _real(self, *a, **kw)
+
+        wh = KGWarehouse(str(tmp_path / stage))
+        with monkeypatch.context() as m:
+            m.setattr(LakeTable, method, failing)
+            with pytest.raises(RuntimeError, match=f"injected {stage} failure"):
+                run_pipeline(spark, pages, wh, graph_id="g1",
+                             link_entities=True)
+        assert f"g1/{stage}" not in getattr(wh, stage).applied_batches()
+
+        with monkeypatch.context() as m:
+            m.setattr(P, "extract", no_extract)
+            got = run_pipeline(spark, pages, wh, graph_id="g1",
+                               link_entities=True)
+
+        for name in ("triples", "nodes", "edges", "dropped", "same_as"):
+            assert rows(getattr(wh, name)) == rows(getattr(wh_ref, name)), \
+                (stage, name)
+        for k in ("nodes_total", "edges_total", "dropped_total", "triples",
+                  "pages", "linked_names"):
+            assert got[k] == ref[k], (stage, k)
 
 
 def test_second_update_batch_with_linking_schema_stable(spark, tmp_path):
@@ -222,8 +230,9 @@ def test_update_batch_rewrites_only_touched_partitions(spark, tmp_path):
 
 def test_second_graph_scopes_to_its_own_pages(spark, tmp_path):
     """A second graph built into the SAME warehouse must contain only
-    its own pages — the shared extracted table is url-keyed storage,
-    not graph membership (round-3 graph scoping)."""
+    its own pages: every stage reads only its graph's partitions of the
+    graph-keyed extracted table, and ``pages`` counts that graph's
+    extracted rows."""
     wh = KGWarehouse(str(tmp_path))
     pages_a = generate_spark(spark, 20, partitions=2)
     run_pipeline(spark, pages_a, wh, graph_id="gA", link_entities=False)

@@ -1,11 +1,15 @@
 # -*- coding: utf-8 -*-
 """Per-job timeline of a Spark event log.
 
-Usage: python tools/eventlog_report.py <event-log file>
+Usage: python tools/eventlog_report.py <event-log file or directory>
 
 Reads an uncompressed JSON-lines event log (run Spark with
 ``spark.eventLog.enabled=true`` and ``spark.eventLog.compress=false``;
-Spark 4 compresses with zstd by default) and prints one row per job:
+Spark 4 compresses with zstd by default) and prints one row per job.
+Spark 4.1's default log is a rolling directory, ``eventlog_v2_<app>``,
+of ``events_<n>_<app>`` parts beside an ``appstatus_<app>`` marker;
+pass the directory and its parts are read in ``<n>`` order. A plain
+single-file log works too. Each row shows the job's
 start offset from the first job's submission, duration, stages, tasks
 and the job description. LakeTable commits describe their write jobs
 with the commit's batch id (``g1/nodes``, ``g1/same_as``), so a
@@ -17,31 +21,53 @@ from the first job's start to the last job's end in which no job ran.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 
+def event_files(path: str) -> list[str]:
+    """The files of the event log at ``path`` in write order: a plain
+    log is the file itself; a rolling log's directory holds its
+    ``events_<n>_<app>`` parts, taken in ``<n>`` order (numeric, so
+    part 10 follows part 9), and its ``appstatus`` marker is skipped."""
+    if not os.path.isdir(path):
+        return [path]
+    parts = []
+    for name in os.listdir(path):
+        n = name.split("_")[1] if name.startswith("events_") else ""
+        if n.isdigit():
+            parts.append((int(n), name))
+    return [os.path.join(path, name) for _, name in sorted(parts)]
+
+
+def _events(path: str):
+    for part in event_files(path):
+        with open(part, "r", encoding="utf-8") as f:
+            for line in f:
+                yield json.loads(line)
+
+
 def read_jobs(path: str) -> list[dict]:
-    """Jobs of the event log, by submission time: ``id``, ``start`` and
-    ``end`` (epoch s; ``end`` None for a job that never finished),
-    ``stages``, ``tasks`` and ``description``."""
+    """Jobs of the event log at ``path`` (a file or a rolling-log
+    directory), by submission time: ``id``, ``start`` and ``end``
+    (epoch s; ``end`` None for a job that never finished), ``stages``,
+    ``tasks`` and ``description``."""
     jobs: dict[int, dict] = {}
-    with open(path, "r", encoding="utf-8") as f:
-        for line in f:
-            ev = json.loads(line)
-            kind = ev.get("Event")
-            if kind == "SparkListenerJobStart":
-                infos = ev.get("Stage Infos") or []
-                props = ev.get("Properties") or {}
-                jobs[ev["Job ID"]] = {
-                    "id": ev["Job ID"],
-                    "start": ev["Submission Time"] / 1000.0,
-                    "end": None,
-                    "stages": len(infos),
-                    "tasks": sum(s.get("Number of Tasks", 0) for s in infos),
-                    "description": props.get("spark.job.description") or "",
-                }
-            elif kind == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
-                jobs[ev["Job ID"]]["end"] = ev["Completion Time"] / 1000.0
+    for ev in _events(path):
+        kind = ev.get("Event")
+        if kind == "SparkListenerJobStart":
+            infos = ev.get("Stage Infos") or []
+            props = ev.get("Properties") or {}
+            jobs[ev["Job ID"]] = {
+                "id": ev["Job ID"],
+                "start": ev["Submission Time"] / 1000.0,
+                "end": None,
+                "stages": len(infos),
+                "tasks": sum(s.get("Number of Tasks", 0) for s in infos),
+                "description": props.get("spark.job.description") or "",
+            }
+        elif kind == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
+            jobs[ev["Job ID"]]["end"] = ev["Completion Time"] / 1000.0
     return sorted(jobs.values(), key=lambda j: (j["start"], j["id"]))
 
 
