@@ -31,9 +31,10 @@ which hash-partition on the merge key.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import job_description
 
 # sanitized pattern per kg_writer.py:13
 _VALID_REL = r"^[A-Za-z0-9_]+$"
@@ -80,10 +81,11 @@ def build_nodes(entities: DataFrame, graph_id: str, user_id: str) -> DataFrame:
     Node id namespaced by url hash; pure projection, no shuffle.
 
     ``canonical_id`` defaults to ``name`` so the node schema is STABLE
-    across pipeline stages: the linking stage (pipeline.py stage 4)
-    overwrites it with the component representative, and any later
-    merge (update batch, streaming micro-batch) unions against the
-    same column set — schema drift across runs was a crash."""
+    across pipeline stages: ``run_pipeline`` links before the nodes
+    land and stamps the component representative into the one node
+    write (:func:`with_canonical_ids`), and any later merge (update
+    batch, streaming micro-batch) unions against the same column set —
+    schema drift across runs was a crash."""
     return entities.select(
         F.lit(graph_id).alias("graph_id"),
         F.lit(user_id).alias("user_id"),
@@ -209,6 +211,47 @@ def build_graph_tables(
     return nodes, edges, dropped
 
 
+def merged_nodes(nodes: DataFrame, nodes_table, graph_id: str) -> DataFrame:
+    """The graph's node partition after ``nodes`` MERGE..SET into it on
+    ``(graph_id, id)``: the new rows, plus the committed rows whose id
+    the batch does not carry — the rows ``merge_into(when_matched=
+    "update")`` would write. Its names are the graph's vocabulary: a
+    replaced row's old name is gone from it. Lazy; the committed
+    partition is read only when the result is evaluated."""
+    old = nodes_table.read_partitions(nodes.sparkSession, [graph_id])
+    return nodes_table.merged(old, nodes, ["graph_id", "id"], "update")
+
+
+def with_canonical_ids(nodes: DataFrame, mapping: DataFrame) -> DataFrame:
+    """``nodes`` with ``canonical_id`` set to the component
+    representative of the row's name, from ``mapping(name,
+    canonical_name)`` joined in through a broadcast; a name outside
+    every component is its own representative. Columns keep their
+    order, so the write keeps the table's schema."""
+    return nodes.join(F.broadcast(mapping), on="name", how="left").withColumn(
+        "canonical_id", F.coalesce("canonical_name", "name")
+    ).select(*nodes.columns)
+
+
+def commit_nodes(nodes_table, nodes: DataFrame, graph_id: str,
+                 batch_id: str) -> dict:
+    """Write the graph's node partition once: ``nodes`` is its full
+    content (:func:`merged_nodes`), so a dynamic partition overwrite
+    replaces it wholesale and carries every other graph's partition."""
+    return nodes_table.overwrite_partitions(
+        nodes, partition_by=["graph_id"], touched_keys=[graph_id],
+        batch_id=batch_id)
+
+
+def snapshot_rows(table, result: dict) -> int:
+    """The table's row count after a commit that returned ``result``.
+    An idempotent resume skips the commit; the snapshot size then comes
+    from the manifest's current entry instead of collapsing to 0."""
+    if result.get("skipped", False):
+        return (table.current_entry() or {}).get("rows", 0)
+    return result.get("rows", 0)
+
+
 def materialize_graph(
     extracted: DataFrame,
     nodes_table,
@@ -218,7 +261,6 @@ def materialize_graph(
     user_id: str = "user_001",
     batch_id: str | None = None,
     mor_seq: int | None = None,
-    after_nodes: Callable[[], None] | None = None,
 ) -> dict:
     """End-to-end: nested extraction result -> MERGE INTO node/edge
     LakeTables, with counters recorded in the snapshot lineage.
@@ -233,10 +275,12 @@ def materialize_graph(
     nodes resolve last-writer-wins (MERGE..SET), edges first-writer-wins
     (ON CREATE SET).
 
-    ``after_nodes`` runs on the nodes-commit thread as soon as that
-    commit lands, beside the edge and dropped commits and the counter
-    aggregate (``run_pipeline`` links there: linking reads only the
-    node partition). Its exception surfaces from this call.
+    ``nodes_table=None`` leaves the node partition to the caller:
+    ``run_pipeline`` links the graph's vocabulary first and writes the
+    partition once, canonical ids stamped (:func:`merged_nodes`,
+    :func:`with_canonical_ids`, :func:`commit_nodes`), while the edge
+    and dropped commits and the counter aggregate run here. The result
+    then has no ``nodes_total``.
 
     One Spark job per table, ZERO joins: nodes/edges/dropped all derive
     from the nested extraction result with row-local operations
@@ -283,11 +327,9 @@ def materialize_graph(
                 nodes, on=["graph_id", "id"], seq=mor_seq, policy="last",
                 batch_id=f"{bid}/nodes", partition_by=["graph_id"],
             )
-        return nodes_table.merge_into(nodes, on=["graph_id", "id"],
-                                      when_matched="update",
-                                      batch_id=f"{bid}/nodes",
-                                      partition_by=["graph_id"],
-                                      touched_keys=[graph_id])
+        return commit_nodes(nodes_table,
+                            merged_nodes(nodes, nodes_table, graph_id),
+                            graph_id, f"{bid}/nodes")
 
     def _commit_edges():
         if mor_seq is not None:
@@ -318,20 +360,16 @@ def materialize_graph(
             dropped, partition_by=["graph_id"],
             touched_keys=[graph_id], batch_id=f"{bid}/dropped")
 
-    def _nodes_then():
-        r = _commit_nodes()
-        if after_nodes is not None:
-            after_nodes()
-        return r
-
     # per-batch deltas under the original keys (what THIS batch
     # produced: entity mentions, valid relations pre-dedupe, quarantined
     # relations; an idempotent resume reports 0) — ONE aggregate job
     # over the nested extraction result, not three table counts. The
     # *_total keys carry the snapshot sizes from the manifest for free.
     # It runs beside the commits, so "resume" is decided before any of
-    # them lands, by the test the nodes commit applies itself
-    resumed = f"{bid}/nodes" in nodes_table.applied_batches()
+    # them lands, by the test the edges commit applies itself (this
+    # call always makes that commit; the nodes commit may be the
+    # caller's)
+    resumed = f"{bid}/edges" in edges_table.applied_batches()
 
     def _stats():
         if resumed:
@@ -350,34 +388,29 @@ def materialize_graph(
         def n(c):
             return F.sum(F.greatest(F.size(c), F.lit(0)))
 
-        stats = extracted.select(
-            n("entities").alias("n_nodes"), n(valid).alias("n_valid"),
-            n("relations").alias("n_rel"),
-        ).first()
+        with job_description(extracted.sparkSession, f"{bid}/stats"):
+            stats = extracted.select(
+                n("entities").alias("n_nodes"), n(valid).alias("n_valid"),
+                n("relations").alias("n_rel"),
+            ).first()
         n_valid = stats["n_valid"] or 0
         return (stats["n_nodes"] or 0, n_valid,
                 (stats["n_rel"] or 0) - n_valid)
 
-    # the nodes commit starts first: the chain hangs off it, and
-    # Spark's FIFO scheduler serves the job it receives first
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = [pool.submit(f) for f in
-                   (_nodes_then, _commit_edges, _commit_dropped, _stats)]
-    r1, r2, r3, (n_nodes, n_valid, n_dropped) = [f.result() for f in futures]
-
-    def _total(table, r):
-        # an idempotent resume skips the commit; the snapshot size
-        # then comes from the manifest's current entry instead of
-        # collapsing to 0 (the docstring's *_total contract)
-        if r.get("skipped", False):
-            return (table.current_entry() or {}).get("rows", 0)
-        return r.get("rows", 0)
-
-    return {
+    tasks = [_commit_edges, _commit_dropped, _stats]
+    if nodes_table is not None:
+        tasks.insert(0, _commit_nodes)
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futures = [pool.submit(f) for f in tasks]
+    *r_nodes, r_edges, r_dropped, (n_nodes, n_valid, n_dropped) = [
+        f.result() for f in futures]
+    out = {
         "nodes": n_nodes,
         "edges": n_valid,
         "dropped_relations": n_dropped,
-        "nodes_total": _total(nodes_table, r1),
-        "edges_total": _total(edges_table, r2),
-        "dropped_total": _total(dropped_table, r3),
+        "edges_total": snapshot_rows(edges_table, r_edges),
+        "dropped_total": snapshot_rows(dropped_table, r_dropped),
     }
+    if r_nodes:
+        out["nodes_total"] = snapshot_rows(nodes_table, r_nodes[0])
+    return out

@@ -34,10 +34,11 @@ bounded-vocabulary data.
 
 The driver path (:func:`same_as_local`) gives the same pairs for a
 graph of at most ``_DRIVER_NAMES`` distinct names. ONE Spark action
-collects every distinct name with its shingle set and its band keys
-(Spark still computes every hash); bucketing, the skew guard, the IDF
-weights, the cosine and both same_as rules then run in Python over the
-collected features. At a few thousand names that scoring is
+(:func:`collect_features`) collects every distinct name with its shingle
+set and its band keys (Spark still computes every hash); bucketing,
+the skew guard, the IDF weights, the cosine and both same_as rules
+then run in Python over the collected features
+(:func:`score_features`). At a few thousand names that scoring is
 milliseconds of set intersection, while the Spark path pays the fixed
 latency of ~14 serial jobs (two checkpoints, a count, the AQE stages of
 the scoring plan). Above the limit it returns None and the caller runs
@@ -214,17 +215,33 @@ def same_as_edges(
     )
 
 
-def same_as_local(
-    names: DataFrame, threshold: float = 0.9, max_bucket: int = 64
-) -> list[tuple[str, str, float]] | None:
-    """:func:`same_as_edges` on the driver, for a small vocabulary:
-    the same pairs as sorted ``(name_a, name_b, score)`` tuples, or
-    None when ``names`` holds more than ``_DRIVER_NAMES`` distinct
-    names (the caller then runs the Spark path).
+def name_features(names: DataFrame) -> DataFrame:
+    """The driver path's features, lazily: each distinct name of
+    ``names`` with its distinct shingles and its ``BANDS`` band keys.
+    :func:`collect_features` brings them to the driver."""
+    return (
+        names.select("name").distinct()
+        .select("name", F.array_distinct(_shingles("name")).alias("shingles"))
+        .select("name", "shingles", _band_keys("shingles").alias("bands"))
+    )
 
-    One Spark action collects each distinct name's distinct shingles
-    and band keys. The rest mirrors :func:`scored_pairs` and
-    :func:`same_as_edges` rule for rule:
+
+def collect_features(features: DataFrame) -> list | None:
+    """The driver path's one Spark action: the :func:`name_features`
+    rows, or None when there are more than ``_DRIVER_NAMES`` of them
+    (the caller then links on the Spark path). :func:`score_features`
+    scores the rows."""
+    rows = features.limit(_DRIVER_NAMES + 1).collect()
+    return None if len(rows) > _DRIVER_NAMES else rows
+
+
+def score_features(
+    rows: list, threshold: float = 0.9, max_bucket: int = 64
+) -> tuple[list[tuple[str, str, float]], dict]:
+    """:func:`same_as_edges` in Python over :func:`collect_features` rows:
+    ``(pairs, guard)``, the pairs as sorted ``(name_a, name_b, score)``
+    tuples. It mirrors :func:`scored_pairs` and :func:`same_as_edges`
+    rule for rule:
 
     - N counts every distinct name, NULL included (``distinct.count()``);
       ``idf(g) = ln(1 + N/df(g))``, df over the names holding g.
@@ -235,16 +252,14 @@ def same_as_local(
       Python's code-point order is Spark's UTF-8 byte order.
     - A pair sharing no shingle gets no score (the verification join
       emits no row); a scored pair is kept by the cosine threshold or
-      the >=3-char prefix rule."""
-    rows = (
-        names.select("name").distinct()
-        .select("name", F.array_distinct(_shingles("name")).alias("shingles"))
-        .select("name", "shingles", _band_keys("shingles").alias("bands"))
-        .limit(_DRIVER_NAMES + 1)
-        .collect()
-    )
-    if len(rows) > _DRIVER_NAMES:
-        return None
+      the >=3-char prefix rule.
+
+    ``guard`` reports what the skew guard dropped: ``lsh_buckets_dropped``
+    buckets larger than ``max_bucket``, and ``lsh_names_dropped``
+    distinct non-NULL names in them (a name may still pair through
+    another band). The rows hold every bucket, so counting costs no
+    Spark job; the Spark path drops its buckets inside the pair
+    aggregate, and counting them there would take a job of its own."""
     buckets: dict[int, list] = defaultdict(list)
     doc_freq: dict[str, int] = defaultdict(int)
     shingles: dict[str, list[str]] = {}
@@ -268,8 +283,12 @@ def same_as_local(
     sets = {name: set(sh) for name, sh in shingles.items()}
 
     cands = set()
+    n_dropped, dropped_names = 0, set()
     for members in buckets.values():
-        if 2 <= len(members) <= max_bucket:
+        if len(members) > max_bucket:
+            n_dropped += 1
+            dropped_names.update(m for m in members if m is not None)
+        elif len(members) >= 2:
             cands.update(itertools.combinations(
                 sorted(m for m in members if m is not None), 2))
     out = []
@@ -282,7 +301,22 @@ def same_as_local(
         if score >= threshold or (len(a) >= 3 and b.startswith(a)):
             out.append((a, b, score))
     out.sort()
-    return out
+    return out, {"lsh_buckets_dropped": n_dropped,
+                 "lsh_names_dropped": len(dropped_names)}
+
+
+def same_as_local(
+    names: DataFrame, threshold: float = 0.9, max_bucket: int = 64
+) -> list[tuple[str, str, float]] | None:
+    """:func:`same_as_edges` on the driver, for a small vocabulary:
+    the same pairs as sorted ``(name_a, name_b, score)`` tuples, or
+    None when ``names`` holds more than ``_DRIVER_NAMES`` distinct
+    names (the caller then runs the Spark path). One Spark action
+    (:func:`collect_features`), then :func:`score_features`."""
+    rows = collect_features(name_features(names))
+    if rows is None:
+        return None
+    return score_features(rows, threshold, max_bucket)[0]
 
 
 def same_as_frame(spark: SparkSession, pairs: list) -> DataFrame:

@@ -5,7 +5,9 @@ pages -> html2text+extract -> triples -> entity linking ->
 canonicalization -> MERGE INTO nodes/edges — reproducing the
 reference's three-stage dataflow (extractor.py __main__ ->
 extracted_result.json -> kg_writer.main -> Neo4j; SURVEY.md §0) as one
-checkpointed Spark job.
+checkpointed Spark job. Linking runs on the graph's vocabulary before
+any node row is written, so each run writes the graph's node partition
+once, canonical ids included.
 
 Resumability (BASELINE.json: "resumable from checkpoint with
 per-partition lineage + metrics"): every stage commits to a LakeTable
@@ -23,8 +25,9 @@ graph's files forward by reference.
 
 Each lineage entry records its commit's row count and per-partition
 row counts; ``run_pipeline`` returns the run's counters (pages, nodes,
-edges, dropped relations, triples, linked names, stage seconds) to its
-caller — the "per-partition lineage + counters" metrics surface.
+edges, dropped relations, triples, linked names, linking-guard drops,
+stage seconds) to its caller — the "per-partition lineage + counters"
+metrics surface.
 """
 
 from __future__ import annotations
@@ -36,10 +39,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators import graph_build
 from .operators.components import canonical_mapping, local_canonical_mapping
-from .operators.extraction import (
-    entities_table, extract, relations_table, triples_table,
+from .operators.extraction import entities_table, extract, triples_table
+from .operators.linking import (
+    collect_features, name_features, same_as_edges, same_as_frame,
+    score_features,
 )
-from .operators.linking import same_as_edges, same_as_frame, same_as_local
+from .session import job_description
 from .sources.lake import LakeTable
 
 
@@ -143,24 +148,37 @@ def run_pipeline(
     CONTRACT above.
 
     SCHEDULE: after extraction commits, the rest runs as the dependency
-    graph it is. The critical chain is the nodes commit -> linking ->
-    the canonical overwrite of the node partition; it starts as soon as
-    the nodes land. Linking takes one of two paths, chosen by the
-    graph's distinct-name count alone (``operators/linking.py``): up to
-    ``_DRIVER_NAMES`` names, one collect puts the same_as pairs in hand
-    on the driver, and the ``same_as`` commit runs on a side thread
-    beside the canonical overwrite, whose mapping comes from the same
-    pairs (no read-back, no second collect); above it, the Spark path
-    commits ``same_as`` first and the canonical mapping reads it back.
-    Side work reads only the committed extraction and runs beside the
-    chain on driver threads: the triples overwrite, the edges and
-    dropped commits and the counter aggregate. All of it is joined
+    graph it is. The critical chain is extract -> link -> the one nodes
+    commit: the graph's node partition after this batch's MERGE..SET is
+    built lazily, its names (the vocabulary) are linked, and the
+    partition is written once with ``canonical_id`` stamped in. Linking
+    takes one of two paths, chosen by the graph's distinct-name count
+    alone (``operators/linking.py``): up to ``_DRIVER_NAMES`` names,
+    one features collect and Python scoring put the same_as pairs in
+    hand on the driver, and the ``same_as`` commit runs on a side
+    thread beside the nodes commit, whose mapping comes from the same
+    pairs; above it, the Spark path commits ``same_as`` first and the
+    mapping reads it back. Side work reads only the committed
+    extraction and runs beside the chain on driver threads: the triples
+    overwrite, the edges and dropped commits and the counter aggregate.
+    It starts with the collect, whose plan is built first, so the
+    collect's first job reaches Spark's FIFO queue ahead of theirs. All of it is joined
     before ``vacuum``; an exception in any task surfaces from this
-    call. ``stage_seconds`` holds each stage's own elapsed time
-    (``materialize`` excludes the chain it carries; ``linking`` ends
-    when the pairs are in hand, or on the Spark path when ``same_as``
-    has committed, and ``canonicalize`` holds the rest of the chain),
-    so the entries overlap and may sum to more than the wall time.
+    call. A crash between the ``same_as`` and nodes commits re-runs to
+    the same tables: the mapping is a pure function of the committed
+    extraction, the graph's old node partition and, on the Spark path,
+    the committed ``same_as``. ``stage_seconds`` holds each stage's own
+    elapsed time (``linking`` ends when the pairs are in hand, or on
+    the Spark path when ``same_as`` has committed; ``canonicalize`` is
+    the mapping build plus the nodes commit; ``materialize`` is the
+    edges and dropped commits and the counter aggregate), so the
+    entries overlap and may sum to more than the wall time.
+
+    Counters: ``pages``, ``triples``, the per-batch ``nodes``, ``edges``
+    and ``dropped_relations``, the ``*_total`` snapshot sizes,
+    ``linked_names`` (names in a same_as component) and the linking
+    guard's drops, ``lsh_buckets_dropped`` and ``lsh_names_dropped``
+    (None on the Spark path, where counting them would take a job).
     """
     graph_id = graph_id or default_graph_id()
     if canonicalize:
@@ -178,8 +196,9 @@ def run_pipeline(
     # carried forward by manifest reference. The lake layer re-buckets
     # by partition key for the write, so no extra repartition here.
     t0 = time.time()
-    g_keys = [f"{graph_id}|{b}" for b in range(N_URL_BUCKETS)]
-    bid = f"{graph_id}{sfx}/extracted"
+    b = f"{graph_id}{sfx}"  # this batch's id prefix
+    g_keys = [f"{graph_id}|{k}" for k in range(N_URL_BUCKETS)]
+    bid = f"{b}/extracted"
     if bid not in warehouse.extracted.applied_batches():
         upd = with_graph_bucket(extract(pages, partitions=partitions), graph_id)
         # a graph's first batch declares all its buckets: the merge then
@@ -194,10 +213,11 @@ def run_pipeline(
             # batch's distinct buckets are EXACTLY the partitions this
             # merge can write or delete
             upd = upd.persist()
-            touched = [
-                f"{graph_id}|{r[0]}"
-                for r in upd.select("url_bucket").distinct().collect()
-            ]
+            with job_description(spark, f"{b}/extract"):
+                touched = [
+                    f"{graph_id}|{r[0]}"
+                    for r in upd.select("url_bucket").distinct().collect()
+                ]
         warehouse.extracted.merge_into(
             upd, on=["graph_id", "url"], when_matched="update", batch_id=bid,
             partition_by=["graph_id", "url_bucket"], touched_keys=touched,
@@ -214,104 +234,41 @@ def run_pipeline(
 
     stage_s["extract"] = round(time.time() - t0, 2)
 
-    # ---- stages 2-4: the linking chain, with side work beside it -----
-    # Only one chain depends on another: linking reads the graph's
-    # committed node partition and nothing else. It runs as the nodes
-    # commit's continuation, while this thread runs the triples stage
-    # and the edges/dropped commits run on materialize_graph's pool.
-    linked: dict = {}
-    chain_s: dict = {}
+    # ---- stage 2: the graph's vocabulary, before any node lands ------
+    # The graph's node partition after this batch's MERGE..SET (on a
+    # first build, this batch's rows) is both the vocabulary and what
+    # the one nodes commit below writes: a replaced row's old name never
+    # reaches linking, where it could bridge two components. Both
+    # frames are lazy; nothing runs yet.
+    t_link = time.time()
+    nodes = graph_build.merged_nodes(
+        graph_build.build_nodes(entities_table(extracted), graph_id, user_id),
+        warehouse.nodes, graph_id)
+    feature_frame = name_features(nodes.select("name"))
 
-    def _link_and_canonicalize():
-        t0 = time.time()
-        # the manifest is the partition index: read ONLY this graph's
-        # node partition, never the whole table. None = the graph has
-        # no node partition (a zero-entity corpus): nothing to link —
-        # skip the stage
-        g_nodes = warehouse.nodes.read_partitions(spark, [graph_id])
-        if g_nodes is None:
-            linked["linked_names"] = 0
-            return
-        names = g_nodes.select("name")
-
-        def commit_links(links):
-            # graph-scoped partition: the same_as table is shared by
-            # every graph in the warehouse, so a plain overwrite() would
-            # let this run clobber another graph's links
-            warehouse.same_as.overwrite_partitions(
-                links.withColumn("graph_id", F.lit(graph_id)),
-                partition_by=["graph_id"],
-                batch_id=f"{graph_id}{sfx}/same_as", touched_keys=[graph_id],
-            )
-
-        def commit_canonical(mapping):
-            canon = g_nodes.join(
-                F.broadcast(mapping), on="name", how="left"
-            ).withColumn(
-                "canonical_id", F.coalesce("canonical_name", "name")
-            ).drop("canonical_name")
-            # dynamic partition overwrite: canon IS the full refreshed
-            # content of this graph's partition — replace it wholesale
-            # (no read-back anti-join); other graphs' partitions carried
-            warehouse.nodes.overwrite_partitions(
-                canon, partition_by=["graph_id"],
-                batch_id=f"{graph_id}{sfx}/canonical", touched_keys=[graph_id],
-            )
-
-        # a small vocabulary links on the driver from one collect
-        pairs = same_as_local(names)
-        if pairs is None:
-            links = same_as_edges(names)
-            commit_links(links)
-            chain_s["linking"] = time.time() - t0
-            t0 = time.time()
-            # read back THIS graph's partition: a crash-resume (the
-            # same_as batch applied, canonical not) must canonicalize
-            # with the committed links; a linkless graph writes no
-            # partition dir — fall back to the in-hand (empty) frame
-            g_links = warehouse.same_as.read_partitions(spark, [graph_id])
-            mapping = canonical_mapping(
-                g_links if g_links is not None else links)
-            linked["linked_names"] = mapping.count()
-            commit_canonical(mapping)
-        else:
-            chain_s["linking"] = time.time() - t0
-            t0 = time.time()
-            # both commits read the pairs in hand, not each other, so
-            # they run side by side; recomputing the pairs on a resume
-            # gives the committed ones, as they come from the same
-            # committed node partition
-            mapping, linked["linked_names"] = local_canonical_mapping(
-                spark, [(a, b) for a, b, _ in pairs])
-            with ThreadPoolExecutor(max_workers=1) as side:
-                links_done = side.submit(
-                    commit_links, same_as_frame(spark, pairs))
-                commit_canonical(mapping)
-                links_done.result()
-        chain_s["canonicalize"] = time.time() - t0
+    def commit_links(links):
+        # graph-scoped partition: the same_as table is shared by every
+        # graph in the warehouse, so a plain overwrite() would let this
+        # run clobber another graph's links
+        warehouse.same_as.overwrite_partitions(
+            links.withColumn("graph_id", F.lit(graph_id)),
+            partition_by=["graph_id"], batch_id=f"{b}/same_as",
+            touched_keys=[graph_id],
+        )
 
     def _materialize():
         t0 = time.time()
         mat = graph_build.materialize_graph(
-            extracted, warehouse.nodes, warehouse.edges, warehouse.dropped,
-            graph_id=graph_id, user_id=user_id, batch_id=f"{graph_id}{sfx}",
-            after_nodes=_link_and_canonicalize if link_entities else None,
+            extracted, None, warehouse.edges, warehouse.dropped,
+            graph_id=graph_id, user_id=user_id, batch_id=b,
         )
-        return mat, time.time() - t0
+        stage_s["materialize"] = round(time.time() - t0, 2)
+        return mat
 
-    # materialize_graph (with the chain it carries) starts before the
-    # triples stage below; Spark's FIFO scheduler serves whichever job
-    # reaches it first. Holding the triples stage until the nodes had
-    # landed was measured and was not faster: it then competes with
-    # linking instead. The with-block joins the side work before
-    # vacuum reclaims anything it reads, and every task's exception
-    # surfaces here.
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        mat_future = pool.submit(_materialize)
-
-        # ---- triples (per-graph refresh, partition-scoped) ----------
+    def _triples():
+        # per-graph refresh, partition-scoped
         t0 = time.time()
-        tbid = f"{graph_id}{sfx}/triples"
+        tbid = f"{b}/triples"
         if tbid not in warehouse.triples.applied_batches():
             trip = with_graph_bucket(triples_table(extracted), graph_id)
             # dynamic partition overwrite: the stage regenerates this
@@ -324,16 +281,75 @@ def run_pipeline(
                 trip, partition_by=["graph_id", "url_bucket"], batch_id=tbid,
                 touched_keys=g_keys,
             )
-        counters["triples"] = _graph_rows(warehouse.triples, graph_id)
         stage_s["triples"] = round(time.time() - t0, 2)
+        return _graph_rows(warehouse.triples, graph_id)
 
-        mat, mat_s = mat_future.result()
-    counters.update(mat)
-    counters.update(linked)
-    # each stage's own elapsed time: the chain runs inside
-    # materialize_graph, so materialize reports its time minus the chain's
-    stage_s["materialize"] = round(mat_s - sum(chain_s.values()), 2)
-    stage_s.update((st, round(v, 2)) for st, v in chain_s.items())
+    # ---- stages 3-4: link -> one nodes commit, side work beside it ----
+    # The triples, edges and dropped commits and the counter aggregate
+    # read only the committed extraction, so they start now, on pool
+    # threads, while this thread runs the chain: the features collect
+    # -> pairs -> canonical mapping -> the nodes commit. The collect's
+    # plan is already built, so its first job reaches Spark's FIFO
+    # queue ahead of the side commits' scans, whose plans the side
+    # threads still have to build. (Holding the side work until the
+    # whole collect had returned was measured and was slower: the
+    # cores then idled while the side threads planned beside the
+    # Python scoring.) The with-block joins the side work before vacuum
+    # reclaims anything it reads, and every task's exception surfaces
+    # here.
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        mat_future = pool.submit(_materialize)
+        trip_future = pool.submit(_triples)
+        links_done = None
+        if link_entities:
+            # the driver path's one collect (None above _DRIVER_NAMES)
+            with job_description(spark, f"{b}/link"):
+                features = collect_features(feature_frame)
+            if features is None:
+                # the Spark path commits same_as first and reads it
+                # back, so a resume after that commit maps the
+                # committed links
+                with job_description(spark, f"{b}/link"):
+                    links = same_as_edges(nodes.select("name"))
+                    commit_links(links)
+                stage_s["linking"] = round(time.time() - t_link, 2)
+                t0 = time.time()
+                # a linkless graph writes no partition dir: fall back
+                # to the in-hand (empty) frame
+                g_links = warehouse.same_as.read_partitions(spark, [graph_id])
+                with job_description(spark, f"{b}/mapping"):
+                    mapping = canonical_mapping(
+                        g_links if g_links is not None else links)
+                    counters["linked_names"] = mapping.count()
+                # counting the Spark path's guard drops would take a job
+                counters.update(lsh_buckets_dropped=None,
+                                lsh_names_dropped=None)
+            else:
+                pairs, guard = score_features(features)
+                counters.update(guard)
+                stage_s["linking"] = round(time.time() - t_link, 2)
+                t0 = time.time()
+                # same_as and the nodes both come from the pairs in
+                # hand, so they commit side by side; a resume recomputes
+                # the same pairs from the same committed inputs. No node
+                # rows (an empty vocabulary): no same_as commit
+                if features:
+                    links_done = pool.submit(
+                        commit_links, same_as_frame(spark, pairs))
+                mapping, counters["linked_names"] = local_canonical_mapping(
+                    spark, [(x, y) for x, y, _ in pairs])
+            nodes = graph_build.with_canonical_ids(nodes, mapping)
+        else:
+            t0 = time.time()
+        node_commit = graph_build.commit_nodes(
+            warehouse.nodes, nodes, graph_id, f"{b}/nodes")
+        stage_s["canonicalize"] = round(time.time() - t0, 2)
+        if links_done is not None:
+            links_done.result()
+        counters["triples"] = trip_future.result()
+        counters.update(mat_future.result())
+    counters["nodes_total"] = graph_build.snapshot_rows(
+        warehouse.nodes, node_commit)
 
     # snapshot hygiene: expire superseded snapshots, keep one rollback
     # target per table (a month-long ingest would otherwise retain one

@@ -8,6 +8,7 @@ default), UTC timezone pinned for DuckDB-oracle comparability.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -64,3 +65,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def job_description(spark: SparkSession, description: str | None):
+    """Describe the Spark jobs this thread starts inside the block, so
+    the event log and the status store say which stage each job
+    served; the caller's description comes back after. The property is
+    thread-local: concurrent threads describe their own jobs. None
+    keeps the caller's description."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    if description:
+        sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)

@@ -57,6 +57,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import StructType
 
+from ..session import job_description
+
 _PK = "_pk"
 _SEQ = "_seq"   # merge-on-read write sequence
 _TOMB = "_tomb"  # merge-on-read tombstone marker
@@ -400,15 +402,9 @@ class LakeTable:
                 par, F.col(_PK), salt
             ).write.partitionBy(_PK)
         # the description is a thread-local property, so commits on
-        # concurrent threads tag their own jobs; the caller's comes back
-        sc = spark.sparkContext
-        prev = sc.getLocalProperty("spark.job.description")
-        if batch_id:
-            sc.setJobDescription(batch_id)
-        try:
+        # concurrent threads tag their own jobs
+        with job_description(spark, batch_id):
             writer.mode("overwrite").parquet(path)
-        finally:
-            sc.setJobDescription(prev)
         if not partition_by:
             return None, None, self._footer_rows(path)
         by_key = {urllib.parse.unquote(d[len(_PK) + 1:]): d
@@ -651,7 +647,7 @@ class LakeTable:
         extra keys only costs re-writing those partitions verbatim.
         """
         if when_matched not in ("update", "ignore"):
-            # validate BEFORE the first write: _merged only runs once
+            # validate BEFORE the first write: merged only runs once
             # the table exists, so a typo'd policy would commit the
             # first batch under op 'merge:<typo>' and only fail on
             # batch two
@@ -675,7 +671,7 @@ class LakeTable:
         spark = updates.sparkSession
         old_dirs = entry.get("partition_dirs")
         if not (partition_by and old_dirs is not None):
-            result = self._merged(self.read(spark), updates, on, when_matched)
+            result = self.merged(self.read(spark), updates, on, when_matched)
             return self._write_snapshot(result, op, batch_id, counters,
                                         partition_by)
         # the partitions this commit must rewrite
@@ -690,13 +686,16 @@ class LakeTable:
                                               updates.select(*on))
         current = self.read_partitions(spark, [k for k in touched if k in old_dirs])
         return self._write_snapshot(
-            self._merged(current, updates, on, when_matched), op, batch_id,
+            self.merged(current, updates, on, when_matched), op, batch_id,
             counters, partition_by, n_keys=len(touched), entry=entry,
             replaced=touched)
 
     @staticmethod
-    def _merged(current: Optional[DataFrame], updates: DataFrame, on: list[str],
-                when_matched: str) -> DataFrame:
+    def merged(current: Optional[DataFrame], updates: DataFrame, on: list[str],
+               when_matched: str) -> DataFrame:
+        """The rows :meth:`merge_into` writes for the partitions it
+        rewrites: ``current`` (their old rows, None for none) merged
+        with ``updates`` under the ``when_matched`` policy."""
         if current is None:
             return updates
         if when_matched == "update":

@@ -111,14 +111,26 @@ def test_same_as_local_matches_spark_path(spark, monkeypatch):
     path give identical pair sets with scores within 1e-12. Both drop
     the oversized alternating bucket at max_bucket=64 and both keep it
     at 128; above _DRIVER_NAMES the driver path declines (None). The
-    driver path's frame has the Spark path's schema."""
+    driver path's frame has the Spark path's schema, and its guard
+    counts what it dropped: the alternating names share one bucket per
+    band, so on top of the generated names' own hub buckets, 8 buckets
+    and 70 names go at 64 and none at 128."""
     from knowledge_graph_spark.operators import linking
 
     names, alternating = _linking_names(spark)
+    features = linking.collect_features(linking.name_features(names))
+    generated = [r for r in features if r["name"] not in alternating]
     for max_bucket in (64, 128):
         spark_pairs = {(r["name_a"], r["name_b"]): r["score"] for r in
                        same_as_edges(names, max_bucket=max_bucket).collect()}
         local = same_as_local(names, max_bucket=max_bucket)
+        pairs, guard = linking.score_features(features, max_bucket=max_bucket)
+        assert pairs == local
+        gen_guard = linking.score_features(generated, max_bucket=max_bucket)[1]
+        extra = (linking.BANDS, len(alternating)) if max_bucket == 64 else (0, 0)
+        assert (guard["lsh_buckets_dropped"] - gen_guard["lsh_buckets_dropped"],
+                guard["lsh_names_dropped"] - gen_guard["lsh_names_dropped"]
+                ) == extra, (max_bucket, guard, gen_guard)
         assert local == sorted(local)
         local_pairs = {(a, b): s for a, b, s in local}
         assert local_pairs.keys() == spark_pairs.keys(), max_bucket

@@ -126,18 +126,32 @@ def test_crash_after_extraction_resumes_without_reparse(spark, tmp_path, monkeyp
 
 
 def test_side_commit_failure_surfaces_and_resumes(spark, tmp_path, monkeypatch):
-    """Two commits run on side threads: the edges commit on a pool
-    thread while the linking chain proceeds, and, when the graph links
-    on the driver, the same_as commit beside the canonical overwrite.
-    Each one's failure must surface from run_pipeline, and a re-run
-    must finish the graph without re-parsing: the same tables and
-    snapshot totals as an uninterrupted run."""
+    """Commits run side by side: the edges commit on a pool thread while
+    the linking chain proceeds, and, when the graph links on the
+    driver, the same_as commit beside the nodes commit. Each failure
+    must surface from run_pipeline, and a re-run must finish the graph
+    without re-parsing: the same tables and snapshot totals as an
+    uninterrupted run. The nodes commit is the chain's last step, so its
+    crash window opens after same_as has landed — on a build and on an
+    update batch; the re-run's mapping must come out the same from the
+    committed inputs."""
+    import time
+
     import knowledge_graph_spark.pipeline as P
     from knowledge_graph_spark.sources.lake import LakeTable
 
     pages = generate_spark(spark, 30, partitions=2)
-    wh_ref = KGWarehouse(str(tmp_path / "ref"))
-    ref = run_pipeline(spark, pages, wh_ref, graph_id="g1", link_entities=True)
+    recrawl = generate_spark(spark, 10, partitions=1).withColumn(
+        "text", F.concat(F.coalesce("text", F.lit("")),
+                         F.lit("华星科技公司收购九州网络公司。")))
+    ref_build = KGWarehouse(str(tmp_path / "ref_build"))
+    ref = {False: run_pipeline(spark, pages, ref_build, graph_id="g1",
+                               link_entities=True)}
+    ref_update = KGWarehouse(str(tmp_path / "ref_update"))
+    run_pipeline(spark, pages, ref_update, graph_id="g1", link_entities=True)
+    ref[True] = run_pipeline(spark, recrawl, ref_update, graph_id="g1",
+                             link_entities=True, batch_suffix="r1")
+    ref_wh = {False: ref_build, True: ref_update}
 
     def no_extract(*a, **kw):
         raise AssertionError("extraction re-ran on resume")
@@ -147,34 +161,51 @@ def test_side_commit_failure_surfaces_and_resumes(spark, tmp_path, monkeypatch):
         return sorted((repr(tuple(r)) for r in
                        df.select(*sorted(df.columns)).collect()))
 
-    for method, stage in (("merge_into", "edges"),
-                          ("overwrite_partitions", "same_as")):
-        real = getattr(LakeTable, method)
+    def same_as_landed(wh, bid):
+        deadline = time.time() + 60
+        while f"{bid}/same_as" not in wh.same_as.applied_batches():
+            assert time.time() < deadline, "same_as never landed"
+            time.sleep(0.05)
 
-        def failing(self, *a, _real=real, _stage=stage, **kw):
-            if (kw.get("batch_id") or "").endswith(f"/{_stage}"):
+    for method, stage, update in (("merge_into", "edges", False),
+                                  ("overwrite_partitions", "same_as", False),
+                                  ("overwrite_partitions", "nodes", False),
+                                  ("overwrite_partitions", "nodes", True)):
+        real = getattr(LakeTable, method)
+        wh = KGWarehouse(str(tmp_path / f"{stage}-{update}"))
+        sfx = "r1" if update else None
+        bid = "g1@r1" if update else "g1"
+        batch = recrawl if update else pages
+        if update:
+            run_pipeline(spark, pages, wh, graph_id="g1", link_entities=True)
+
+        def failing(self, *a, _real=real, _stage=stage, _wh=wh, **kw):
+            if (kw.get("batch_id") or "") == f"{bid}/{_stage}":
+                if _stage == "nodes":
+                    same_as_landed(_wh, bid)
                 raise RuntimeError(f"injected {_stage} failure")
             return _real(self, *a, **kw)
 
-        wh = KGWarehouse(str(tmp_path / stage))
         with monkeypatch.context() as m:
             m.setattr(LakeTable, method, failing)
             with pytest.raises(RuntimeError, match=f"injected {stage} failure"):
-                run_pipeline(spark, pages, wh, graph_id="g1",
-                             link_entities=True)
-        assert f"g1/{stage}" not in getattr(wh, stage).applied_batches()
+                run_pipeline(spark, batch, wh, graph_id="g1",
+                             link_entities=True, batch_suffix=sfx)
+        assert f"{bid}/{stage}" not in getattr(wh, stage).applied_batches()
+        if stage == "nodes":
+            assert f"{bid}/same_as" in wh.same_as.applied_batches()
 
         with monkeypatch.context() as m:
             m.setattr(P, "extract", no_extract)
-            got = run_pipeline(spark, pages, wh, graph_id="g1",
-                               link_entities=True)
+            got = run_pipeline(spark, batch, wh, graph_id="g1",
+                               link_entities=True, batch_suffix=sfx)
 
         for name in ("triples", "nodes", "edges", "dropped", "same_as"):
-            assert rows(getattr(wh, name)) == rows(getattr(wh_ref, name)), \
-                (stage, name)
+            assert rows(getattr(wh, name)) == rows(
+                getattr(ref_wh[update], name)), (stage, update, name)
         for k in ("nodes_total", "edges_total", "dropped_total", "triples",
                   "pages", "linked_names"):
-            assert got[k] == ref[k], (stage, k)
+            assert got[k] == ref[update][k], (stage, update, k)
 
 
 def test_second_update_batch_with_linking_schema_stable(spark, tmp_path):
