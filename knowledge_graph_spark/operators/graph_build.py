@@ -24,17 +24,21 @@ batch of pages. Entity ids are per-document (``e1..eN``), so the
 materialized node id namespaces them by url: ``xxhash64(url):eK``.
 This keeps the reference's node schema (id/name/type/graph_id/user_id)
 while staying collision-free at 10^12 documents. All derivations are
-projections (no shuffle); the only shuffles are the MERGE anti-joins,
-which hash-partition on the merge key.
+row-local: projections, and the edge dedupe runs inside each page's
+row, since an edge key carries its page's url hash. A graph's commits
+touch one partition key, so the lake writes them from their input's
+own partitions. A graph's first build therefore shuffles nothing; the
+only shuffles are an update's MERGE anti-joins against the committed
+partition, which hash-partition on the merge key.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
-from ..session import job_description
+from .extraction import entities_table
 
 # sanitized pattern per kg_writer.py:13
 _VALID_REL = r"^[A-Za-z0-9_]+$"
@@ -68,7 +72,8 @@ def _edge_ok(r, ids) -> "F.Column":
 
 def _node_id(col) -> "F.Column":
     """THE node id: per-document entity id namespaced by url hash."""
-    return F.concat_ws(":", F.hex(F.xxhash64("url")), F.col(col))
+    c = F.col(col) if isinstance(col, str) else col
+    return F.concat_ws(":", F.hex(F.xxhash64("url")), c)
 
 
 def with_sanitized_type(relations: DataFrame) -> DataFrame:
@@ -152,20 +157,63 @@ def build_edges(
     return edges, dropped
 
 
-def build_edges_rowlocal(
-    extracted: DataFrame, graph_id: str, user_id: str
-) -> tuple[DataFrame, DataFrame]:
-    """(edges, dropped) straight from the nested extraction result —
-    ZERO joins.
+def _valid_rel(r, ids) -> "F.Column":
+    """THE edge rule for a relation struct ``r`` of a document whose
+    entity ids are ``ids``: a valid type AND resolvable endpoints. The
+    edges and the ``edges`` counter both apply it, so they cannot
+    diverge on foreign extraction inputs."""
+    return _sanitized_type_col(r["type"]).isNotNull() & _edge_ok(r, ids)
 
-    Endpoint validation (reference kg_writer.py:44-46) checks a
-    relation's source/target against the entity-id set of the same
-    extraction result; since our ids are per-document, that membership
-    test is row-local: ``array_contains(entities.id, r.source)``. The
-    generic join-based :func:`build_edges` remains for merging
-    relations against an arbitrary node table, but the pipeline path
-    never needs to shuffle 10^12 relation rows against 10^12 node ids
-    just to re-check a per-document invariant."""
+
+def page_edges(extracted: DataFrame, graph_id: str,
+               user_id: str) -> DataFrame:
+    """The edge rows of a nested extraction result, in the edge table's
+    column order. Per extraction row, the valid relations become
+    ``(src, dst, rel_type, verb, similarity)`` structs, sorted, and the
+    first of each ``(src, dst, rel_type)`` is kept; then the rows
+    explode. Row-local: a scan, a projection and an explode, no join,
+    no exchange.
+
+    That is the in-batch dedupe: the SAME key can arise from two verbs
+    mapping to one predicate (收购/并购 -> acquire), and keeping the
+    least ``(verb, similarity)`` lets reruns, streaming replays and
+    golden fixtures agree. An edge key is page-local (both endpoints
+    carry the url hash) and a graph's extraction is url-unique, so this
+    is the row a graph-wide ``min(struct(verb, similarity, url))`` per
+    key keeps, without a shuffle. The sorted array is bound once, as
+    the lambda variable of a one-element ``transform``, so the
+    neighbour test does not re-sort it per element."""
+    ids = F.col("entities.id")
+    structs = F.array_sort(F.transform(
+        F.filter("relations", lambda r: _valid_rel(r, ids)),
+        lambda r: F.struct(
+            _node_id(r["source"]).alias("src"),
+            _node_id(r["target"]).alias("dst"),
+            _sanitized_type_col(r["type"]).alias("rel_type"),
+            r["verb"].alias("verb"),
+            F.coalesce(r["similarity"], F.lit(0.0)).alias("similarity"),
+        )))
+
+    def first_per_key(s):
+        def new_key(e, i):
+            prev = F.get(s, i - 1)  # NULL before the first element
+            return ~(e["src"].eqNullSafe(prev["src"])
+                     & e["dst"].eqNullSafe(prev["dst"])
+                     & e["rel_type"].eqNullSafe(prev["rel_type"]))
+        return F.filter(s, new_key)
+
+    kept = F.element_at(F.transform(F.array(structs), first_per_key), 1)
+    return extracted.select(F.explode(kept).alias("e"), "url").select(
+        F.lit(graph_id).alias("graph_id"),
+        "e.src", "e.dst", "e.rel_type", "e.verb", "e.similarity", "url",
+        F.lit(user_id).alias("user_id"),
+    )
+
+
+def dropped_relations(extracted: DataFrame, graph_id: str) -> DataFrame:
+    """The quarantined relations of a nested extraction result, one
+    row each with its ``reason``: ``missing_endpoint`` when the
+    endpoint rule fails, else ``invalid_type``. Row-local."""
     rows = extracted.select(
         "url", F.col("entities.id").alias("_ids"),
         F.explode("relations").alias("r")
@@ -180,13 +228,7 @@ def build_edges_rowlocal(
         F.coalesce(F.col("r.similarity"), F.lit(0.0)).alias("similarity"),
         _edge_ok(F.col("r"), F.col("_ids")).alias("_ok"),
     )
-    good = flagged.filter(F.col("_ok") & F.col("rel_type").isNotNull())
-    edges = good.select(
-        F.lit(graph_id).alias("graph_id"),
-        F.lit(user_id).alias("user_id"),
-        "src", "dst", "rel_type", "verb", "similarity", "url",
-    )
-    dropped = (
+    return (
         flagged.filter(~F.col("_ok") | F.col("rel_type").isNull())
         .withColumn(
             "reason",
@@ -196,17 +238,31 @@ def build_edges_rowlocal(
         .select("url", "src", "dst", "type", "verb", "similarity", "reason")
         .withColumn("graph_id", F.lit(graph_id))
     )
-    return edges, dropped
+
+
+def build_edges_rowlocal(
+    extracted: DataFrame, graph_id: str, user_id: str
+) -> tuple[DataFrame, DataFrame]:
+    """(edges, dropped) straight from the nested extraction result —
+    ZERO joins (:func:`page_edges`, :func:`dropped_relations`).
+
+    Endpoint validation (reference kg_writer.py:44-46) checks a
+    relation's source/target against the entity-id set of the same
+    extraction result; since our ids are per-document, that membership
+    test is row-local: ``array_contains(entities.id, r.source)``. The
+    generic join-based :func:`build_edges` remains for merging
+    relations against an arbitrary node table, but the pipeline path
+    never needs to shuffle 10^12 relation rows against 10^12 node ids
+    just to re-check a per-document invariant."""
+    return (page_edges(extracted, graph_id, user_id),
+            dropped_relations(extracted, graph_id))
 
 
 def build_graph_tables(
     extracted: DataFrame, graph_id: str, user_id: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """extraction result -> (nodes, edges, dropped) DataFrames."""
-    from .extraction import entities_table
-
-    ents = entities_table(extracted)
-    nodes = build_nodes(ents, graph_id, user_id)
+    nodes = build_nodes(entities_table(extracted), graph_id, user_id)
     edges, dropped = build_edges_rowlocal(extracted, graph_id, user_id)
     return nodes, edges, dropped
 
@@ -275,53 +331,65 @@ def materialize_graph(
     nodes resolve last-writer-wins (MERGE..SET), edges first-writer-wins
     (ON CREATE SET).
 
-    ``nodes_table=None`` leaves the node partition to the caller:
-    ``run_pipeline`` links the graph's vocabulary first and writes the
-    partition once, canonical ids stamped (:func:`merged_nodes`,
-    :func:`with_canonical_ids`, :func:`commit_nodes`), while the edge
-    and dropped commits and the counter aggregate run here. The result
-    then has no ``nodes_total``.
+    ``nodes_table=None`` leaves the node partition to the caller, and
+    no node frame is built here: ``run_pipeline`` links the graph's
+    vocabulary first and writes the partition once, canonical ids
+    stamped (:func:`merged_nodes`, :func:`with_canonical_ids`,
+    :func:`commit_nodes`), while the edge and dropped commits run here.
+    The result then has no ``nodes_total``.
 
-    One Spark job per table, ZERO joins: nodes/edges/dropped all derive
-    from the nested extraction result with row-local operations
-    (endpoint validation via ``array_contains`` against the same row's
-    entity ids — see :func:`build_edges_rowlocal`), so each write is a
-    parquet scan + project + write. The merge itself counts the written
-    snapshot (parquet metadata), so no separate ``count()`` actions
-    recompute anything.
+    One Spark job per table, ZERO joins in the derivations:
+    nodes/edges/dropped all derive from the nested extraction result
+    with row-local operations (endpoint validation via
+    ``array_contains`` against the same row's entity ids, the edge
+    dedupe per page — see :func:`page_edges`), and a one-key commit
+    writes from its input's partitions, so on a graph's first batch
+    each write is a parquet scan + project + write. The per-batch
+    counters ride the edges write as observed metrics, and the merge
+    counts the written snapshot (parquet metadata), so no separate
+    aggregate or ``count()`` action recomputes anything.
     """
-    nodes, edges, dropped = build_graph_tables(extracted, graph_id, user_id)
-
     bid = batch_id or graph_id
-    # deterministic in-batch dedupe: the SAME (src,dst,rel_type) pair can
-    # arise from two verbs mapping to one predicate (收购/并购 -> acquire);
-    # keep the min (verb, similarity, url) row so reruns, streaming
-    # replays and golden fixtures all agree (dropDuplicates keeps an
-    # arbitrary row — nondeterministic table contents)
     edge_key = ["graph_id", "src", "dst", "rel_type"]
-    edges = (
-        edges.groupBy(*edge_key)
-        .agg(F.min(F.struct("verb", "similarity", "url")).alias("_m"))
-        .select(*edge_key, "_m.verb", "_m.similarity", "_m.url",
-                F.lit(user_id).alias("user_id"))
-    )
 
-    # node ids are (url-hash, per-doc entity id) and edges were just
-    # grouped on their key, so both batches are key-unique, as
-    # merge_into expects; touched_keys=[graph_id] skips partition
-    # discovery (this batch by definition writes exactly one graph
-    # partition).
-    # The three commits touch three DISTINCT LakeTables (separate
-    # directories, separate manifests, no shared mutable state) and
-    # only read ``extracted``, so they and the counter aggregate run
-    # on concurrent driver threads — Spark schedules the jobs side by
-    # side and the write stages fill the cores one commit alone can't
-    # (measured: materialize stage ~5.3 s -> ~3.5 s on the 100k-page
-    # bench). Each task re-reads ``extracted`` unless the caller
-    # persisted it: streaming does (its input is a fresh micro-batch
-    # extraction); run_pipeline passes the committed lake table
-    # uncached, so each task scans its parquet files
+    # per-batch deltas under the original keys (what THIS batch
+    # produced: entity mentions, valid relations pre-dedupe, quarantined
+    # relations), observed per extraction row on the edges write's
+    # input, before the explode. NULL-safe sizes: a NULL
+    # entities/relations column (foreign or schema-evolved input) must
+    # count 0 — greatest(x, 0) covers BOTH null semantics (ANSI
+    # size(NULL)=NULL is skipped by greatest; legacy size(NULL)=-1
+    # clamps to 0). The *_total keys carry the snapshot sizes from the
+    # manifest for free.
+    def n(c):
+        return F.sum(F.greatest(F.size(c), F.lit(0)))
+
+    ids = F.col("entities.id")
+    counted = Observation()
+    edges = page_edges(extracted.observe(
+        counted,
+        n("entities").alias("nodes"),
+        n(F.filter("relations", lambda r: _valid_rel(r, ids))).alias("edges"),
+        n("relations").alias("relations"),
+    ), graph_id, user_id)
+    dropped = dropped_relations(extracted, graph_id)
+
+    # node ids are (url-hash, per-doc entity id) and edges are deduped
+    # on their key, so both batches are key-unique, as merge_into
+    # expects; touched_keys=[graph_id] skips partition discovery (this
+    # batch by definition writes exactly one graph partition).
+    # The commits touch DISTINCT LakeTables (separate directories,
+    # separate manifests, no shared mutable state) and only read
+    # ``extracted``, so they run on concurrent driver threads — Spark
+    # schedules the jobs side by side and the write stages fill the
+    # cores one commit alone can't (measured: materialize stage ~5.3 s
+    # -> ~3.5 s on the 100k-page bench). Each task re-reads
+    # ``extracted`` unless the caller persisted it: streaming does (its
+    # input is a fresh micro-batch extraction); run_pipeline passes the
+    # committed lake table uncached, so each task scans its parquet
+    # files
     def _commit_nodes():
+        nodes = build_nodes(entities_table(extracted), graph_id, user_id)
         if mor_seq is not None:
             return nodes_table.merge_on_read(
                 nodes, on=["graph_id", "id"], seq=mor_seq, policy="last",
@@ -360,54 +428,20 @@ def materialize_graph(
             dropped, partition_by=["graph_id"],
             touched_keys=[graph_id], batch_id=f"{bid}/dropped")
 
-    # per-batch deltas under the original keys (what THIS batch
-    # produced: entity mentions, valid relations pre-dedupe, quarantined
-    # relations; an idempotent resume reports 0) — ONE aggregate job
-    # over the nested extraction result, not three table counts. The
-    # *_total keys carry the snapshot sizes from the manifest for free.
-    # It runs beside the commits, so "resume" is decided before any of
-    # them lands, by the test the edges commit applies itself (this
-    # call always makes that commit; the nodes commit may be the
-    # caller's)
-    resumed = f"{bid}/edges" in edges_table.applied_batches()
-
-    def _stats():
-        if resumed:
-            return 0, 0, 0
-        # an edge needs BOTH a valid type and resolvable endpoints —
-        # the two rules build_edges_rowlocal applies, so the counters
-        # cannot diverge from the tables on foreign extraction inputs
-        ids = F.col("entities.id")
-        valid = F.filter("relations", lambda r: (
-            _sanitized_type_col(r["type"]).isNotNull() & _edge_ok(r, ids)))
-
-        # NULL-safe sizes: a NULL entities/relations column (foreign
-        # or schema-evolved input) must count 0 — greatest(x, 0)
-        # covers BOTH null semantics (ANSI size(NULL)=NULL is skipped
-        # by greatest; legacy size(NULL)=-1 clamps to 0)
-        def n(c):
-            return F.sum(F.greatest(F.size(c), F.lit(0)))
-
-        with job_description(extracted.sparkSession, f"{bid}/stats"):
-            stats = extracted.select(
-                n("entities").alias("n_nodes"), n(valid).alias("n_valid"),
-                n("relations").alias("n_rel"),
-            ).first()
-        n_valid = stats["n_valid"] or 0
-        return (stats["n_nodes"] or 0, n_valid,
-                (stats["n_rel"] or 0) - n_valid)
-
-    tasks = [_commit_edges, _commit_dropped, _stats]
+    tasks = [_commit_edges, _commit_dropped]
     if nodes_table is not None:
-        tasks.insert(0, _commit_nodes)
+        tasks.append(_commit_nodes)
     with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
         futures = [pool.submit(f) for f in tasks]
-    *r_nodes, r_edges, r_dropped, (n_nodes, n_valid, n_dropped) = [
-        f.result() for f in futures]
+    r_edges, r_dropped, *r_nodes = [f.result() for f in futures]
+    # the edges commit decides "resumed": a skipped commit ran no job,
+    # so nothing was observed, and an idempotent resume reports 0
+    got = {} if r_edges.get("skipped") else counted.get
+    n_valid = got.get("edges") or 0
     out = {
-        "nodes": n_nodes,
+        "nodes": got.get("nodes") or 0,
         "edges": n_valid,
-        "dropped_relations": n_dropped,
+        "dropped_relations": (got.get("relations") or 0) - n_valid,
         "edges_total": snapshot_rows(edges_table, r_edges),
         "dropped_total": snapshot_rows(dropped_table, r_dropped),
     }

@@ -44,8 +44,8 @@ latency of ~14 serial jobs (two checkpoints, a count, the AQE stages of
 the scoring plan). Above the limit it returns None and the caller runs
 the Spark path, which stays the reference the tests compare against.
 Scores agree to a few ulps: Python's ``log`` is not ``StrictMath.log``,
-and the driver sums exactly (``math.fsum``) where Spark sums in
-partition order.
+and the driver sums exactly (``math.fsum``) where Spark adds each
+group's terms in ascending order.
 
 Measured crossover (local[4], warm session, median of two runs; Spark
 = ``same_as_edges`` into the noop sink, driver = ``same_as_local``;
@@ -134,12 +134,24 @@ def candidate_pairs(
     ).withColumnsRenamed({"a": "name_a", "b": "name_b"})
 
 
+def _sorted_sum(terms: Column) -> Column:
+    """A group's sum of ``terms``, added in ascending order. A float sum
+    depends on the order its terms are added in, and a plain ``sum``
+    adds them in the order the rows reach the aggregate, which follows
+    the input's partitioning; in sorted order the same terms always
+    give the same bits."""
+    return F.aggregate(F.array_sort(F.collect_list(terms)), F.lit(0.0),
+                       lambda acc, x: acc + x)
+
+
 def scored_pairs(names: DataFrame, max_bucket: int = 64) -> DataFrame:
     """Candidate pairs with IDF-weighted shingle-cosine similarity.
 
     cosine(a,b) = sum_{g in a∩b} idf(g)^2 / (||a|| * ||b||), with
     idf(g) = ln(1 + N/df(g)) over the distinct-name corpus. Entirely
-    set-based: explode -> join on shingle -> aggregate."""
+    set-based: explode -> join on shingle -> aggregate. Both sums add
+    their terms in sorted order (:func:`_sorted_sum`), so a score is a
+    function of the names alone, not of how the input is partitioned."""
     # localCheckpoint, not cache/persist: both frames back the returned
     # lazy plan, so the operator can never unpersist them itself — a
     # CacheManager entry would pin vocabulary-sized data for the whole
@@ -159,7 +171,7 @@ def scored_pairs(names: DataFrame, max_bucket: int = 64) -> DataFrame:
     # `distinct` above)
     weighted = sh.join(idf, "shingle").localCheckpoint(eager=True)
     norms = weighted.groupBy("name").agg(
-        F.sqrt(F.sum(F.col("idf") * F.col("idf"))).alias("norm")
+        F.sqrt(_sorted_sum(F.col("idf") * F.col("idf"))).alias("norm")
     )
 
     cands = candidate_pairs(distinct, max_bucket, assume_distinct=True)
@@ -173,7 +185,7 @@ def scored_pairs(names: DataFrame, max_bucket: int = 64) -> DataFrame:
         cands.join(wa, "name_a")
         .join(wb, ["name_b", "shingle"])
         .groupBy("name_a", "name_b")
-        .agg(F.sum(F.col("idf_a") * F.col("idf_b")).alias("dot"))
+        .agg(_sorted_sum(F.col("idf_a") * F.col("idf_b")).alias("dot"))
     )
     na = norms.select(F.col("name").alias("name_a"), F.col("norm").alias("norm_a"))
     nb = norms.select(F.col("name").alias("name_b"), F.col("norm").alias("norm_b"))

@@ -160,19 +160,20 @@ def run_pipeline(
     pairs; above it, the Spark path commits ``same_as`` first and the
     mapping reads it back. Side work reads only the committed
     extraction and runs beside the chain on driver threads: the triples
-    overwrite, the edges and dropped commits and the counter aggregate.
-    It starts with the collect, whose plan is built first, so the
-    collect's first job reaches Spark's FIFO queue ahead of theirs. All of it is joined
-    before ``vacuum``; an exception in any task surfaces from this
-    call. A crash between the ``same_as`` and nodes commits re-runs to
-    the same tables: the mapping is a pure function of the committed
-    extraction, the graph's old node partition and, on the Spark path,
-    the committed ``same_as``. ``stage_seconds`` holds each stage's own
-    elapsed time (``linking`` ends when the pairs are in hand, or on
-    the Spark path when ``same_as`` has committed; ``canonicalize`` is
-    the mapping build plus the nodes commit; ``materialize`` is the
-    edges and dropped commits and the counter aggregate), so the
-    entries overlap and may sum to more than the wall time.
+    overwrite and the edges and dropped commits (the per-batch counters
+    are observed on the edges write). It starts with the collect, whose
+    plan is built first, so the collect's first job reaches Spark's
+    FIFO queue ahead of theirs. All of it is joined before ``vacuum``;
+    an exception in any task surfaces from this call. A crash between
+    the ``same_as`` and nodes commits re-runs to the same tables: the
+    mapping is a pure function of the committed extraction, the graph's
+    old node partition and, on the Spark path, the committed
+    ``same_as``. ``stage_seconds`` holds each stage's own elapsed time
+    (``linking`` ends when the pairs are in hand, or on the Spark path
+    when ``same_as`` has committed; ``canonicalize`` is the mapping
+    build plus the nodes commit; ``materialize`` is the edges and
+    dropped commits), so the entries overlap and may sum to more than
+    the wall time.
 
     Counters: ``pages``, ``triples``, the per-batch ``nodes``, ``edges``
     and ``dropped_relations``, the ``*_total`` snapshot sizes,
@@ -285,10 +286,10 @@ def run_pipeline(
         return _graph_rows(warehouse.triples, graph_id)
 
     # ---- stages 3-4: link -> one nodes commit, side work beside it ----
-    # The triples, edges and dropped commits and the counter aggregate
-    # read only the committed extraction, so they start now, on pool
-    # threads, while this thread runs the chain: the features collect
-    # -> pairs -> canonical mapping -> the nodes commit. The collect's
+    # The triples, edges and dropped commits read only the committed
+    # extraction, so they start now, on pool threads, while this
+    # thread runs the chain: the features collect -> pairs ->
+    # canonical mapping -> the nodes commit. The collect's
     # plan is already built, so its first job reaches Spark's FIFO
     # queue ahead of the side commits' scans, whose plans the side
     # threads still have to build. (Holding the side work until the

@@ -380,27 +380,35 @@ class LakeTable:
         caller knows it. ``batch_id`` becomes the write's Spark job
         description, so the event log says which commit a job served.
 
-        One fan-out rule: the write runs through ``par`` tasks (the
-        larger of shuffle partitions and default parallelism), and each
-        key spreads over ``ceil(par / n_keys)`` writers — WRITE_SALT
-        when n_keys is unknown. Rows are repartitioned on (key, salt),
-        so each (key, salt) pair lands wholly in one task and a key
-        writes at most salt files. Keys × salt covers every core, so a
-        one-key whole-graph refresh still writes through ``par`` tasks.
-        The count is explicit (REPARTITION_BY_NUM): AQE re-coalesces a
-        column-only repartition toward its advisory size, which funnels
-        a small write through 1-2 tasks."""
+        One fan-out rule (Iceberg's ``write.distribution-mode``):
+
+        - A one-key write (``n_keys == 1``: a graph-scoped commit)
+          writes from its input's own partitions, no shuffle: each
+          input task writes one file into the key's directory, so the
+          write runs as wide as its input and writes as many files as
+          the input has non-empty partitions.
+        - Any other write runs through ``par`` tasks (the larger of
+          shuffle partitions and default parallelism), and each key
+          spreads over ``ceil(par / n_keys)`` writers — WRITE_SALT when
+          n_keys is unknown. Rows are repartitioned on (key, salt), so
+          each (key, salt) pair lands wholly in one task and a key
+          writes at most salt files; without it every input task would
+          write a file per key (16 url buckets × input partitions).
+          The count is explicit (REPARTITION_BY_NUM): AQE re-coalesces
+          a column-only repartition toward its advisory size, which
+          funnels a small write through 1-2 tasks."""
         path = os.path.join(self.dir, snap_name)
         spark = df.sparkSession
         writer = df.write
         if partition_by:
-            par = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                      spark.sparkContext.defaultParallelism)
-            salt_n = -(-par // n_keys) if n_keys else self.WRITE_SALT
-            salt = (F.rand(0) * salt_n).cast("int")
-            writer = df.withColumn(_PK, self._pk_col(partition_by)).repartition(
-                par, F.col(_PK), salt
-            ).write.partitionBy(_PK)
+            df = df.withColumn(_PK, self._pk_col(partition_by))
+            if n_keys != 1:
+                par = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
+                          spark.sparkContext.defaultParallelism)
+                salt_n = -(-par // n_keys) if n_keys else self.WRITE_SALT
+                salt = (F.rand(0) * salt_n).cast("int")
+                df = df.repartition(par, F.col(_PK), salt)
+            writer = df.write.partitionBy(_PK)
         # the description is a thread-local property, so commits on
         # concurrent threads tag their own jobs
         with job_description(spark, batch_id):
@@ -589,11 +597,11 @@ class LakeTable:
             mor = entry["mor"]
         if partition_by and (entry is None
                              or entry.get("partition_dirs") is not None):
-            # n_keys scales the write salt: a single-key batch (one
-            # graph's streaming micro-batch) would otherwise funnel
-            # through WRITE_SALT tasks while the cluster idles; the
-            # distinct-keys probe is one tiny job against a batch-sized
-            # frame
+            # n_keys picks the write's fan-out: a single-key batch (one
+            # graph's streaming micro-batch) writes from its own
+            # partitions instead of funnelling through WRITE_SALT
+            # tasks; the distinct-keys probe is one tiny job against a
+            # batch-sized frame
             return self._write_snapshot(
                 df, "append", batch_id, counters, partition_by, mor=mor,
                 n_keys=len(self._keys_of(df, partition_by)) or None,
@@ -628,7 +636,7 @@ class LakeTable:
 
         ``updates`` is not deduplicated on the merge key: the engine's
         batches are key-unique by construction (crawl snapshots are
-        url-keyed, node ids are url-hash-namespaced, edges are grouped
+        url-keyed, node ids are url-hash-namespaced, edges are deduped
         on their key), so a deduplicating shuffle would buy nothing. A
         batch that repeats a key lands every one of its rows for it.
 

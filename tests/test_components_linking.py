@@ -149,6 +149,23 @@ def test_same_as_local_matches_spark_path(spark, monkeypatch):
     assert same_as_local(names) is None
 
 
+def test_scored_pairs_do_not_depend_on_partitioning(spark):
+    """The Spark path adds each dot product's and each norm's terms in
+    sorted order, so one vocabulary scores to the same bits however
+    its frame is partitioned. (A plain sum adds them in the order the
+    rows reach the aggregate, and moved scores by up to 3.3e-16.)"""
+    names, _ = _linking_names(spark)
+
+    def scores(df):
+        return {(r["name_a"], r["name_b"]): r["score"]
+                for r in scored_pairs(df).collect()}
+
+    one = scores(names.coalesce(1))
+    many = scores(names.repartition(7))
+    assert len(one) > 100 and one.keys() == many.keys()
+    assert [k for k in one if one[k] != many[k]] == []
+
+
 def test_candidate_pairs_row_local_band_keys_match_minhash_aggregate(spark):
     """candidate_pairs computes each name's minhashes row-locally
     (_band_keys); that gives the same pairs as the min-hash aggregate

@@ -1440,6 +1440,35 @@ def test_simhash_survives_wide_documents(spark):
     assert fps[1] == fps[2]
 
 
+def test_word_ngrams_binds_tokens_once_and_matches_inline_form(spark):
+    """word_ngrams binds the token array once instead of re-splitting
+    the text inside the n-gram lambda; on NULL, empty, punctuation-only,
+    shorter-than-n, CJK, mixed and ordinary texts it returns exactly
+    what the inline expression returns, for n = 1, 2, 3."""
+    from knowledge_graph_spark.functions.vectors import word_ngrams
+
+    def inline(col, n):
+        w = (f"filter(split(lower({col}), '[^\\\\p{{L}}\\\\p{{N}}]+'), "
+             "x -> x != '')")
+        return F.expr(
+            f"CASE WHEN size({w}) >= {n} "
+            f"THEN transform(sequence(0, size({w}) - {n}), "
+            f"i -> array_join(slice({w}, i + 1, {n}), ' ')) "
+            f"ELSE array(array_join({w}, ' ')) END")
+
+    texts = [None, "", "   ", "!!! ... ,,,", "one", "One two",
+             "华星科技公司收购蓝海集团", "华星 科技 公司 收购 蓝海",
+             "The quick, brown fox -- jumps over 2 lazy dogs!",
+             "a b c d e f g h", "Ünïcode wörds, ÄÖÜ 数据 42x"]
+    docs = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    for n in (1, 2, 3):
+        rows = docs.select("id", word_ngrams("text", n).alias("new"),
+                           inline("text", n).alias("old")).collect()
+        assert len(rows) == len(texts)
+        for r in rows:
+            assert r["new"] == r["old"], (n, texts[r["id"]], r["new"], r["old"])
+
+
 def test_topk_drops_nan_scores_from_zero_vectors(spark):
     """A zero-norm vector has cosine NaN against every query, and Spark
     orders NaN first under desc — it must be excluded, not rank 1."""

@@ -139,10 +139,11 @@ def test_lake_per_partition_lineage(spark, tmp_path):
 
 
 def test_lake_write_fan_out_follows_parallelism(spark, tmp_path):
-    """One fan-out rule for partitioned writes: keys x salt covers the
-    cluster's parallelism (4 here), no more. Sixteen declared keys get
-    one writer each, so one file per key; one declared key still
-    spreads over every core, at most 4 files."""
+    """One fan-out rule for partitioned writes: sixteen declared keys
+    are repartitioned on (key, salt) so that keys x salt covers the
+    cluster's parallelism (4 here), one writer and one file per key; a
+    one-key write writes from its input's own partitions, so it writes
+    as many files as its input has partitions (4 here)."""
     from knowledge_graph_spark.sources.lake import LakeTable
 
     def files_per_key(t):
@@ -165,7 +166,73 @@ def test_lake_write_fan_out_follows_parallelism(spark, tmp_path):
     one.overwrite_partitions(df, partition_by=["graph_id"],
                              touched_keys=["g"])
     n = files_per_key(one)
-    assert len(n) == 1 and 1 <= n[0] <= 4, n
+    assert n == [4], n
+
+
+@pytest.fixture
+def written_plans(monkeypatch):
+    """Records the physical plan of every parquet write a LakeTable
+    commit makes, under the job description the commit set (its batch
+    id): the frame handed to the writer, repartition included."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = {}
+    real = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        desc = self._df.sparkSession.sparkContext.getLocalProperty(
+            "spark.job.description")
+        plans[desc] = plan(self._df)
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    return plans
+
+
+FAN_OUT = r"Arguments: hashpartitioning\(_pk#"
+
+
+def test_lake_write_shuffles_only_multi_key_writes(spark, tmp_path,
+                                                   written_plans):
+    """A one-key commit writes from its input's partitions: its plan
+    has no (key, salt) repartition. A 16-key commit keeps exactly one."""
+    import re
+
+    from knowledge_graph_spark.sources.lake import LakeTable
+
+    df = spark.range(0, 3200, numPartitions=4).select(
+        (F.col("id") % 16).cast("string").alias("bucket"),
+        F.lit("g").alias("graph_id"), "id")
+    LakeTable(str(tmp_path), "one").overwrite_partitions(
+        df.drop("bucket"), partition_by=["graph_id"], touched_keys=["g"],
+        batch_id="one")
+    LakeTable(str(tmp_path), "many").overwrite_partitions(
+        df.drop("graph_id"), partition_by=["bucket"],
+        touched_keys=[str(b) for b in range(16)], batch_id="many")
+    assert "Exchange" not in written_plans["one"]
+    assert len(re.findall(FAN_OUT, written_plans["many"])) == 1
+    assert len(re.findall(r"\(\d+\) Exchange", written_plans["many"])) == 1
+
+
+def test_first_build_edges_write_has_no_exchange(spark, tmp_path,
+                                                 written_plans):
+    """A graph's first build shuffles nothing to write its edges: the
+    dedupe runs inside each page's row and the one-key commit writes
+    from the extraction scan's partitions. The build's other one-key
+    commits (nodes, dropped, same_as) add no (key, salt) repartition;
+    the 16-bucket triples commit keeps it."""
+    import re
+
+    from knowledge_graph_spark.pipeline import KGWarehouse, run_pipeline
+    from knowledge_graph_spark.sources.pages import generate_spark
+
+    wh = KGWarehouse(str(tmp_path))
+    run_pipeline(spark, generate_spark(spark, 60, partitions=2), wh,
+                 graph_id="g1", link_entities=True)
+    assert "Exchange" not in written_plans["g1/edges"], written_plans["g1/edges"]
+    for stage in ("nodes", "dropped", "same_as"):
+        assert not re.search(FAN_OUT, written_plans[f"g1/{stage}"]), stage
+    assert len(re.findall(FAN_OUT, written_plans["g1/triples"])) == 1
 
 
 def test_triples_resolution_is_join_free(spark):

@@ -405,6 +405,138 @@ def test_materialize_counters_match_tables_on_foreign_input(spark, tmp_path):
     assert [c["nodes"], c["edges"], c["dropped_relations"]] == got == [3, 2, 4]
 
 
+def test_page_edges_dedupe_matches_graph_wide_min_struct(spark):
+    """The per-page edge dedupe keeps, for each (src, dst, rel_type),
+    the row the graph-wide groupBy kept: min(struct(verb, similarity,
+    url)) over the valid relations. The foreign extraction frame has
+    two verbs mapping to one predicate (收购/并购 -> ACQUIRE), a NULL
+    verb, a NaN and a NULL similarity, an exact duplicate relation, a
+    type that sanitizes onto another (PART-OF/PART_OF), invalid and
+    dangling relations, and NULL entities/relations rows."""
+    from knowledge_graph_spark.operators.extraction import EXTRACT_SCHEMA
+    from knowledge_graph_spark.operators.graph_build import (
+        _edge_ok, _node_id, _sanitized_type_col, page_edges)
+
+    nan = float("nan")
+
+    def ent(i):
+        return {"id": i, "name": f"n{i}", "type": "ORG", "start": 0, "end": 1}
+
+    def rel(src, dst, typ, verb, sim):
+        return {"source": src, "target": dst, "type": typ, "verb": verb,
+                "similarity": sim}
+
+    u1 = [rel("e1", "e2", "ACQUIRE", "收购", 0.9),
+          rel("e1", "e2", "ACQUIRE", "并购", 0.8),
+          rel("e1", "e2", "ACQUIRE", "并购", 0.8),
+          rel("e2", "e3", "SUPPORT", "支持", None),
+          rel("e2", "e3", "SUPPORT", None, 0.5),
+          rel("e3", "e1", "PART-OF", "属于", nan),
+          rel("e3", "e1", "PART_OF", "属于", 0.1),
+          rel("e3", "e2", "PART_OF", "属于", nan),
+          rel("e1", "e3", "收购", "收购", 0.7),
+          rel("e1", "e9", "ACQUIRE", "收购", 0.7)]
+    extracted = spark.createDataFrame([
+        ("u1", "t", "zh", [ent("e1"), ent("e2"), ent("e3")], u1),
+        ("u2", "t", "zh", [ent("e1"), ent("e2"), ent("e3")],
+         list(reversed(u1)) + [rel("e1", "e2", "ACQUIRE", "并购", nan)]),
+        ("u3", "t", "zh", [ent("e1"), ent("e2")], None),
+        ("u4", "t", "zh", None, u1),
+    ], EXTRACT_SCHEMA)
+
+    rows = extracted.select(
+        "url", F.col("entities.id").alias("_ids"),
+        F.explode("relations").alias("r"))
+    valid = rows.filter(
+        _edge_ok(F.col("r"), F.col("_ids"))
+        & _sanitized_type_col("r.type").isNotNull()
+    ).select(
+        F.lit("g").alias("graph_id"),
+        _node_id("r.source").alias("src"), _node_id("r.target").alias("dst"),
+        _sanitized_type_col("r.type").alias("rel_type"),
+        F.col("r.verb").alias("verb"),
+        F.coalesce("r.similarity", F.lit(0.0)).alias("similarity"), "url")
+    key = ["graph_id", "src", "dst", "rel_type"]
+    old = valid.groupBy(*key).agg(
+        F.min(F.struct("verb", "similarity", "url")).alias("_m")
+    ).select(*key, "_m.verb", "_m.similarity", "_m.url",
+             F.lit("u").alias("user_id"))
+    new = page_edges(extracted, "g", "u")
+
+    def rowset(df):
+        return sorted((tuple("NaN" if v != v else v for v in r)
+                       for r in df.collect()), key=repr)
+
+    assert new.columns == old.columns
+    assert rowset(new) == rowset(old)
+    assert len(rowset(new)) == 8 < valid.count() == 17
+
+
+def _aggregate_counters(extracted):
+    """The per-batch counters as one aggregate job over the extraction
+    computed them before they rode the edges write."""
+    ids = F.col("entities.id")
+    valid = F.filter("relations", lambda r: (
+        graph_build._sanitized_type_col(r["type"]).isNotNull()
+        & graph_build._edge_ok(r, ids)))
+
+    def n(c):
+        return F.sum(F.greatest(F.size(c), F.lit(0)))
+
+    s = extracted.select(n("entities").alias("n_nodes"),
+                         n(valid).alias("n_valid"),
+                         n("relations").alias("n_rel")).first()
+    n_valid = s["n_valid"] or 0
+    return {"nodes": s["n_nodes"] or 0, "edges": n_valid,
+            "dropped_relations": (s["n_rel"] or 0) - n_valid}
+
+
+def test_observed_counters_equal_the_aggregate(spark, tmp_path):
+    """The nodes/edges/dropped_relations counters, observed on the
+    edges write, equal the aggregate over the batch's extraction on a
+    build, an update, a resumed run (0), an empty batch (0) and a
+    streaming micro-batch (the merge-on-read commits)."""
+    from knowledge_graph_spark.operators.extraction import extract
+    from knowledge_graph_spark.operators.graph_build import materialize_graph
+    from knowledge_graph_spark.pipeline import N_URL_BUCKETS
+    from knowledge_graph_spark.sources.lake import LakeTable
+
+    keys = ("nodes", "edges", "dropped_relations")
+    wh = KGWarehouse(str(tmp_path / "wh"))
+
+    def run(pages, graph_id, sfx=None):
+        c = run_pipeline(spark, pages, wh, graph_id=graph_id,
+                         link_entities=False, batch_suffix=sfx)
+        return {k: c[k] for k in keys}
+
+    def graph_extraction(graph_id):
+        return wh.extracted.read_partitions(
+            spark, [f"{graph_id}|{b}" for b in range(N_URL_BUCKETS)])
+
+    built = run(generate_spark(spark, 60, partitions=2), "g1")
+    assert built == _aggregate_counters(graph_extraction("g1"))
+    assert built["nodes"] > 0 and built["edges"] > 0
+    assert built["dropped_relations"] > 0
+
+    recrawl = generate_spark(spark, 10, partitions=1).withColumn(
+        "text", F.concat(F.coalesce("text", F.lit("")),
+                         F.lit("华星科技公司收购九州网络公司。")))
+    updated = run(recrawl, "g1", "r1")
+    assert updated == _aggregate_counters(graph_extraction("g1"))
+
+    assert run(recrawl, "g1", "r1") == dict.fromkeys(keys, 0)
+    assert run(recrawl.limit(0), "g2") == dict.fromkeys(keys, 0)
+
+    batch = extract(generate_spark(spark, 20, partitions=2, start=500)).persist()
+    tables = [LakeTable(str(tmp_path / "stream"), n)
+              for n in ("nodes", "edges", "dropped")]
+    c = materialize_graph(batch, *tables, graph_id="s", batch_id="stream/b0",
+                          mor_seq=0)
+    assert {k: c[k] for k in keys} == _aggregate_counters(batch)
+    assert c["edges"] > 0
+    batch.unpersist()
+
+
 def test_user_graph_links_survive_cross_user_update(spark, tmp_path):
     """Edges keep the FIRST writer's user_id (ON CREATE); Q4 must
     list a graph's links by graph membership, not the edge rows'
