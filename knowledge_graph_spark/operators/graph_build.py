@@ -310,39 +310,28 @@ def snapshot_rows(table, result: dict) -> int:
 
 def materialize_graph(
     extracted: DataFrame,
-    nodes_table,
     edges_table,
     dropped_table,
     graph_id: str,
     user_id: str = "user_001",
     batch_id: str | None = None,
-    mor_seq: int | None = None,
 ) -> dict:
-    """End-to-end: nested extraction result -> MERGE INTO node/edge
-    LakeTables, with counters recorded in the snapshot lineage.
+    """Nested extraction result -> the graph's edge and dropped-relation
+    commits, with the batch's counters.
 
     ``user_id`` default mirrors the reference (kg_writer.py:256).
     Returns the commit summary (counters included) for metrics.
 
-    ``mor_seq`` switches the node/edge commits to MERGE-ON-READ
-    (O(batch) append + read-time resolution; the streaming path —
-    copy-on-write bucketing degenerates to O(table) once a micro-batch
-    touches every bucket). Policies mirror the COW semantics exactly:
-    nodes resolve last-writer-wins (MERGE..SET), edges first-writer-wins
-    (ON CREATE SET).
+    The node partition is the caller's: ``run_pipeline`` links the
+    graph's vocabulary first and writes the partition once, canonical
+    ids stamped (:func:`merged_nodes`, :func:`with_canonical_ids`,
+    :func:`commit_nodes`), beside these commits.
 
-    ``nodes_table=None`` leaves the node partition to the caller, and
-    no node frame is built here: ``run_pipeline`` links the graph's
-    vocabulary first and writes the partition once, canonical ids
-    stamped (:func:`merged_nodes`, :func:`with_canonical_ids`,
-    :func:`commit_nodes`), while the edge and dropped commits run here.
-    The result then has no ``nodes_total``.
-
-    One Spark job per table, ZERO joins in the derivations:
-    nodes/edges/dropped all derive from the nested extraction result
-    with row-local operations (endpoint validation via
-    ``array_contains`` against the same row's entity ids, the edge
-    dedupe per page — see :func:`page_edges`), and a one-key commit
+    One Spark job per table, ZERO joins in the derivations: edges and
+    dropped derive from the nested extraction result with row-local
+    operations (endpoint validation via ``array_contains`` against the
+    same row's entity ids, the edge dedupe per page — see
+    :func:`page_edges`), and a one-key commit
     writes from its input's partitions, so on a graph's first batch
     each write is a parquet scan + project + write. The per-batch
     counters ride the edges write as observed metrics, and the merge
@@ -374,37 +363,16 @@ def materialize_graph(
     ), graph_id, user_id)
     dropped = dropped_relations(extracted, graph_id)
 
-    # node ids are (url-hash, per-doc entity id) and edges are deduped
-    # on their key, so both batches are key-unique, as merge_into
-    # expects; touched_keys=[graph_id] skips partition discovery (this
-    # batch by definition writes exactly one graph partition).
-    # The commits touch DISTINCT LakeTables (separate directories,
-    # separate manifests, no shared mutable state) and only read
-    # ``extracted``, so they run on concurrent driver threads — Spark
-    # schedules the jobs side by side and the write stages fill the
-    # cores one commit alone can't (measured: materialize stage ~5.3 s
-    # -> ~3.5 s on the 100k-page bench). Each task re-reads
-    # ``extracted`` unless the caller persisted it: streaming does (its
-    # input is a fresh micro-batch extraction); run_pipeline passes the
-    # committed lake table uncached, so each task scans its parquet
-    # files
-    def _commit_nodes():
-        nodes = build_nodes(entities_table(extracted), graph_id, user_id)
-        if mor_seq is not None:
-            return nodes_table.merge_on_read(
-                nodes, on=["graph_id", "id"], seq=mor_seq, policy="last",
-                batch_id=f"{bid}/nodes", partition_by=["graph_id"],
-            )
-        return commit_nodes(nodes_table,
-                            merged_nodes(nodes, nodes_table, graph_id),
-                            graph_id, f"{bid}/nodes")
-
+    # edges are deduped on their key, so the batch is key-unique, as
+    # merge_into expects; touched_keys=[graph_id] skips partition
+    # discovery (this batch by definition writes exactly one graph
+    # partition). The two commits touch DISTINCT LakeTables (separate
+    # directories, separate manifests, no shared mutable state) and
+    # only read ``extracted``, so they run on concurrent driver threads
+    # and Spark schedules their jobs side by side. run_pipeline passes
+    # the committed lake table uncached, so each commit scans its
+    # parquet files.
     def _commit_edges():
-        if mor_seq is not None:
-            return edges_table.merge_on_read(
-                edges, on=edge_key, seq=mor_seq, policy="first",
-                batch_id=f"{bid}/edges", partition_by=["graph_id"],
-            )
         return edges_table.merge_into(edges, on=edge_key,
                                       when_matched="ignore",
                                       batch_id=f"{bid}/edges",
@@ -412,39 +380,27 @@ def materialize_graph(
                                       touched_keys=[graph_id])
 
     def _commit_dropped():
-        if mor_seq is not None:
-            # streaming path: the input IS the micro-batch's own
-            # extraction, so the quarantine rows are a true delta
-            return dropped_table.append(
-                dropped, batch_id=f"{bid}/dropped",
-                partition_by=["graph_id"])
-        # batch path: ``dropped`` is re-derived from the graph's FULL
-        # accumulated extraction — an append would duplicate every
-        # previously quarantined relation on each update batch and
-        # keep stale rows from pages whose re-crawl fixed the
-        # relation. Replace this graph's partition wholesale (the
-        # triples-stage convention).
+        # ``dropped`` is re-derived from the graph's FULL accumulated
+        # extraction — an append would duplicate every previously
+        # quarantined relation on each update batch and keep stale rows
+        # from pages whose re-crawl fixed the relation. Replace this
+        # graph's partition wholesale (the triples-stage convention).
         return dropped_table.overwrite_partitions(
             dropped, partition_by=["graph_id"],
             touched_keys=[graph_id], batch_id=f"{bid}/dropped")
 
-    tasks = [_commit_edges, _commit_dropped]
-    if nodes_table is not None:
-        tasks.append(_commit_nodes)
-    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-        futures = [pool.submit(f) for f in tasks]
-    r_edges, r_dropped, *r_nodes = [f.result() for f in futures]
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        edges_future = pool.submit(_commit_edges)
+        dropped_future = pool.submit(_commit_dropped)
+    r_edges, r_dropped = edges_future.result(), dropped_future.result()
     # the edges commit decides "resumed": a skipped commit ran no job,
     # so nothing was observed, and an idempotent resume reports 0
     got = {} if r_edges.get("skipped") else counted.get
     n_valid = got.get("edges") or 0
-    out = {
+    return {
         "nodes": got.get("nodes") or 0,
         "edges": n_valid,
         "dropped_relations": (got.get("relations") or 0) - n_valid,
         "edges_total": snapshot_rows(edges_table, r_edges),
         "dropped_total": snapshot_rows(dropped_table, r_dropped),
     }
-    if r_nodes:
-        out["nodes_total"] = snapshot_rows(nodes_table, r_nodes[0])
-    return out

@@ -126,8 +126,10 @@ def run_pipeline(
     = one graph): every stage reads only this graph's extraction
     partitions, so another graph's crawl of the same url never reaches
     it, and ``pages`` counts the graph's extracted rows.
-    For high-frequency incremental ingestion use streaming/ingest.py,
-    which processes only the new pages per micro-batch.
+    This is the one way a graph is built or updated:
+    ``streaming/ingest.py`` calls it once per micro-batch, with the
+    batch's content fingerprint as ``batch_suffix``, so each
+    micro-batch costs what an update batch costs — O(graph).
 
     INPUT CONTRACT: ``pages`` must be url-unique — ``merge_into`` does
     not deduplicate its batch (crawl snapshots are url-keyed by
@@ -260,7 +262,7 @@ def run_pipeline(
     def _materialize():
         t0 = time.time()
         mat = graph_build.materialize_graph(
-            extracted, None, warehouse.edges, warehouse.dropped,
+            extracted, warehouse.edges, warehouse.dropped,
             graph_id=graph_id, user_id=user_id, batch_id=b,
         )
         stage_s["materialize"] = round(time.time() - t0, 2)

@@ -17,6 +17,11 @@ provides the minimal equivalent:
   never read, rewritten, or copied. ``append`` on a partitioned table
   adds new files without reading the current snapshot at all.
 - ``merge_into`` with Iceberg-like WHEN MATCHED semantics
+- **one commit mode, copy-on-write**: a commit writes the rewritten
+  partitions' final rows, so a snapshot's files ARE its rows and a
+  read never resolves versions. (Lineage entries written by the
+  removed merge-on-read mode carry a ``mor`` spec; reads and commits
+  refuse them, see ``_check_copy_on_write``.)
 - **idempotent batch application**: every write can carry a
   ``batch_id``; re-applying an already-committed batch is a no-op, so
   any stage resumes safely after a crash (at-least-once driver, exactly
@@ -54,14 +59,12 @@ import time
 import urllib.parse
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from ..session import job_description
 
 _PK = "_pk"
-_SEQ = "_seq"   # merge-on-read write sequence
-_TOMB = "_tomb"  # merge-on-read tombstone marker
 
 
 class LakeTable:
@@ -95,8 +98,22 @@ class LakeTable:
         m = self._manifest()
         for e in reversed(m["lineage"]):
             if e["snapshot"] == m["current"]:
-                return e
+                return self._check_copy_on_write(e)
         return None
+
+    def _check_copy_on_write(self, entry: dict) -> dict:
+        """Every read and commit takes its entry from here or
+        :meth:`_entry_for`. An entry with a ``mor`` spec was written by
+        the removed merge-on-read path: its files hold raw ``_seq`` /
+        ``_tomb`` rows and superseded versions that only read-time
+        resolution hid, so the table is refused, not read."""
+        if entry.get("mor"):
+            raise ValueError(
+                f"{self.dir}: {entry['snapshot']} is a merge-on-read "
+                "snapshot; that commit mode was removed and its rows are "
+                "unresolved — rebuild the table with overwrite() or re-run "
+                "the pipeline into a fresh warehouse")
+        return entry
 
     def applied_batches(self) -> set[str]:
         if not self.exists():
@@ -133,11 +150,9 @@ class LakeTable:
         dirs = entry.get("partition_dirs")
         reader = self._reader(spark, entry)
         if dirs is None:
-            df = reader.parquet(os.path.join(self.dir, entry["snapshot"]))
-        else:
-            paths = [os.path.join(self.dir, p) for ps in dirs.values() for p in ps]
-            df = reader.parquet(*paths)
-        return self._resolve_mor(df, entry)
+            return reader.parquet(os.path.join(self.dir, entry["snapshot"]))
+        return reader.parquet(
+            *[os.path.join(self.dir, p) for ps in dirs.values() for p in ps])
 
     @staticmethod
     def _reader(spark: SparkSession, entry: dict):
@@ -176,8 +191,8 @@ class LakeTable:
         reach) indexes the wrong key positions and silently misses
         partitions it should rewrite. A partitioned table also cannot
         be appended/merged unpartitioned (that path would de-partition
-        it on the next full rewrite). ``overwrite``/``compact`` are
-        exempt: they replace the whole layout deliberately."""
+        it on the next full rewrite). ``overwrite`` is exempt: it
+        replaces the whole layout deliberately."""
         spec = (entry or {}).get("partition_spec")
         if spec is None:
             return
@@ -200,8 +215,7 @@ class LakeTable:
         if evolve or entry is None:
             return
         have = {f["name"] for f in json.loads(entry["schema"])["fields"]}
-        extra = [c for c in df.columns
-                 if c not in have and c not in (_SEQ, _TOMB)]
+        extra = [c for c in df.columns if c not in have]
         if extra:
             raise ValueError(
                 f"{self.dir}: batch adds column(s) {extra} not in the "
@@ -219,126 +233,18 @@ class LakeTable:
             raise ValueError(
                 f"{self.dir}: no readable lineage entry for {snapshot!r} "
                 f"(never committed, or reclaimed by vacuum)")
-        return target
+        return self._check_copy_on_write(target)
 
     def read_partitions(self, spark: SparkSession, keys: list[str]) -> Optional[DataFrame]:
         """Scan only the named partitions (planning-time pruning: the
         manifest IS the partition index, unlisted files are never
-        opened). MOR resolution is partition-local, so reading a subset
-        of partitions stays correct as long as each partition's dirs
-        are all listed — which the manifest guarantees."""
+        opened)."""
         entry = self.current_entry()
         dirs = (entry or {}).get("partition_dirs") or {}
         paths = [os.path.join(self.dir, p) for k in keys for p in dirs.get(k, [])]
         if not paths:
             return None
-        return self._resolve_mor(self._reader(spark, entry).parquet(*paths),
-                                 entry)
-
-    def read_changes(self, spark: SparkSession, from_snapshot: str,
-                     to_snapshot: Optional[str] = None) -> DataFrame:
-        """Incremental scan (Iceberg incremental-append / CDC read):
-        the rows ADDED by append commits AFTER ``from_snapshot``, up to
-        ``to_snapshot`` (default: current), plus a ``_change_type``
-        column — ``insert`` for plain appends, ``upsert``/``delete``
-        for merge-on-read batches (tombstones surface as deletes).
-
-        Planning is a pure metadata diff: an append entry's added
-        files are its manifest listing minus its predecessor's, so the
-        changelog costs zero data reads and the scan opens ONLY the
-        files the window added — O(changes), never O(table). Raises
-        when the window crosses an overwrite / compact / rollback /
-        delete commit (those rewrite files: an incremental consumer
-        must re-baseline from that snapshot — Iceberg's
-        incremental-scan contract) or when ``from_snapshot`` was
-        already folded away by vacuum."""
-        if not self.exists():
-            raise FileNotFoundError(f"LakeTable {self.dir} has no snapshot")
-        m = self._manifest()
-        lineage = [e for e in m["lineage"] if not e.get("skipped")]
-
-        def _idx(snap: str) -> int:
-            for i in range(len(lineage) - 1, -1, -1):
-                if lineage[i]["snapshot"] == snap:
-                    return i
-            raise ValueError(
-                f"{self.dir}: no readable lineage entry for {snap!r} "
-                "(never committed, or reclaimed by vacuum)")
-
-        i0 = _idx(from_snapshot)
-        i1 = _idx(to_snapshot or m["current"])
-        if i1 < i0:
-            raise ValueError(
-                f"{self.dir}: to_snapshot {to_snapshot!r} precedes "
-                f"from_snapshot {from_snapshot!r}")
-        added: list[str] = []
-        for j in range(i0 + 1, i1 + 1):
-            prev, e = lineage[j - 1], lineage[j]
-            if e["op"] != "append":
-                raise ValueError(
-                    f"{self.dir}: incremental read crosses a "
-                    f"{e['op']!r} commit ({e['snapshot']}) — files were "
-                    "rewritten; re-baseline the consumer from it")
-            dirs = e.get("partition_dirs")
-            prev_dirs = prev.get("partition_dirs")
-            if dirs is None or prev_dirs is None:
-                raise ValueError(
-                    f"{self.dir}: unpartitioned appends rewrite the "
-                    "snapshot; incremental read needs a partitioned table")
-            prev_set = {p for ps in prev_dirs.values() for p in ps}
-            added += [p for ps in dirs.values() for p in ps
-                      if p not in prev_set]
-        if not added:
-            return (
-                self.read(spark, as_of=lineage[i1]["snapshot"]).limit(0)
-                .withColumn("_change_type", F.lit("insert"))
-            )
-        df = self._reader(spark, lineage[i1]).parquet(
-            *[os.path.join(self.dir, p) for p in added])
-        if _SEQ in df.columns:
-            return (
-                df.withColumn(
-                    "_change_type",
-                    F.when(F.col(_TOMB), F.lit("delete"))
-                    .otherwise(F.lit("upsert")),
-                )
-                .drop(_SEQ, _TOMB)
-            )
-        return df.withColumn("_change_type", F.lit("insert"))
-
-    @staticmethod
-    def _resolve_mor(df: DataFrame, entry: dict) -> DataFrame:
-        """Merge-on-read resolution: keep each key's rows from its
-        winning write sequence ('last' = newest _seq wins, the UPDATE
-        policy; 'first' = oldest wins, the ON-CREATE policy), then drop
-        tombstones. No-op for copy-on-write snapshots."""
-        mor = entry.get("mor")
-        if not mor:
-            return df
-        w = Window.partitionBy(*mor["key"])
-        # a tombstone at seq T kills every STRICTLY OLDER row under
-        # either policy, and never competes itself; live rows AT the
-        # tombstone's own seq survive (the streaming convention: a
-        # batch tombstones its full key set at its own seq so a
-        # re-crawl with zero rows clears stale state while the same
-        # batch's live rows win). Rows written after a tombstone
-        # compete fresh under the policy. The old single-window form
-        # picked the policy winner FIRST, so under policy='first' an
-        # early live row beat any later tombstone — the delete
-        # silently no-oped while read_changes still emitted its CDC
-        # 'delete'.
-        last_tomb = F.max(
-            F.when(F.col(_TOMB), F.col(_SEQ))).over(w)
-        alive = (df.withColumn("_lt", last_tomb)
-                 .filter((~F.col(_TOMB))
-                         & (F.col("_lt").isNull()
-                            | (F.col(_SEQ) >= F.col("_lt")))))
-        win = (F.max if mor["policy"] == "last" else F.min)(_SEQ).over(w)
-        return (
-            alive.withColumn("_win", win)
-            .filter(F.col(_SEQ) == F.col("_win"))
-            .drop(_SEQ, _TOMB, "_win", "_lt")
-        )
+        return self._reader(spark, entry).parquet(*paths)
 
     # ---- write primitives ---------------------------------------------
 
@@ -433,7 +339,6 @@ class LakeTable:
                       partition_dirs=None, partition_rows=None,
                       carried: int = 0,
                       partition_by: Optional[list[str]] = None,
-                      mor: Optional[dict] = None,
                       schema: Optional[str] = None) -> dict:
         manifest = self._manifest() if self.exists() else {
             "table": self.dir, "snap_id": 0, "current": None, "lineage": [],
@@ -453,12 +358,6 @@ class LakeTable:
             entry["carried_partitions"] = carried
             if partition_by is not None:
                 entry["partition_spec"] = list(partition_by)
-        if mor is not None:
-            # the resolution spec MUST land in the same atomic commit as
-            # the lineage entry: a second stamping commit would leave a
-            # crash window where the batch_id is applied but readers
-            # resolve nothing (raw _seq/_tomb rows surface)
-            entry["mor"] = mor
         if schema is not None:
             entry["schema"] = schema
         # monotonic even when a commit re-points at an older snapshot
@@ -474,7 +373,7 @@ class LakeTable:
     def _write_snapshot(
         self, df: DataFrame, op: str, batch_id: Optional[str],
         counters: Optional[dict] = None, partition_by: Optional[list[str]] = None,
-        mor: Optional[dict] = None, n_keys: Optional[int] = None,
+        n_keys: Optional[int] = None,
         entry: Optional[dict] = None, replaced: Optional[set[str]] = None,
     ) -> dict:
         """Write df as a new snapshot and commit it: every write ends
@@ -501,8 +400,7 @@ class LakeTable:
             dirs, counts, rows = merged, merged_rows, sum(merged_rows.values())
         return self._commit_entry(op, batch_id, counters, snap_name, rows,
                                   dirs, counts, carried=carried,
-                                  partition_by=partition_by, mor=mor,
-                                  schema=schema)
+                                  partition_by=partition_by, schema=schema)
 
     # ---- partition-key helpers ----------------------------------------
 
@@ -569,48 +467,33 @@ class LakeTable:
     def append(
         self, df: DataFrame, batch_id: Optional[str] = None,
         counters: Optional[dict] = None, partition_by: Optional[list[str]] = None,
-        mor: Optional[dict] = None, evolve_schema: bool = False,
+        evolve_schema: bool = False,
     ) -> dict:
         """Fast append. On a partitioned table this is a pure file add:
         the new rows are written as fresh directories and the manifest
         carries every existing directory forward by reference — the
         current snapshot is NEVER read (Iceberg append semantics).
-        Unpartitioned tables are rewritten as a read+union.
-
-        ``mor``: resolution spec to stamp on the new lineage entry IN
-        THE SAME atomic commit (merge_on_read passes it; a MOR table's
-        existing spec is carried automatically otherwise)."""
+        Unpartitioned tables are rewritten as a read+union."""
         if batch_id and batch_id in self.applied_batches():
             return {"skipped": True, "batch_id": batch_id}
         entry = self.current_entry()
         self._check_evolution(entry, df, evolve_schema)
         self._check_partition_spec(entry, partition_by)
-        if entry is not None and entry.get("mor") and _SEQ not in df.columns:
-            raise ValueError(
-                f"{self.dir}: plain append to a merge-on-read table "
-                "(rows lack the _seq column) — use merge_on_read()"
-            )
-        # a MOR table's resolution spec survives appends: carry it into
-        # the new entry atomically (never a follow-up commit — a crash
-        # between two commits would strand an applied batch without mor)
-        if mor is None and entry is not None and entry.get("mor"):
-            mor = entry["mor"]
         if partition_by and (entry is None
                              or entry.get("partition_dirs") is not None):
-            # n_keys picks the write's fan-out: a single-key batch (one
-            # graph's streaming micro-batch) writes from its own
-            # partitions instead of funnelling through WRITE_SALT
-            # tasks; the distinct-keys probe is one tiny job against a
-            # batch-sized frame
+            # n_keys picks the write's fan-out: a single-key batch
+            # writes from its own partitions instead of funnelling
+            # through WRITE_SALT tasks; the distinct-keys probe is one
+            # tiny job against a batch-sized frame
             return self._write_snapshot(
-                df, "append", batch_id, counters, partition_by, mor=mor,
+                df, "append", batch_id, counters, partition_by,
                 n_keys=len(self._keys_of(df, partition_by)) or None,
                 entry=entry)
         if entry is not None:
             df = self.read(df.sparkSession).unionByName(
                 df, allowMissingColumns=True)
         return self._write_snapshot(df, "append", batch_id, counters,
-                                    partition_by, mor=mor)
+                                    partition_by)
 
     def merge_into(
         self,
@@ -671,11 +554,6 @@ class LakeTable:
         entry = self.current_entry()
         self._check_evolution(entry, updates, evolve_schema)
         self._check_partition_spec(entry, partition_by)
-        if entry.get("mor"):
-            raise ValueError(
-                f"{self.dir}: copy-on-write merge on a merge-on-read "
-                "table — compact() it first or use merge_on_read()"
-            )
         spark = updates.sparkSession
         old_dirs = entry.get("partition_dirs")
         if not (partition_by and old_dirs is not None):
@@ -739,137 +617,11 @@ class LakeTable:
                 df, "overwrite_partitions", batch_id, counters, partition_by,
                 n_keys=len(touched_keys) if touched_keys else None,
             )
-        if entry.get("mor"):
-            raise ValueError(
-                f"{self.dir}: overwrite_partitions on a merge-on-read table"
-            )
         touched = set(touched_keys) if touched_keys is not None else \
             self._keys_of(df, partition_by)
         return self._write_snapshot(
             df, "overwrite_partitions", batch_id, counters, partition_by,
             n_keys=len(touched), entry=entry, replaced=touched)
-
-    def merge_on_read(
-        self,
-        updates: DataFrame,
-        on: list[str],
-        seq: int,
-        policy: str = "last",
-        batch_id: Optional[str] = None,
-        tombstone_keys: Optional[DataFrame] = None,
-        partition_by: Optional[list[str]] = None,
-        counters: Optional[dict] = None,
-        evolve_schema: bool = False,
-    ) -> dict:
-        """Iceberg-v2-style MERGE-ON-READ: the commit APPENDS the batch
-        (pure file add, current snapshot never read — O(batch) I/O no
-        matter how the keys hash across partitions, where copy-on-write
-        bucketing degenerates to O(table) once a batch touches every
-        bucket); readers resolve each key to its winning sequence.
-
-        - ``policy="last"``  — newest ``seq`` wins per key (UPDATE
-          semantics; node/extraction tables).
-        - ``policy="first"`` — oldest ``seq`` wins (ON CREATE semantics;
-          edge tables: later writes never overwrite properties).
-        - ``tombstone_keys`` — keys whose new version has ZERO rows
-          (a re-crawl that lost all its triples): one marker row per
-          key is appended; resolution drops the key entirely.
-
-        Read amplification grows with appended batches — call
-        :func:`compact` periodically (streaming: every N batches).
-        """
-        if batch_id and batch_id in self.applied_batches():
-            return {"skipped": True, "batch_id": batch_id}
-        if not partition_by:
-            # the unpartitioned append path rewrites via a RESOLVED read
-            # (no _seq/_tomb) — MOR requires the partitioned file-add
-            # layout to stay O(batch)
-            raise ValueError(
-                f"{self.dir}: merge_on_read requires partition_by"
-            )
-        upd = updates.withColumn(_SEQ, F.lit(int(seq))).withColumn(
-            _TOMB, F.lit(False)
-        )
-        if tombstone_keys is not None:
-            # tombstones carry the key columns AND the partition columns
-            # (a tombstone must land in the same partition as the rows
-            # it kills, or partition-scoped reads would miss it); all
-            # other columns null
-            missing = [c for c in (partition_by or [])
-                       if c not in tombstone_keys.columns]
-            if missing:
-                # a missing partition column would become NULL,
-                # concat_ws would drop the segment, and the tombstone
-                # would land in the WRONG partition — partition-scoped
-                # reads would then resolve the dead rows as live while
-                # full reads kill them
-                raise ValueError(
-                    f"{self.dir}: tombstone_keys must carry every "
-                    f"partition column (missing {missing}) so each "
-                    "tombstone lands in the partition it kills")
-            keep = list(on) + [
-                c for c in (partition_by or [])
-                if c in tombstone_keys.columns and c not in on
-            ]
-            tombs = tombstone_keys.select(*keep).distinct()
-            for c in updates.columns:
-                if c not in keep:
-                    tombs = tombs.withColumn(
-                        c, F.lit(None).cast(updates.schema[c].dataType)
-                    )
-            tombs = tombs.select(*updates.columns).withColumn(
-                _SEQ, F.lit(int(seq))
-            ).withColumn(_TOMB, F.lit(True))
-            upd = upd.unionByName(tombs)
-        entry = self.current_entry()
-        if entry is not None and not entry.get("mor"):
-            raise ValueError(
-                f"{self.dir}: merge_on_read on a copy-on-write table; "
-                "compact()/overwrite() it first or use merge_into"
-            )
-        if entry is not None and entry.get("mor") != {"key": on, "policy": policy}:
-            raise ValueError(
-                f"{self.dir}: merge_on_read spec {on}/{policy} conflicts "
-                f"with the table's {entry['mor']} — resolution is a table "
-                "property, not a per-batch choice"
-            )
-        # the mor spec rides the append's ONE atomic commit — a crash can
-        # leave either no trace of the batch (clean replay) or a complete
-        # entry (replay skipped), never an applied-but-unresolvable state
-        out = self.append(upd, batch_id=batch_id, counters=counters,
-                          partition_by=partition_by,
-                          mor={"key": on, "policy": policy},
-                          evolve_schema=evolve_schema)
-        if not out.get("skipped"):
-            out["mor"] = {"key": on, "policy": policy}
-        return out
-
-    def compact(self, spark: SparkSession, batch_id: Optional[str] = None) -> dict:
-        """Materialize the MOR resolution (and/or fold multi-dir
-        partitions) into a fresh single-dir-per-partition snapshot.
-        Keeps the mor spec with the accumulated history reset to one
-        base sequence, so subsequent merge_on_read batches apply on a
-        compacted base — Iceberg's rewrite_data_files."""
-        if batch_id and batch_id in self.applied_batches():
-            return {"skipped": True, "batch_id": batch_id}
-        entry = self.current_entry()
-        if entry is None:
-            raise FileNotFoundError(f"LakeTable {self.dir} has no snapshot")
-        mor = entry.get("mor")
-        resolved = self.read(spark)
-        if mor:
-            resolved = resolved.withColumn(_SEQ, F.lit(0)).withColumn(
-                _TOMB, F.lit(False)
-            )
-        partition_by = None
-        if entry.get("partition_dirs") is not None:
-            partition_by = entry.get("partition_spec")  # recorded at write
-        out = self._write_snapshot(resolved, "compact", batch_id,
-                                   partition_by=partition_by,
-                                   mor=mor if mor else None)
-        if mor:
-            out["mor"] = mor
-        return out
 
     def rollback(self, snapshot: str) -> dict:
         """Iceberg ``rollback_to_snapshot``: re-commit an older lineage
@@ -880,8 +632,7 @@ class LakeTable:
         return self._commit_entry(
             f"rollback:{snapshot}", None, None, snapshot, target["rows"],
             dirs, target.get("partition_rows"), carried=len(dirs or {}),
-            partition_by=target.get("partition_spec"), mor=target.get("mor"),
-            schema=target["schema"])
+            partition_by=target.get("partition_spec"), schema=target["schema"])
 
     def _prune_delete_keys(self, spark: SparkSession, condition: str,
                            entry: dict) -> Optional[set[str]]:
@@ -943,13 +694,13 @@ class LakeTable:
         partition columns alone, only partitions that can contain
         matching rows are read and rewritten — the rest are carried by
         manifest reference, byte-untouched (Iceberg metadata-delete
-        behavior). Predicates touching data columns, MOR tables, and
-        unpartitioned tables take the full-rewrite path."""
+        behavior). Predicates touching data columns and unpartitioned
+        tables take the full-rewrite path."""
         if batch_id and batch_id in self.applied_batches():
             return {"skipped": True, "batch_id": batch_id}
         entry = self.current_entry()
         touched = None
-        if entry is not None and not entry.get("mor"):
+        if entry is not None:
             touched = self._prune_delete_keys(spark, condition, entry)
         if touched is not None:
             spec = entry["partition_spec"]
@@ -973,14 +724,6 @@ class LakeTable:
                 kept, partition_by=spec, touched_keys=sorted(touched),
                 batch_id=batch_id,
             )
-        if entry is not None and entry.get("mor"):
-            # rewriting RESOLVED rows would silently drop the mor spec
-            # and the _seq/_tomb bookkeeping — the next merge_on_read
-            # would then refuse the table as copy-on-write
-            raise ValueError(
-                f"{self.dir}: delete_where on a merge-on-read table — "
-                "append tombstones via merge_on_read(), or compact() "
-                "first")
         current = self.read(spark)
         kept = current.filter(~F.coalesce(F.expr(condition), F.lit(False)))
         # the full-rewrite fallback must keep the table's partition

@@ -5,10 +5,12 @@ The reference's "自动化...更新" (automated update) semantics are batch
 re-runs with per-row Neo4j MERGE (/root/reference/backend/kgapi/
 kg_writer.py:24,56 — MERGE = idempotent re-apply). The scale-correct
 equivalent is a micro-batch stream: new page files land in a directory
-(the Iceberg-commit stand-in), each micro-batch runs the SAME
-extraction + materialization operators as the batch pipeline, and
-``foreachBatch`` MERGEs into the LakeTables with the batch id recorded
-in lineage — giving exactly-once table state on top of Spark's
+(the Iceberg-commit stand-in), and ``foreachBatch`` hands each
+micro-batch to ``run_pipeline`` as one update batch of the graph. A
+streamed graph is therefore built exactly as a batch-built one:
+extraction, linking and canonical ids, the MERGE..SET nodes and ON
+CREATE edges, the re-derived dropped relations, a vacuum per run, and
+resume by batch id — exactly-once table state on top of Spark's
 at-least-once micro-batch replay.
 
 Also provides the classic streaming-analytics surface over the
@@ -17,12 +19,8 @@ Also provides the classic streaming-analytics surface over the
 
 Scale notes:
 - ``maxFilesPerTrigger`` bounds micro-batch size so extraction cost per
-  trigger is predictable;
-- the MERGE keys and partition specs match the batch path (every
-  table keyed by graph), so a page re-crawled in a later batch updates
-  its nodes (when_matched="update") but preserves first-seen edge
-  properties (when_matched="ignore") — identical semantics to the
-  reference's ON CREATE SET;
+  trigger is predictable; the commits are copy-on-write, so a
+  micro-batch costs O(graph) like any update batch;
 - checkpointLocation + LakeTable batch ids make crash/replay safe from
   both ends (source offsets AND sink idempotence).
 """
@@ -51,31 +49,16 @@ def start_kg_ingest(
     checkpoint_dir: str,
     user_id: str = "user_001",
     graph_id: str = "graph_stream",
-    compact_every: int = 16,
 ):
-    """pages stream -> extraction -> MERGE INTO nodes/edges per batch.
+    """pages stream -> one ``run_pipeline`` update batch per micro-batch.
 
-    Returns the StreamingQuery. Each micro-batch reuses the batch
-    operators; LakeTable batch ids (``stream/{graph_id}/{batch_id}``)
-    de-duplicate replayed batches after a crash.
-
-    Commits are MERGE-ON-READ (Iceberg-v2 style): every micro-batch is
-    a pure O(batch) file APPEND — the accumulated tables are never read
-    or rewritten per trigger (url keys hash across every partition
-    bucket, so copy-on-write merges degenerate to O(table) as soon as a
-    batch exceeds ~bucket-count urls). extracted and triples have the
-    batch path's layout: partitioned by (graph_id, url_bucket), keyed
-    by (graph_id, url), so a streamed graph's rows never mix with
-    another graph's. Readers resolve each key to its winning write:
-    extracted/triples last-writer-wins (a re-crawl replaces its rows;
-    a re-crawl with ZERO triples tombstones them),
-    NODE rows last-writer-wins per (graph_id, id) — an entity absent
-    from a re-crawl persists, exactly the reference's MERGE semantics
-    (kg_writer.py:24 — MERGE updates, never deletes) — and edges
-    first-writer-wins (reference ON CREATE SET). Every
-    ``compact_every`` batches the MOR history folds into a fresh base
-    snapshot (and superseded snapshots are vacuumed) so read
-    amplification and disk stay bounded.
+    Returns the StreamingQuery. Each non-empty micro-batch keeps the
+    newest crawl per url and calls ``run_pipeline(..., batch_suffix=
+    "stream-<fingerprint>")``, so its batch ids are
+    ``{graph_id}@stream-<fingerprint>/<stage>``. Commits are
+    copy-on-write and apply in stream order, so a url re-crawled in a
+    later micro-batch replaces its rows, and a replayed micro-batch
+    skips every stage by batch id.
 
     Batch identity is a CONTENT fingerprint (order-insensitive xxhash64
     over the batch's (url, warc_ts, text, html) rows — a re-crawl with
@@ -85,28 +68,19 @@ def start_kg_ingest(
     the warehouse's already-applied batches — every early micro-batch
     of NEW data silently skipped as a replay (data loss). With content
     ids, a replay of the same drop skips under ANY checkpoint (the
-    restart-idempotence contract), while new data always applies. One
-    caveat remains documented: after checkpoint loss the epoch-derived
-    MERGE sequence restarts too, so a url RE-crawled across the loss
-    can lose last-writer resolution to its pre-loss row — continue a
-    lost stream into a compacted warehouse or a fresh graph_id if
-    re-crawl ordering matters.
+    restart-idempotence contract), while new data always applies.
     """
-    from ..operators.extraction import extract, triples_table
-    from ..operators.graph_build import materialize_graph
-    from ..pipeline import with_graph_bucket
+    from ..pipeline import run_pipeline
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         # one trigger can deliver the same url twice (two file drops in
-        # one batch): keep the newest crawl so downstream merges stay
-        # key-unique and node/triple tables never hold duplicate rows.
-        # Dedup BEFORE the content fingerprint: xor over a multiset
-        # self-cancels duplicate rows, so {A, A, B} would collide with
-        # an already-applied {B} batch and rows A would be skipped as
-        # a replay — silent data loss (r5 review finding). Over the
+        # one batch): keep the newest crawl, as run_pipeline's input
+        # must be url-unique. Dedup BEFORE the content fingerprint: xor
+        # over a multiset self-cancels duplicate rows, so {A, A, B}
+        # would collide with an already-applied {B} batch and rows A
+        # would be skipped as a replay — silent data loss. Over the
         # url-unique frame the xor fold is duplication-free.
         w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
         batch_df = (
@@ -116,46 +90,9 @@ def start_kg_ingest(
         sig = batch_df.agg(
             F.expr("bit_xor(xxhash64(url, warc_ts, text, html))").alias("s")
         ).first()["s"]
-        bid = f"stream/{graph_id}/{sig & 0xFFFFFFFFFFFFFFFF:016x}"
-        # the micro-batch's own extraction IS the commit input — never
-        # re-read the accumulated extracted table per trigger (that scan
-        # is O(table), the opposite of incremental). persist() because
-        # three tables consume it.
-        extracted = with_graph_bucket(extract(batch_df), graph_id).persist()
-        warehouse.extracted.merge_on_read(
-            extracted, on=["graph_id", "url"], seq=batch_id, policy="last",
-            batch_id=f"{bid}/extracted",
-            partition_by=["graph_id", "url_bucket"],
-        )
-        trip = with_graph_bucket(triples_table(extracted), graph_id)
-        # tombstone keys = the batch's full url set: a page whose
-        # re-crawl now yields ZERO triples still clears its stale rows
-        batch_keys = with_graph_bucket(extracted.select("url"), graph_id)
-        warehouse.triples.merge_on_read(
-            trip, on=["graph_id", "url"], seq=batch_id, policy="last",
-            batch_id=f"{bid}/triples", tombstone_keys=batch_keys,
-            partition_by=["graph_id", "url_bucket"],
-        )
-        materialize_graph(
-            extracted, warehouse.nodes, warehouse.edges, warehouse.dropped,
-            graph_id=graph_id, user_id=user_id, batch_id=bid,
-            mor_seq=batch_id,
-        )
-        extracted.unpersist()
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # dropped included: its partitioned append adds one directory
-            # per micro-batch; plain compact folds multi-dir partitions
-            # even without a MOR spec (unbounded small-file growth
-            # otherwise)
-            for t in (warehouse.extracted, warehouse.triples,
-                      warehouse.nodes, warehouse.edges, warehouse.dropped):
-                if t.exists():
-                    t.compact(spark, batch_id=f"{bid}/compact/{t.dir}")
-                    # reclaim superseded snapshots right away: a
-                    # long-running stream otherwise keeps one full table
-                    # copy per compact cycle and an O(batches) manifest
-                    # that every commit reparses
-                    t.vacuum(keep_last=2)
+        run_pipeline(batch_df.sparkSession, batch_df, warehouse,
+                     graph_id=graph_id, user_id=user_id,
+                     batch_suffix=f"stream-{sig & 0xFFFFFFFFFFFFFFFF:016x}")
 
     return (
         pages_stream.writeStream

@@ -209,69 +209,6 @@ def test_vacuum_reclaims_donor_after_last_reference_drops(spark, tbl):
     assert tbl.read(spark).count() == 6
 
 
-def test_merge_on_read_last_and_first_policies(spark, tbl):
-    """MOR semantics: 'last' = update (newest seq wins), tombstones kill
-    keys; commits never read the current snapshot (op = append)."""
-    b0 = spark.createDataFrame([("u1", "g", 0, "a"), ("u2", "g", 0, "b")],
-                               "url string, g string, b int, v string")
-    tbl.merge_on_read(b0, on=["url"], seq=0, partition_by=["g"])
-    b1 = spark.createDataFrame([("u1", "g", 0, "A")],
-                               "url string, g string, b int, v string")
-    dead = spark.createDataFrame([("u2", "g")], "url string, g string")
-    tbl.merge_on_read(b1, on=["url"], seq=1, tombstone_keys=dead,
-                      partition_by=["g"])
-    got = sorted(tuple(r) for r in tbl.read(spark).collect())
-    # u1 replaced by seq 1, u2 tombstoned
-    assert got == [("u1", "g", 0, "A")]
-    # both commits were appends: snapshot 1's dir is still referenced
-    e = tbl.current_entry()
-    assert e["op"] == "append"
-    assert any(p.startswith("snap-000001/") for p in e["partition_dirs"]["g"])
-
-
-def test_merge_on_read_first_policy_on_create(spark, tbl):
-    a = spark.createDataFrame([(1, "g", "orig")], "k int, g string, v string")
-    b = spark.createDataFrame([(1, "g", "clobber"), (2, "g", "new")],
-                              "k int, g string, v string")
-    tbl.merge_on_read(a, on=["k"], seq=0, policy="first", partition_by=["g"])
-    tbl.merge_on_read(b, on=["k"], seq=1, policy="first", partition_by=["g"])
-    got = sorted(tuple(r) for r in tbl.read(spark).collect())
-    # k=1 keeps its FIRST-seen value (ON CREATE), k=2 inserts
-    assert got == [(1, "g", "orig"), (2, "g", "new")]
-
-
-def test_compact_folds_mor_history(spark, tbl):
-    for s in range(4):
-        df = spark.createDataFrame([(1, "g", f"v{s}"), (10 + s, "g", "x")],
-                                   "k int, g string, v string")
-        tbl.merge_on_read(df, on=["k"], seq=s, partition_by=["g"])
-    before = sorted(tuple(r) for r in tbl.read(spark).collect())
-    assert (1, "g", "v3") in before and len(before) == 5
-    n_dirs_before = len(tbl.current_entry()["partition_dirs"]["g"])
-    assert n_dirs_before == 4  # one appended dir per batch
-    tbl.compact(spark)
-    e = tbl.current_entry()
-    assert len(e["partition_dirs"]["g"]) == 1  # folded
-    assert e["mor"]  # still a MOR table
-    assert sorted(tuple(r) for r in tbl.read(spark).collect()) == before
-    # and further MOR batches apply on the compacted base
-    tbl.merge_on_read(
-        spark.createDataFrame([(1, "g", "v9")], "k int, g string, v string"),
-        on=["k"], seq=9, partition_by=["g"])
-    assert (1, "g", "v9") in {tuple(r) for r in tbl.read(spark).collect()}
-
-
-def test_cow_and_mor_modes_do_not_mix(spark, tbl):
-    import pytest as _pytest
-
-    df = spark.createDataFrame([(1, "g", "a")], "k int, g string, v string")
-    tbl.merge_on_read(df, on=["k"], seq=0, partition_by=["g"])
-    with _pytest.raises(ValueError):
-        tbl.merge_into(df, on=["k"], partition_by=["g"])
-    with _pytest.raises(ValueError):
-        tbl.append(df, partition_by=["g"])
-
-
 def test_rollback_to_snapshot(spark, tbl):
     """Iceberg rollback: pure-metadata restore of an older snapshot;
     later writes keep allocating fresh snapshot ids (no dir collision)."""
@@ -355,41 +292,15 @@ def test_every_lineage_entry_pins_schema(spark, tmp_path):
     u.overwrite(df)
     u.merge_into(df, on=["k"])                           # unpartitioned
     u.append(df)
-    m = LakeTable(str(tmp_path), "m")
-    m.merge_on_read(df, on=["k"], seq=0, partition_by=["g"])
-    m.compact(spark)
-    entries = p.history() + u.history() + m.history()
+    entries = p.history() + u.history()
     assert {e["op"].split(":")[0] for e in entries} == {
         "merge", "append", "overwrite_partitions", "delete", "rollback",
-        "overwrite", "compact"}
-    assert len(entries) == 13
+        "overwrite"}
+    assert len(entries) == 11
     for e in entries:
         names = StructType.fromJson(json.loads(e["schema"])).fieldNames()
         assert names[:3] == ["k", "g", "v"], (e["op"], names)
     assert p.current_entry()["carried_partitions"] == 2   # rollback
-
-
-def test_merge_on_read_commit_is_atomic(spark, tbl):
-    """The MOR resolution spec must land in the SAME manifest commit as
-    the lineage entry: a crash between two commits would leave the
-    batch_id applied but the entry unresolvable (raw _seq/_tomb rows
-    surfacing to readers)."""
-    commits = []
-    orig = tbl._commit
-    tbl._commit = lambda m: (commits.append(1), orig(m))[1]
-    df = spark.createDataFrame([(1, "g", "a")], "k int, g string, v string")
-    tbl.merge_on_read(df, on=["k"], seq=0, partition_by=["g"])
-    assert len(commits) == 1
-    assert tbl.current_entry()["mor"] == {"key": ["k"], "policy": "last"}
-    # same guarantee on the follow-up append path and on compact
-    commits.clear()
-    tbl.merge_on_read(
-        spark.createDataFrame([(2, "g", "b")], "k int, g string, v string"),
-        on=["k"], seq=1, partition_by=["g"])
-    assert len(commits) == 1 and tbl.current_entry()["mor"]
-    commits.clear()
-    tbl.compact(spark)
-    assert len(commits) == 1 and tbl.current_entry()["mor"]
 
 
 def test_delete_where_prunes_partitions(spark, tbl):
@@ -448,25 +359,22 @@ def test_vacuum_folds_lineage(spark, tbl):
     vacuum; folded batch ids still dedupe replays (idempotent resume)."""
     for s in range(8):
         df = spark.createDataFrame([(s, "g", "v")], "k int, g string, v string")
-        tbl.merge_on_read(df, on=["k"], seq=s, partition_by=["g"],
-                          batch_id=f"b{s}")
-    tbl.compact(spark)
+        tbl.merge_into(df, on=["k"], partition_by=["g"], batch_id=f"b{s}")
     tbl.vacuum(keep_last=2)
     assert len(tbl.history()) <= 2
     # every folded batch id still recognized -> replay is a no-op
     for s in range(8):
         assert f"b{s}" in tbl.applied_batches()
-        r = tbl.merge_on_read(
+        r = tbl.merge_into(
             spark.createDataFrame([(99, "g", "X")], "k int, g string, v string"),
-            on=["k"], seq=s, partition_by=["g"], batch_id=f"b{s}")
+            on=["k"], partition_by=["g"], batch_id=f"b{s}")
         assert r.get("skipped")
     assert sorted(r[0] for r in tbl.read(spark).collect()) == list(range(8))
 
 
 def test_time_travel_read(spark, tbl):
     """read(as_of=snapshot) reads a historical version byte-for-byte;
-    unknown / vacuumed snapshots raise; MOR snapshots resolve the same
-    way a current read would."""
+    unknown / vacuumed snapshots raise."""
     tbl.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
     s1 = tbl.current_snapshot()
     tbl.merge_into(
@@ -484,83 +392,6 @@ def test_time_travel_read(spark, tbl):
     assert rows(tbl.read(spark)) == rows(tbl.read(spark, as_of=s2))
     with pytest.raises(ValueError):
         tbl.read(spark, as_of="snap-does-not-exist")
-
-
-def test_time_travel_read_mor(spark, tmp_path):
-    """A historical merge-on-read snapshot resolves winners/tombstones
-    at read time, exactly as it did when current."""
-    t = LakeTable(str(tmp_path), "mor_t")
-    t.merge_on_read(
-        spark.createDataFrame([(1, "g", "a"), (2, "g", "b")],
-                              "k int, g string, v string"),
-        on=["k"], seq=0, partition_by=["g"])
-    t.merge_on_read(
-        spark.createDataFrame([(2, "g", "B"), (3, "g", "c")],
-                              "k int, g string, v string"),
-        on=["k"], seq=1, partition_by=["g"])
-    s_mor = t.current_snapshot()
-    t.merge_on_read(
-        spark.createDataFrame([(4, "g", "d")], "k int, g string, v string"),
-        on=["k"], seq=2, partition_by=["g"])
-    assert rows(t.read(spark, as_of=s_mor)) == [
-        (1, "g", "a"), (2, "g", "B"), (3, "g", "c")]
-
-
-def test_read_changes_incremental_appends(spark, tbl):
-    """Incremental scan returns exactly the rows each append window
-    added (pure manifest diff), labeled _change_type='insert'; an
-    empty window yields an empty frame with the table schema."""
-    s1 = tbl.append(
-        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
-        partition_by=["k"])["snapshot"]
-    s2 = tbl.append(spark.createDataFrame([(3, "c")], "k int, v string"),
-                    partition_by=["k"])["snapshot"]
-    s3 = tbl.append(spark.createDataFrame([(4, "d")], "k int, v string"),
-                    partition_by=["k"])["snapshot"]
-    assert rows(tbl.read_changes(spark, s1)) == [
-        (3, "c", "insert"), (4, "d", "insert")]
-    assert rows(tbl.read_changes(spark, s1, s2)) == [(3, "c", "insert")]
-    assert rows(tbl.read_changes(spark, s2, s3)) == [(4, "d", "insert")]
-    empty = tbl.read_changes(spark, s3, s3)
-    assert empty.count() == 0
-    assert empty.columns == ["k", "v", "_change_type"]
-
-
-def test_read_changes_mor_cdc(spark, tmp_path):
-    """On a merge-on-read table the incremental scan is a CDC feed:
-    updated keys surface as 'upsert', tombstoned keys as 'delete',
-    and the raw _seq/_tomb bookkeeping never leaks to the consumer."""
-    t = LakeTable(str(tmp_path), "mor")
-    s1 = t.merge_on_read(
-        spark.createDataFrame([(1, "a", 10), (2, "b", 10)],
-                              "k int, v string, pk int"),
-        on=["k"], seq=1, partition_by=["pk"])["snapshot"]
-    s2 = t.merge_on_read(
-        spark.createDataFrame([(2, "B", 10)], "k int, v string, pk int"),
-        on=["k"], seq=2, partition_by=["pk"],
-        tombstone_keys=spark.createDataFrame([(1, 10)], "k int, pk int"),
-    )["snapshot"]
-    got = rows(t.read_changes(spark, s1, s2))
-    assert (2, "B", 10, "upsert") in got
-    deletes = [r for r in got if r[-1] == "delete"]
-    assert len(deletes) == 1 and deletes[0][0] == 1
-    # the resolved table agrees with the changelog
-    assert rows(t.read(spark)) == [(2, "B", 10)]
-
-
-def test_read_changes_rejects_rewrites_and_vacuumed_base(spark, tbl):
-    """A window crossing a compact (or any rewrite) must raise — the
-    consumer has to re-baseline; so must a from_snapshot that vacuum
-    already folded away."""
-    s1 = tbl.append(spark.createDataFrame([(1, "a")], "k int, v string"),
-                    partition_by=["k"])["snapshot"]
-    tbl.append(spark.createDataFrame([(2, "b")], "k int, v string"),
-               partition_by=["k"])
-    tbl.compact(spark)
-    with pytest.raises(ValueError, match="compact"):
-        tbl.read_changes(spark, s1)
-    with pytest.raises(ValueError, match="no readable lineage"):
-        tbl.read_changes(spark, "snap-999999")
 
 
 def test_schema_evolution_add_column(spark, tbl):
@@ -625,44 +456,6 @@ def test_schema_evolution_is_opt_in_and_type_safe(spark, tbl):
     assert rows(tbl.read(spark)) == [(1, "a")]
 
 
-def test_read_changes_drives_incremental_consumer(spark, tmp_path):
-    """The point of the CDC read: a downstream consumer folds each
-    window's upserts/deletes into its own state and lands on exactly
-    the full-recompute answer — incremental maintenance without ever
-    rescanning the table."""
-    t = LakeTable(str(tmp_path), "kv")
-    snaps = []
-    steps = [
-        (spark.createDataFrame([(1, "a", 0), (2, "b", 0)],
-                               "k int, v string, pk int"), None),
-        (spark.createDataFrame([(3, "c", 1)], "k int, v string, pk int"),
-         None),
-        (spark.createDataFrame([(2, "B", 0)], "k int, v string, pk int"),
-         spark.createDataFrame([(1, 0)], "k int, pk int")),
-    ]
-    for i, (upd, tomb) in enumerate(steps, start=1):
-        snaps.append(t.merge_on_read(upd, on=["k"], seq=i,
-                                     partition_by=["pk"],
-                                     tombstone_keys=tomb)["snapshot"])
-    state: dict = {}
-    prev = snaps[0]
-    # seed with the first snapshot's resolved content, then fold CDC
-    for r in t.read(spark, as_of=prev).collect():
-        state[r["k"]] = r["v"]
-    for s in snaps[1:]:
-        changes = t.read_changes(spark, prev, s).collect()
-        # within one window, apply by ascending _seq order = snapshot
-        # order here (one batch per window)
-        for r in changes:
-            if r["_change_type"] == "delete":
-                state.pop(r["k"], None)
-            else:
-                state[r["k"]] = r["v"]
-        prev = s
-    full = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert state == full == {2: "B", 3: "c"}
-
-
 def test_delete_where_fallback_keeps_partition_layout(spark, tbl):
     """A data-column DELETE that cannot prune must NOT de-partition the
     table: the rewritten snapshot keeps the recorded partition spec so
@@ -677,15 +470,31 @@ def test_delete_where_fallback_keeps_partition_layout(spark, tbl):
     assert rows(tbl.read(spark)) == [(2, "b", 1)]
 
 
-def test_delete_where_rejects_mor_table(spark, tmp_path):
-    """delete_where on a merge-on-read table must raise — a resolved
-    rewrite would silently drop the mor spec and strand the stream."""
-    t = LakeTable(str(tmp_path), "mor")
-    t.merge_on_read(
-        spark.createDataFrame([(1, "a", 0)], "k int, v string, pk int"),
-        on=["k"], seq=1, partition_by=["pk"])
+def test_merge_on_read_snapshot_is_refused(spark, tbl):
+    """A lineage entry with a ``mor`` spec (written by the removed
+    merge-on-read mode) holds unresolved rows: raw ``_seq``/``_tomb``
+    columns and superseded versions. Reads and commits must refuse it,
+    not return those rows."""
+    import json
+
+    df = spark.createDataFrame([(1, "g", "a")], "k int, g string, v string")
+    tbl.merge_into(df, on=["k"], partition_by=["g"])
+    first = tbl.current_snapshot()
+    tbl.merge_into(df, on=["k"], partition_by=["g"])
+    m = json.loads(open(tbl.manifest_path, encoding="utf-8").read())
+    for e in m["lineage"]:
+        e["mor"] = {"key": ["k"], "policy": "last"}
+    tbl._commit(m)
     with pytest.raises(ValueError, match="merge-on-read"):
-        t.delete_where(spark, "v = 'a'")
+        tbl.read(spark)
+    with pytest.raises(ValueError, match="merge-on-read"):
+        tbl.read(spark, as_of=first)
+    with pytest.raises(ValueError, match="merge-on-read"):
+        tbl.read_partitions(spark, ["g"])
+    with pytest.raises(ValueError, match="merge-on-read"):
+        tbl.merge_into(df, on=["k"], partition_by=["g"])
+    # the refused merge committed nothing
+    assert len(tbl.history()) == 2
 
 
 def test_partition_spec_mismatch_is_loud(spark, tbl):
@@ -720,45 +529,6 @@ def test_delete_where_null_tolerant_predicate_not_pruned(spark, tbl):
     tbl.delete_where(spark, "v IS NOT NULL")
     rows = tbl.read(spark).collect()
     assert len(rows) == 1 and rows[0]["v"] is None
-
-
-def test_mor_tombstone_kills_first_policy_rows(spark, tbl):
-    """Under policy='first' (ON CREATE tables) a later tombstone must
-    still delete the key — the old resolution picked the min-seq
-    winner before the tombstone filter, so deletes silently no-oped
-    while read_changes emitted their CDC rows (r5 review finding)."""
-    df = spark.createDataFrame([("g1", "k1", "v0")],
-                               "g string, k string, v string")
-    tbl.merge_on_read(df, on=["g", "k"], seq=0, policy="first",
-                      partition_by=["g"])
-    dead = spark.createDataFrame([("g1", "k1")], "g string, k string")
-    empty = df.limit(0)
-    tbl.merge_on_read(empty, on=["g", "k"], seq=1, policy="first",
-                      tombstone_keys=dead, partition_by=["g"])
-    assert tbl.read(spark).count() == 0
-    # a write AFTER the tombstone re-creates the key (first-wins
-    # among post-tombstone rows)
-    df2 = spark.createDataFrame([("g1", "k1", "v2")],
-                                "g string, k string, v string")
-    tbl.merge_on_read(df2, on=["g", "k"], seq=2, policy="first",
-                      partition_by=["g"])
-    rows = tbl.read(spark).collect()
-    assert len(rows) == 1 and rows[0]["v"] == "v2"
-
-
-def test_mor_tombstone_missing_partition_column_raises(spark, tmp_path):
-    from knowledge_graph_spark.sources.lake import LakeTable
-
-    t = LakeTable(str(tmp_path), "tt")
-    df = spark.createDataFrame([("g1", 3, "u1", "v")],
-                               "g string, b int, u string, v string")
-    t.merge_on_read(df, on=["g", "u"], seq=0, policy="last",
-                    partition_by=["g", "b"])
-    dead = spark.createDataFrame([("g1", "u1")], "g string, u string")
-    with pytest.raises(ValueError):
-        t.merge_on_read(df.limit(0), on=["g", "u"], seq=1,
-                        policy="last", tombstone_keys=dead,
-                        partition_by=["g", "b"])
 
 
 def test_empty_string_partition_value_raises(spark, tbl):

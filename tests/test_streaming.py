@@ -170,39 +170,46 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert 13 not in rows
 
 
-def test_stream_compaction_preserves_state(spark, tmp_path):
-    """With compact_every=1 the ingest compacts after every eligible
-    batch; resolved table contents must be identical to an uncompacted
-    run, and the MOR spec must survive so later batches still apply."""
+def test_stream_equals_batch_in_every_table(spark, tmp_path):
+    """Every micro-batch is a run_pipeline update batch, so three page
+    drops and a later re-crawl drop land exactly the rows of a batch
+    build plus a batch re-crawl update, in every table: linking on, so
+    canonical ids and same_as links included."""
+    from kgbench.checks import content_hash
+
     drop_dir = str(tmp_path / "drops")
-    pages = generate_spark(spark, 30, partitions=1).cache()
-    pages.filter(F.crc32("url") % 2 == 0).write.parquet(f"{drop_dir}/a.parquet")
-    pages.filter(F.crc32("url") % 2 == 1).write.parquet(f"{drop_dir}/b.parquet")
+    pages = generate_spark(spark, 90, partitions=2).cache()
+    for i in range(3):
+        pages.filter(F.crc32("url") % 3 == i).write.parquet(
+            f"{drop_dir}/d{i}.parquet")
+    recrawl = pages.filter(F.crc32("url") % 5 == 0).withColumn(
+        "text", F.concat(F.coalesce("text", F.lit("")),
+                         F.lit("华星科技公司收购九州网络公司。")))
 
-    wh_c = KGWarehouse(str(tmp_path / "wh_c"))
-    q = start_kg_ingest(
-        read_pages_stream(spark, drop_dir + "/*", max_files_per_trigger=1),
-        wh_c, str(tmp_path / "ck1"), graph_id="gs", compact_every=1,
-    )
-    q.awaitTermination(300)
+    wh_stream = KGWarehouse(str(tmp_path / "wh_stream"))
 
-    wh_u = KGWarehouse(str(tmp_path / "wh_u"))
-    q = start_kg_ingest(
-        read_pages_stream(spark, drop_dir + "/*", max_files_per_trigger=1),
-        wh_u, str(tmp_path / "ck2"), graph_id="gs", compact_every=0,
-    )
-    q.awaitTermination(300)
+    def drain():
+        q = start_kg_ingest(
+            read_pages_stream(spark, drop_dir + "/*", max_files_per_trigger=1),
+            wh_stream, str(tmp_path / "ckpt"), graph_id="gs")
+        q.awaitTermination(300)
 
-    def snap(wh):
-        return (
-            sorted((r["url"], r["subj"], r["pred"], r["obj"])
-                   for r in wh.triples.read(spark).collect()),
-            wh.nodes.read(spark).count(),
-            wh.edges.read(spark).count(),
-        )
+    drain()
+    recrawl.write.parquet(f"{drop_dir}/recrawl.parquet")
+    drain()
 
-    assert snap(wh_c) == snap(wh_u)
-    assert any(e["op"] == "compact" for e in wh_c.triples.history())
+    wh_batch = KGWarehouse(str(tmp_path / "wh_batch"))
+    run_pipeline(spark, pages, wh_batch, graph_id="gs")
+    run_pipeline(spark, recrawl, wh_batch, graph_id="gs", batch_suffix="r1")
+
+    for name in ("extracted", "triples", "nodes", "edges", "dropped",
+                 "same_as"):
+        got = content_hash(getattr(wh_stream, name).read(spark))
+        want = content_hash(getattr(wh_batch, name).read(spark))
+        assert got == want, name
+        assert got[0] > 0, name
+    nodes = wh_stream.nodes.read(spark)
+    assert nodes.filter(F.col("canonical_id") != F.col("name")).count() > 0
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):

@@ -1,9 +1,10 @@
 # -*- coding: utf-8 -*-
 """Month-scale manifest-folding evidence (VERDICT r3 item #6): run
-100+ MOR micro-batches through the streaming ingest with periodic
-compaction + vacuum, and show that
+100+ micro-batches through the streaming ingest (each one a
+``run_pipeline`` update batch, which vacuums every table with
+``keep_last=2``), and show that
 
-- lineage length stays O(compact_every + keep_last), NOT O(batches);
+- lineage length stays O(keep_last), NOT O(batches);
 - ``applied_batches()`` (the per-commit idempotence probe every merge
   pays) stays flat-cost as total batches grow;
 - the manifest file itself stays bounded (the folded batch-id archive
@@ -68,7 +69,7 @@ def main():
         t0 = time.time()
         q = start_kg_ingest(
             read_pages_stream(spark, drops + "/*", max_files_per_trigger=1),
-            wh, f"{root}/ck", graph_id="gm", compact_every=16,
+            wh, f"{root}/ck", graph_id="gm",
         )
         q.awaitTermination(900)
         wall = time.time() - t0
@@ -89,11 +90,9 @@ def main():
         print(json.dumps(samples[-1]), flush=True)
 
     lineage_max = max(s["lineage_len"] for s in samples)
-    # per stream trigger the triples table sees ONE merge commit; the
-    # compact cycle adds a compact entry, vacuum folds to keep_last=2.
-    # Worst case between vacuums: compact_every merges + compact +
-    # keep_last carried entries (+ skipped-replay markers on resume).
-    bound = 16 + 2 + 4
+    # per stream trigger the triples table sees ONE commit, and the
+    # run's vacuum folds its lineage to keep_last=2 before returning
+    bound = 2
     mid = len(samples) // 2
     tail_ms = sum(s["applied_batches_ms"] for s in samples[mid:]) / (
         len(samples) - mid)

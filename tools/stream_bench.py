@@ -1,19 +1,13 @@
 # -*- coding: utf-8 -*-
-"""Incremental-ingest commit-cost evidence: merge-on-read micro-batches
-stay O(batch) as the table grows; copy-on-write update batches grow
-with the table.
+"""Streaming-ingest cost per micro-batch as the graph grows.
 
-Feeds B equal-sized page drops (disjoint url ranges) through
-
-  (a) the Structured-Streaming MOR ingest (streaming/ingest.py), and
-  (b) the batch pipeline's COW update path (one run_pipeline per drop
-      into one warehouse — each commit merges into the accumulated
-      url-bucketed tables),
-
-and prints per-batch wall seconds for both. The MOR series should be
-~flat; the COW series grows because a batch of random urls touches
-every hash bucket (coupon collector), making each merge re-read and
-rewrite the accumulated partitions.
+Feeds B equal-sized page drops (disjoint url ranges) through the
+Structured-Streaming ingest (streaming/ingest.py), one drop per
+trigger, into one graph, and prints each micro-batch's wall seconds.
+Every micro-batch is a ``run_pipeline`` update batch, so the series
+grows with the graph: each batch re-links the graph's whole vocabulary
+and rewrites the url buckets its pages hash into (with random urls,
+every bucket).
 
 Usage: python tools/stream_bench.py [batches] [pages_per_batch]
 """
@@ -24,7 +18,6 @@ import json
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,7 +28,7 @@ def main():
 
     from pyspark.sql import functions as F
 
-    from knowledge_graph_spark.pipeline import KGWarehouse, run_pipeline
+    from knowledge_graph_spark.pipeline import KGWarehouse
     from knowledge_graph_spark.session import get_spark
     from knowledge_graph_spark.sources.pages import generate_spark
     from knowledge_graph_spark.streaming.ingest import (
@@ -45,7 +38,7 @@ def main():
     spark = get_spark(app="stream-bench")
     root = tempfile.mkdtemp(prefix="stream_bench_")
 
-    # disjoint url ranges per drop -> the table grows every batch.
+    # disjoint url ranges per drop -> the graph grows every batch.
     # urls embed the page index (articles/{idx:08d}.html), so each
     # drop is an index-range filter over the deterministic generator.
     drops = f"{root}/drops"
@@ -56,41 +49,22 @@ def main():
         all_pages.filter((idx >= lo) & (idx < hi)).coalesce(1) \
             .write.mode("overwrite").parquet(f"{drops}/b{b:03d}.parquet")
 
-    # ---- (a) merge-on-read streaming ingest --------------------------
-    wh = KGWarehouse(f"{root}/wh_mor")
+    wh = KGWarehouse(f"{root}/wh")
     q = start_kg_ingest(
         read_pages_stream(spark, drops + "/*", max_files_per_trigger=1),
-        wh, f"{root}/ck", graph_id="gs", compact_every=0,
+        wh, f"{root}/ck", graph_id="gs",
     )
-    q.awaitTermination(600)
-    mor_secs = [
+    q.awaitTermination(1800)
+    secs = [
         round(p["batchDuration"] / 1000.0, 2)
         for p in q.recentProgress if p["numInputRows"] > 0
     ]
-
-    # ---- (b) copy-on-write batch updates -----------------------------
-    wh2 = KGWarehouse(f"{root}/wh_cow")
-    cow_secs = []
-    for b in range(n_batches):
-        pages = spark.read.parquet(f"{drops}/b{b:03d}.parquet")
-        t0 = time.time()
-        run_pipeline(spark, pages, wh2, graph_id="gcow", link_entities=False,
-                     batch_suffix=f"b{b}")
-        cow_secs.append(round(time.time() - t0, 2))
-
-    out = {
+    print(json.dumps({
         "batches": n_batches,
         "pages_per_batch": per_batch,
-        "mor_stream_batch_secs": mor_secs,
-        "cow_update_batch_secs": cow_secs,
-        "mor_first_vs_last": (
-            round(mor_secs[-1] / mor_secs[0], 2) if mor_secs else None
-        ),
-        "cow_first_vs_last": (
-            round(cow_secs[-1] / cow_secs[0], 2) if cow_secs else None
-        ),
-    }
-    print(json.dumps(out))
+        "stream_batch_secs": secs,
+        "first_vs_last": round(secs[-1] / secs[0], 2) if secs else None,
+    }))
     spark.stop()
 
 
